@@ -20,10 +20,12 @@ sides trivially identical.
 
 Scale shape: per iteration, one equi-join of the rank vector with the
 (large, cached) out-degree-annotated edge table plus one map-side-combine
-aggregate back to nodes; iteration results are persisted (partitioning-
-preserving — see the loop comment) and every cached intermediate is
-released before returning. Hot dst nodes (the web's power law) are AQE
+aggregate back to nodes. Hot dst nodes (the web's power law) are AQE
 skew-join territory; the integer semantics are unaffected by any re-plan.
+
+Every round-based operator here except HITS, k_core and k_truss runs its
+rounds through :func:`_round_loop`, whose docstring holds the caching and
+release rules they share.
 """
 
 from __future__ import annotations
@@ -58,6 +60,77 @@ def _iter_probe_end(spark, log, rnd, t0, gc0):
                 "gc_ms": _jvm_gc_ms(spark) - gc0})
 
 
+def _round_loop(start, step, rounds, finish=None, iteration_log=None):
+    """The one round loop of ``pagerank``, ``label_propagation``,
+    ``bfs_hops``, ``sssp_bounded`` and ``closeness_sample``.
+
+    ``start`` is the round-0 vector, persisted by the caller when a later
+    round reads it again; it is also round 0's frontier.  Round ``r``
+    (1-based) builds ``next_state, frontier = step(state, frontier, r)``
+    as lazy plans, persists both — the frontier first, so a state built
+    from it reads its cache — and runs exactly ONE Spark action, a count
+    of the new frontier.  An empty frontier is a fixed point and ends the
+    loop before ``rounds``; the state then stays the previous round's.
+    Steps of the form ``(v, v)`` never stop early.  At exit — bound
+    reached, empty frontier or error — the loop returns
+    ``finish(state).localCheckpoint(eager=True)`` and unpersists every
+    vector it pinned, ``start`` included, so nothing stays in the SQL
+    CacheManager after the operator returns.  ``iteration_log`` gets one
+    ``{"round", "wall_s", "gc_ms"}`` dict per round (see ``pagerank``).
+
+    Vectors are PERSISTED, not localCheckpointed: a checkpoint is an
+    opaque RDD scan whose outputPartitioning Catalyst forgets, so the next
+    round's join would re-exchange it; a cached plan keeps its hash
+    partitioning visible.
+
+    Release rule (the one-round-late persist handoff): every step reads
+    the previous state in full, so round r's count also materializes
+    state r-1, while state r may still be lazy (``dist ∪ new`` is first
+    read by round r+1).  Round r-2's state and round r-1's frontier are
+    therefore released only after round r's count, and state r-1 stays
+    pinned until the next one; this is what makes a separate count of
+    ``next_state`` unnecessary.  Each release re-plans the still-lazy
+    state r on the driver (Spark recompiles a cached plan that reads an
+    unpersisted one); that costs no Spark job.  The cached working set is
+    bounded whatever the round count: at most two materialized states
+    plus their frontiers, and for ``(v, v)`` steps two vectors (v_{r-1}
+    while v_r is counted) — a 1e9-node pagerank pins ~2x16 GB, not
+    rounds x 16 GB.
+    """
+    spark = start.sparkSession
+    pinned = [start]
+    older, state, frontier = None, start, start
+    try:
+        for r in range(1, rounds + 1):
+            t0, gc0 = _iter_probe_start(spark, iteration_log)
+            nxt, new = step(state, frontier, r)
+            pinned += [new.persist(), nxt if nxt is new else nxt.persist()]
+            empty = new.count() == 0
+            _iter_probe_end(spark, iteration_log, r - 1, t0, gc0)
+            if empty:
+                break
+            if older is not None:
+                older.unpersist()
+                frontier.unpersist()
+            older, state, frontier = state, nxt, new
+        return (finish(state) if finish else state).localCheckpoint(
+            eager=True)
+    finally:
+        # newest first: a cached plan that is not yet materialized is
+        # re-planned whenever a vector it reads is unpersisted before it
+        for df in reversed(pinned):
+            df.unpersist()
+
+
+def _symmetrize(edges: DataFrame, *extra) -> DataFrame:
+    """Both directions of every undirected ``(u, v)`` edge: ``edges``
+    plus ``edges`` with u and v swapped (a lazy union, no dedup).  The
+    ``extra`` column expressions ride along unchanged."""
+    e = edges.select("u", "v", *extra)
+    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"),
+                            *e.columns[2:]))
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 8,
@@ -84,9 +157,10 @@ def pagerank(
     random-surfer restart concentrated on a query/topic seed set, the
     retrieval-expansion and related-nodes primitive): initial mass and
     the per-round teleport base go only to the listed seed nodes
-    (``scale div n_seeds`` each, 0 elsewhere); the iteration loop, the
-    caching discipline, and the integer determinism contract are shared
-    verbatim with the uniform variant.  ``seeds`` is a small in-driver
+    (``scale div n_seeds`` each, 0 elsewhere); the iteration loop
+    (:func:`_round_loop`, one count per round) and the integer
+    determinism contract are shared verbatim with the uniform variant.
+    ``seeds`` is a small in-driver
     sequence (query-sized, not corpus-sized); seeds absent from the
     graph lose their mass like dangling nodes do.
 
@@ -133,94 +207,59 @@ def pagerank(
         .distinct()
         .persist()
     )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        out = nodes.withColumn("rank", F.lit(0).cast("long")) \
-            .localCheckpoint(eager=True)
-        e_deg.unpersist()
-        nodes.unpersist()
-        return out
-    if seed_vals is None:
-        r0 = scale // n_nodes
-        base = (r0 * (100 - damping_pct)) // 100
-        r0_col = F.lit(r0).cast("long")
-        base_col = F.lit(base).cast("long")
-    else:
-        r0_seed = scale // len(seed_vals)
-        base_seed = (r0_seed * (100 - damping_pct)) // 100
-        is_seed = F.col("node").isin(seed_vals)
-        r0_col = F.when(is_seed, F.lit(r0_seed)).otherwise(F.lit(0)) \
-            .cast("long")
-        base_col = F.when(is_seed, F.lit(base_seed)).otherwise(F.lit(0)) \
-            .cast("long")
+    try:
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return nodes.withColumn("rank", F.lit(0).cast("long")) \
+                .localCheckpoint(eager=True)
+        if seed_vals is None:
+            r0 = scale // n_nodes
+            base = (r0 * (100 - damping_pct)) // 100
+            r0_col = F.lit(r0).cast("long")
+            base_col = F.lit(base).cast("long")
+        else:
+            r0_seed = scale // len(seed_vals)
+            base_seed = (r0_seed * (100 - damping_pct)) // 100
+            is_seed = F.col("node").isin(seed_vals)
+            r0_col = F.when(is_seed, F.lit(r0_seed)).otherwise(F.lit(0)) \
+                .cast("long")
+            base_col = F.when(is_seed, F.lit(base_seed)) \
+                .otherwise(F.lit(0)).cast("long")
 
-    ranks = nodes.withColumn("rank", r0_col)
-    # Iteration results are PERSISTED, not localCheckpointed: a checkpoint
-    # is an opaque RDD scan whose outputPartitioning Catalyst forgets, so
-    # the next iteration's rank-vector join would re-exchange it by src.
-    # The cached plan keeps hashpartitioning(node) (alias-rewritten to src
-    # through the rename) visible, and with nodes and e_deg also cached
-    # partitioned, each iteration's ONLY exchange is the map-side-combined
-    # contribution aggregate. At sf0.001-0.1 AQE broadcasts the tiny rank
-    # vector and the two shapes execute identically (measured: 2 stages,
-    # 1 shuffle write per iteration either way); at 1e9-node scale the rank
-    # vector is not broadcastable and the preserved partitioning is the
-    # difference. Each iteration is materialized eagerly (count) so the
-    # PREVIOUS iteration's cache can be released immediately — the
-    # one-round-late handoff bounds pinned memory at two rank vectors
-    # regardless of iteration count (a 1e9-node run pins ~2x16 GB, not
-    # iterations x 16 GB), at the cost of one count-job per round, the
-    # standard shape for iterative graph algorithms.
-    prev = None
-    for _it in range(iterations):
-        _t0, _gc0 = _iter_probe_start(edges.sparkSession, iteration_log)
-        contrib = (
-            ranks.withColumnRenamed("node", "src")
-            .join(e_deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank div outdeg").alias("c"),
+        # The persisted rank vector keeps hashpartitioning(node) (alias-
+        # rewritten to src through the rename) visible, and with nodes and
+        # e_deg also cached partitioned, each iteration's ONLY exchange is
+        # the map-side-combined contribution aggregate. At sf0.001-0.1 AQE
+        # broadcasts the tiny rank vector and a checkpointed vector would
+        # execute identically (measured: 2 stages, 1 shuffle write per
+        # iteration either way); at 1e9-node scale the rank vector is not
+        # broadcastable and the preserved partitioning is the difference.
+        def step(ranks, _frontier, _r):
+            contrib = (
+                ranks.withColumnRenamed("node", "src")
+                .join(e_deg, "src")
+                .select(
+                    F.col("dst").alias("node"),
+                    F.expr("rank div outdeg").alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("contrib"))
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
+            nxt = nodes.join(contrib, "node", "left").select(
                 "node",
                 (
                     base_col
-                    + F.expr(
-                        "(coalesce(contrib, 0L) * {d}) div 100".format(
-                            d=damping_pct
-                        )
-                    )
+                    + F.expr("(coalesce(contrib, 0L) * {d}) div 100"
+                             .format(d=damping_pct))
                 ).alias("rank"),
             )
-            .persist()
-        )
-        try:
-            ranks.count()
-        except Exception:
-            ranks.unpersist()
-            if prev is not None:
-                prev.unpersist()
-            e_deg.unpersist()
-            nodes.unpersist()
-            raise
-        _iter_probe_end(edges.sparkSession, iteration_log, _it, _t0, _gc0)
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
-    # detach the result from the cached lineage, then release everything:
-    # nothing stays pinned in the SQL CacheManager after the operator
-    # returns (same lifecycle as duplicate_clusters' eager checkpoints)
-    out = ranks.localCheckpoint(eager=True)
-    if prev is not None:
-        prev.unpersist()
-    e_deg.unpersist()
-    nodes.unpersist()
-    return out
+            return nxt, nxt
+
+        return _round_loop(nodes.withColumn("rank", r0_col), step,
+                           iterations, iteration_log=iteration_log)
+    finally:
+        e_deg.unpersist()
+        nodes.unpersist()
 
 
 def purchase_graph(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -271,7 +310,7 @@ def hits(
     one map-side-combined aggregate, and the corpus-wide normalizer is a
     1-row aggregate broadcast back — never collected to the driver. Each
     half-round's node-sized vector is materialized with an EAGER
-    localCheckpoint (not the persist handoff pagerank uses): HITS
+    localCheckpoint (not the persist handoff of :func:`_round_loop`): HITS
     alternates join keys between half-rounds (src then dst), so there is
     no partitioning to preserve across rounds, and the hard lineage cut is
     what keeps round N's plan O(1) instead of O(N) — the normalizer's
@@ -457,8 +496,7 @@ def _enumerate_triangles(edges: DataFrame) -> DataFrame:
     # consumer — measured 6 redundant scans at gate scale. Lazy local
     # checkpoints materialize each exactly once.
     edges = edges.select("u", "v").localCheckpoint(eager=False)
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = _symmetrize(edges)
     deg = sym.groupBy("u").agg(F.count("*").alias("deg")).select(
         F.col("u").alias("node"),
         (F.col("deg").cast("long") * F.lit(1 << 32) + F.col("u"))
@@ -553,8 +591,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     for _ in range(max_rounds):
         if n_edges == 0:
             break
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        keep = (sym.groupBy("u").agg(F.count("*").alias("d"))
+        keep = (_symmetrize(e).groupBy("u").agg(F.count("*").alias("d"))
                 .filter(F.col("d") >= F.lit(int(k)))
                 .select(F.col("u").alias("n")))
         nxt = (
@@ -571,8 +608,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     else:
         raise RuntimeError(
             "k_core did not converge in {} rounds".format(max_rounds))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return sym.groupBy(F.col("u").alias("node")).agg(
+    return _symmetrize(e).groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("core_degree"))
 
 
@@ -589,52 +625,34 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     symmetrized edge table (kept persisted, hash-partitioned on the
     neighbor key so every round reuses the same layout), one map-side-
     combined (node, label) count, and one per-node top-1 window
-    (WindowGroupLimit — partial rank before the shuffle).  Iteration
-    vectors use the one-round-late persist handoff (bounded at two
-    vectors, the pagerank/bpe pattern).  Labels never leave the JVM.
+    (WindowGroupLimit — partial rank before the shuffle).  Rounds run
+    through :func:`_round_loop` with one count each.  Labels never leave
+    the JVM.
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    from pyspark.sql import Window
-
-    sym = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("v")
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("u").alias("node")).distinct()
-        .select("node", F.col("node").alias("label"))
-        .persist()
-    )
-    labels.count()
+    sym = _symmetrize(edges).repartition("v").persist()
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("label"))
-    prev = None
+
+    def step(labels, _frontier, _r):
+        cnt = (
+            sym.join(labels.withColumnRenamed("node", "v"), on="v")
+            .groupBy(F.col("u").alias("node"), "label")
+            .agg(F.count("*").alias("cnt"))
+        )
+        new = (
+            cnt.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("node", "label")
+        )
+        return new, new
+
+    start = (sym.select(F.col("u").alias("node")).distinct()
+             .select("node", F.col("node").alias("label")))
     try:
-        for _ in range(rounds):
-            nb = sym.join(labels.withColumnRenamed("node", "v"), on="v")
-            cnt = (
-                nb.groupBy(F.col("u").alias("node"), "label")
-                .agg(F.count("*").alias("cnt"))
-            )
-            new = (
-                cnt.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("node", "label")
-                .persist()
-            )
-            new.count()
-            if prev is not None:
-                prev.unpersist()
-            prev, labels = labels, new
-        out = labels.localCheckpoint(eager=True)
+        return _round_loop(start, step, rounds)
     finally:
         sym.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        labels.unpersist()
-    return out
 
 
 def link_prediction(edges: DataFrame,
@@ -706,57 +724,47 @@ def bfs_hops(edges: DataFrame, sources: DataFrame,
     after the wave peaks) against the symmetrized edge table — kept
     persisted and hash-partitioned on the join key so every round reuses
     one layout — then one distinct and one anti-join against the
-    visited set.  Frontier and visited vectors use the one-round-late
-    persist handoff (pagerank/lpa pattern); early-exits on an empty
+    visited set (:func:`_bfs_step`).  Rounds run through
+    :func:`_round_loop` with one count each and stop early on an empty
     frontier, so diameter-small graphs never pay the full bound.  Hop
     values never leave the JVM.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    sym = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-        .persist()
-    )
+    sym = _symmetrize(edges).repartition("u").persist()
     dist = (
         sources.select("node").distinct()
         .withColumn("hops", F.lit(0).cast("long"))
         .persist()
     )
-    dist.count()
-    frontier = dist.select("node")
-    stale = []
     try:
-        for h in range(1, max_hops + 1):
-            cand = (
-                sym.join(frontier.withColumnRenamed("node", "u"), on="u")
-                .select(F.col("v").alias("node"))
-                .distinct()
-            )
-            new = (
-                cand.join(dist.select("node"), on="node", how="left_anti")
-                .withColumn("hops", F.lit(h).cast("long"))
-                .persist()
-            )
-            if new.count() == 0:
-                new.unpersist()
-                break
-            nxt = dist.union(new).persist()
-            nxt.count()
-            stale.append(dist)
-            stale.append(new)
-            if len(stale) > 4:   # one-round-late release
-                stale.pop(0).unpersist()
-                stale.pop(0).unpersist()
-            dist, frontier = nxt, new.select("node")
-        out = dist.localCheckpoint(eager=True)
+        return _round_loop(dist, _bfs_step(sym, ["node"]), max_hops)
     finally:
         sym.unpersist()
-        for df in stale:
-            df.unpersist()
-        dist.unpersist()
-    return out
+
+
+def _bfs_step(sym, keys):
+    """The BFS layer step of :func:`_round_loop` over the symmetric
+    edge table ``sym``: the state holds ``(*keys, hops)`` rows, ``keys``
+    ending in ``node``; round h reaches every unvisited neighbor of the
+    frontier at hop h and steps to ``(dist ∪ new, new)``.  Leading keys
+    (closeness's ``seed``) ride along, so one wave runs per leading key.
+    """
+    def step(dist, frontier, h):
+        cand = (
+            sym.join(frontier.select(*keys).withColumnRenamed("node", "u"),
+                     on="u")
+            .select(*keys[:-1], F.col("v").alias("node"))
+            .distinct()
+        )
+        new = (
+            cand.join(dist.select(*keys), on=keys, how="left_anti")
+            .withColumn("hops", F.lit(h).cast("long"))
+        )
+        # the alias keeps Dataset.union from flattening this union into
+        # the next round's, which would hide this state's cache from it
+        return dist.union(new).alias("dist"), new
+    return step
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -790,9 +798,8 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     max degree ~3e4 fits; beyond that the stats columns remain the
     contract and r is recovered from them off-plan).
     """
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
+    deg = _symmetrize(edges).groupBy("u").agg(
+        F.count("*").cast("long").alias("deg"))
     per_edge = (
         edges
         .join(deg.select(F.col("u"), F.col("deg").alias("deg_u")), on="u")
@@ -848,10 +855,8 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     appear with cc_ppm = 0), never a neighbor-pair materialization
     beyond the oriented wedge stream.
     """
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = (
-        sym.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
+        _symmetrize(edges).groupBy("u").agg(F.count("*").cast("long").alias("deg"))
         .filter(F.col("deg") >= 2)
         .select(F.col("u").alias("node"), "deg")
     )
@@ -906,8 +911,7 @@ def neighbor_feature_agg(
     Isolated nodes are absent (nodes are derived from edges, the graph
     family convention).
     """
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = _symmetrize(edges)
     feats = features.select(
         F.col(node_col).alias("v"),
         F.col(feat_col).cast("long").alias("fv"))
@@ -978,70 +982,42 @@ def sssp_bounded(
     symmetric edge table (persisted, hash-partitioned on the join key —
     one layout reused every round), then one map-side-combined min per
     candidate node and one min-merge groupBy over the node-bounded dist
-    vector.  The one-round-late persist handoff (pagerank/bfs pattern)
-    bounds the cached working set at two vectors; weights and distances
-    never leave the JVM.
+    vector.  Rounds run through :func:`_round_loop` with one count each
+    (the improved set); weights and distances never leave the JVM.
     """
     if max_rounds < 0:
         raise ValueError("max_rounds must be >= 0")
-    sym = (
-        edges.select("u", "v", F.col("w").cast("long").alias("w"))
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v"),
-                            F.col("w").cast("long").alias("w")))
-        .repartition("u")
-        .persist()
-    )
+    sym = _symmetrize(edges, F.col("w").cast("long").alias("w")) \
+        .repartition("u").persist()
+
+    def step(dist, frontier, _r):
+        cand = (
+            sym.join(frontier.select(F.col("node").alias("u"),
+                                     F.col("dist").alias("du")), on="u")
+            .select(F.col("v").alias("node"),
+                    (F.col("du") + F.col("w")).alias("dist"))
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+        )
+        improved = (
+            cand.join(dist.select("node", F.col("dist").alias("_old")),
+                      on="node", how="left")
+            .filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
+            .select("node", "dist")
+        )
+        merged = (dist.union(improved).groupBy("node")
+                  .agg(F.min("dist").alias("dist")))
+        return merged, improved
+
     dist = (
         sources.select("node").distinct()
         .withColumn("dist", F.lit(0).cast("long"))
         .persist()
     )
-    dist.count()
-    frontier = dist
-    stale = []
     try:
-        for _ in range(1, max_rounds + 1):
-            cand = (
-                sym.join(
-                    frontier.select(F.col("node").alias("u"),
-                                    F.col("dist").alias("du")), on="u")
-                .select(F.col("v").alias("node"),
-                        (F.col("du") + F.col("w")).alias("dist"))
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            merged = (
-                dist.union(cand)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-                .persist()
-            )
-            improved = (
-                merged.join(
-                    dist.select("node", F.col("dist").alias("_old")),
-                    on="node", how="left")
-                .filter(F.col("_old").isNull()
-                        | (F.col("dist") < F.col("_old")))
-                .select("node", "dist")
-                .persist()
-            )
-            if improved.count() == 0:
-                merged.unpersist()
-                improved.unpersist()
-                break
-            stale.append(dist)
-            stale.append(improved)
-            if len(stale) > 4:   # one-round-late release
-                stale.pop(0).unpersist()
-                stale.pop(0).unpersist()
-            dist, frontier = merged, improved
-        out = dist.localCheckpoint(eager=True)
+        return _round_loop(dist, step, max_rounds)
     finally:
         sym.unpersist()
-        for df in stale:
-            df.unpersist()
-        dist.unpersist()
-    return out
 
 
 def edge_support(edges: DataFrame) -> DataFrame:
@@ -1271,78 +1247,43 @@ def closeness_sample(edges: DataFrame, seeds: DataFrame,
     outputs are pure functions of the edge/seed sets; the oracle
     unrolls the identical per-seed layer expansion.
 
-    Scale shape: bfs_hops's frontier discipline carrying (seed, node)
-    pairs — per round ONE hash equi-join of the CURRENT frontier
+    Scale shape: bfs_hops's layer step (:func:`_bfs_step`) keyed on
+    (seed, node) — per round ONE hash equi-join of the CURRENT frontier
     against the persisted symmetric edge table, one distinct, one
-    anti-join against the visited set; one-round-late persist handoff;
-    early exit on an empty frontier.  Final rollup is ONE per-seed
-    aggregate.  Frontier volume is sum of per-seed reach — the
-    documented cost of sampling more landmarks.
+    anti-join against the visited set; early exit on an empty frontier.
+    Final rollup is ONE per-seed aggregate.  Frontier volume is sum of
+    per-seed reach — the documented cost of sampling more landmarks.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    sym = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-        .persist()
-    )
+    sym = _symmetrize(edges).repartition("u").persist()
+
+    def per_seed(dist):
+        return dist.groupBy("seed").agg(
+            F.count("*").cast("long").alias("reached"),
+            F.sum("hops").cast("long").alias("sum_hops"),
+            F.sum(F.when(F.col("hops") > 0, F.expr("div(1000000L, hops)"))
+                  .otherwise(F.lit(0))).cast("long").alias("harmonic_x1e6"),
+        ).select(
+            "seed", "reached", "sum_hops",
+            F.when(F.col("sum_hops") > 0,
+                   F.expr("cast(div((reached - 1) * 1000000L,"
+                          " sum_hops) as bigint)"))
+            .alias("closeness_ppm"),
+            "harmonic_x1e6",
+        )
+
     dist = (
         seeds.select("seed").distinct()
         .select("seed", F.col("seed").alias("node"),
                 F.lit(0).cast("long").alias("hops"))
         .persist()
     )
-    dist.count()
-    frontier = dist.select("seed", "node")
-    stale = []
     try:
-        for h in range(1, max_hops + 1):
-            cand = (
-                sym.join(frontier.withColumnRenamed("node", "u"), on="u")
-                .select("seed", F.col("v").alias("node"))
-                .distinct()
-            )
-            new = (
-                cand.join(dist.select("seed", "node"),
-                          on=["seed", "node"], how="left_anti")
-                .withColumn("hops", F.lit(h).cast("long"))
-                .persist()
-            )
-            if new.count() == 0:
-                new.unpersist()
-                break
-            nxt = dist.union(new).persist()
-            nxt.count()
-            stale.append(dist)
-            stale.append(new)
-            if len(stale) > 4:
-                stale.pop(0).unpersist()
-                stale.pop(0).unpersist()
-            dist, frontier = nxt, new.select("seed", "node")
-        out = (
-            dist.groupBy("seed").agg(
-                F.count("*").cast("long").alias("reached"),
-                F.sum("hops").cast("long").alias("sum_hops"),
-                F.sum(F.when(F.col("hops") > 0,
-                             F.expr("div(1000000L, hops)"))
-                      .otherwise(F.lit(0))).cast("long")
-                .alias("harmonic_x1e6"),
-            ).select(
-                "seed", "reached", "sum_hops",
-                F.when(F.col("sum_hops") > 0,
-                       F.expr("cast(div((reached - 1) * 1000000L,"
-                              " sum_hops) as bigint)"))
-                .alias("closeness_ppm"),
-                "harmonic_x1e6",
-            ).localCheckpoint(eager=True)
-        )
+        return _round_loop(dist, _bfs_step(sym, ["seed", "node"]), max_hops,
+                           finish=per_seed)
     finally:
         sym.unpersist()
-        for df in stale:
-            df.unpersist()
-        dist.unpersist()
-    return out
 
 
 def negative_sample(edges: DataFrame, k: int = 3,
@@ -1379,8 +1320,6 @@ def negative_sample(edges: DataFrame, k: int = 3,
         .distinct()
     )
     mx = nodes.agg(F.max("node").cast("long").alias("_mx"))
-    from ._util import attach_scalar
-
     cand = attach_scalar(nodes, mx).select(
         F.col("node").alias("u"),
         F.explode(F.sequence(F.lit(0), F.lit(int(k) - 1))).alias("j"),
@@ -1397,11 +1336,10 @@ def negative_sample(edges: DataFrame, k: int = 3,
     )
     exists = cand.join(
         nodes.withColumnRenamed("node", "neg"), on="neg", how="left_semi")
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
         exists.filter(F.col("u") != F.col("neg"))
-        .join(sym.withColumnRenamed("v", "neg"), on=["u", "neg"],
+        .join(_symmetrize(edges).withColumnRenamed("v", "neg"),
+              on=["u", "neg"],
               how="left_anti")
         .select("u", "j", "neg")
     )
@@ -1498,8 +1436,6 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         F.coalesce(F.sum(F.expr("cast(_dc as decimal(38,0)) * _dc")),
                    F.lit(0).cast("decimal(38,0)")).alias("sum_deg_sq"),
     )
-    from ._util import attach_scalar
-
     out = attach_scalar(attach_scalar(m_agg, intra), csum)
     num = ("(cast(1000000 as decimal(38,0))"
            " * (4 * cast(m_edges as decimal(38,0)) * intra_edges"

@@ -696,8 +696,10 @@ def ams_f2(df: DataFrame, key_col: str = "key", k: int = 16,
     runs over the k-element literal array.  Mergeable: Z vectors from
     shards ADD — re-aggregate partials and finalize identically.
     """
-    if k < 1 or k > 32:
-        raise ValueError("need 1 <= k <= 32 (one 32-bit hash word)")
+    if k < 2 or k > 32:
+        # k // 2 is the 1-based median index: k = 1 would ask for index 0
+        raise ValueError("need 2 <= k <= 32 (one 32-bit hash word; the"
+                         " median needs k >= 2)")
     h = F.conv(F.substring(F.md5(F.concat(
         F.lit(salt + ":"), F.col(key_col).cast("string"))), 1, 8),
         16, 10).cast("long")

@@ -56,6 +56,8 @@ def test_ams_k_bounds(spark):
     with pytest.raises(ValueError):
         ams_f2(df, k=0)
     with pytest.raises(ValueError):
+        ams_f2(df, k=1)
+    with pytest.raises(ValueError):
         ams_f2(df, k=33)
 
 

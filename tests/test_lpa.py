@@ -1,5 +1,6 @@
 """label_propagation: convergence on disjoint cliques, python brute
-replay differential, cache hygiene."""
+replay differential; cache hygiene and one count per round for every
+operator on the shared round loop."""
 
 import pytest
 
@@ -61,13 +62,82 @@ def test_brute_replay_differential(spark):
         assert out == _brute_lpa(pairs, rounds), rounds
 
 
-def test_no_pinned_cache_after_return(spark):
-    from picogeojson_spark.operators.graph import label_propagation
+#: the operators whose rounds run through graph._round_loop
+LOOP_OPS = ("pagerank", "label_propagation", "bfs_hops", "sssp_bounded",
+            "closeness_sample")
+FRONTIER_OPS = ("bfs_hops", "sssp_bounded", "closeness_sample")
 
-    pairs = [(1, 2), (2, 3)]
-    label_propagation(_edges(spark, pairs), rounds=2).collect()
+
+def _run_loop_op(spark, op, seed, rounds=3):
+    """``op`` over the unit-weight path 1-2-3-4-5 (seeded ops from
+    ``seed``)."""
+    from picogeojson_spark.operators import graph
+
+    e = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (3, 4, 1), (4, 5, 1)],
+        "u long, v long, w long")
+    uv = e.select("u", "v")
+    src = spark.createDataFrame([(seed,)], "node long")
+    if op == "pagerank":
+        return graph.pagerank(e.selectExpr("u as src", "v as dst"),
+                              iterations=rounds)
+    if op == "label_propagation":
+        return graph.label_propagation(uv, rounds=rounds)
+    if op == "closeness_sample":
+        return graph.closeness_sample(
+            uv, src.withColumnRenamed("node", "seed"), max_hops=rounds)
+    if op == "bfs_hops":
+        return graph.bfs_hops(uv, src, max_hops=rounds)
+    return graph.sssp_bounded(e, src, max_rounds=rounds)
+
+
+def _fail_round_2(loop):
+    """``_round_loop`` whose round-2 frontier count fails in the tasks."""
+    from pyspark.sql import functions as F
+
+    def failing_loop(start, step, rounds, *args, **kwargs):
+        def failing_step(state, frontier, r):
+            nxt, new = step(state, frontier, r)
+            if r == 2:
+                new = new.filter(F.raise_error(F.lit("round 2 fails"))
+                                 .isNull())
+            return nxt, new
+        return loop(start, failing_step, rounds, *args, **kwargs)
+    return failing_loop
+
+
+@pytest.mark.parametrize("op,case", (
+    [(op, "bound") for op in LOOP_OPS]
+    + [(op, "seed_without_edges") for op in FRONTIER_OPS]
+    + [(op, "round_2_raises") for op in LOOP_OPS]))
+def test_no_pinned_cache_after_return(spark, monkeypatch, op, case):
+    from picogeojson_spark.operators import graph
+
     jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert jcm.isEmpty(), "label_propagation leaked persisted DataFrames"
+    seed = 99 if case == "seed_without_edges" else 1
+    if case == "round_2_raises":
+        monkeypatch.setattr(graph, "_round_loop",
+                            _fail_round_2(graph._round_loop))
+        with pytest.raises(Exception, match="round 2 fails"):
+            _run_loop_op(spark, op, seed).collect()
+    else:
+        assert _run_loop_op(spark, op, seed).count() > 0
+    assert jcm.isEmpty(), "{} leaked persisted DataFrames".format(op)
+
+
+@pytest.mark.parametrize("op", LOOP_OPS)
+def test_one_count_per_round(spark, monkeypatch, op):
+    # from node 3 the frontier is {2, 4}, then {1, 5}, then empty: the
+    # frontier ops stop in round 3 of 6; pagerank and LPA run all 3 rounds
+    # and pagerank counts its node set once before them
+    counts = []
+    cls = type(spark.range(1))   # the session's concrete DataFrame class
+    real = cls.count
+    monkeypatch.setattr(cls, "count",
+                        lambda df: counts.append(1) or real(df))
+    rounds = 3 if op in ("pagerank", "label_propagation") else 6
+    _run_loop_op(spark, op, 3, rounds=rounds).collect()
+    assert len(counts) == 3 + (op == "pagerank")
 
 
 def test_rounds_validation(spark):

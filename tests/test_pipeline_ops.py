@@ -1533,12 +1533,11 @@ def test_frame_sample_frame_fn_seam(spark):
     got = frame_sample(media, every_ms=1000, max_frames=2,
                        frame_fn=lambda p, t: b"F%d:%d" % (len(p), t))
     rows = got.collect()
+    orig = {m.media_id: m for m in media.collect()}
     assert rows and all(
         bytes(r.frame) == b"F%d:%d" % (
-            len(bytes(orig.payload)), r.ts_ms)
-        for r in rows
-        for orig in [next(m for m in media.collect()
-                          if m.media_id == r.media_id)])
+            len(bytes(orig[r.media_id].payload)), r.ts_ms)
+        for r in rows)
 
 
 def test_resumable_job_cleans_stale_partial_buckets(spark, tmp_path):
@@ -1835,8 +1834,13 @@ def test_pagerank_matches_integer_replica(spark):
 
     edges = [(1, 2), (2, 3), (3, 1), (4, 1), (5, 1), (1, 3), (6, 7)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r["rank"] for r in pagerank(df, iterations=6).collect()}
+    log = []
+    got = {r.node: r["rank"]
+           for r in pagerank(df, iterations=6, iteration_log=log).collect()}
     assert got == _pagerank_replica(edges, iterations=6)
+    # one log entry per round (scripts/graph_jitter_probe.py reads them)
+    assert [e["round"] for e in log] == list(range(6))
+    assert all(e["wall_s"] >= 0 and e["gc_ms"] >= 0 for e in log)
 
 
 def test_pagerank_hub_and_dangling(spark):
