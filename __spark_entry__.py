@@ -1,7 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` exposes the engine's operator surface over the driver-provided
-testdata tables; ``oracle_sql()`` gives the DuckDB-equivalent for each.
+testdata tables; ``oracle_sql()`` gives the DuckDB-equivalent for each.  Both
+read one registry, filled by one ``_register(name, fn, oracle, ...)`` call
+per query placed after the query's definition.
+
 Geometry inputs are *derived deterministically* from the TPC-H-ish keys with
 exact-in-double arithmetic (integers and quarter-degree offsets), so the SQL
 oracle reproduces the same doubles bit-for-bit and results hash-match.
@@ -20,6 +23,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -649,40 +653,73 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+class Query(NamedTuple):
+    """One gated query.  ``oracle`` is its DuckDB SQL (None: the gate
+    checks rows only); ``verified`` is the driver round whose
+    CORRECTNESS_r0N.json holds its green row (None: never
+    driver-verified); ``bench`` / ``plan_dump`` say whether bench.py
+    times it and scripts/dump_plans.py dumps its plan."""
+
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    verified: int | None
+    bench: bool
+    plan_dump: bool
+
+
+_REGISTRY: dict[str, Query] = {}
+
+
+def _register(name, fn, oracle=None, *, verified=None, bench=True,
+              plan_dump=False):
+    if name in _REGISTRY:
+        raise ValueError("query {!r} registered twice".format(name))
+    _REGISTRY[name] = Query(name, fn, oracle, verified, bench, plan_dump)
+
+
+def registry() -> list[Query]:
+    """Every query, in registration order."""
+    return list(_REGISTRY.values())
+
+
+def _verified_last() -> list[Query]:
+    # The round driver verifies only the first 50 entries of queries(), so
+    # never-driver-verified queries lead; the sort is stable, so each group
+    # keeps registration order.
+    return sorted(_REGISTRY.values(), key=lambda q: q.verified is not None)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_parts_per_brand": q_top_parts_per_brand,
-        "events_hourly": q_events_hourly,
-        "geo_parse_normalize": q_geo_parse_normalize,
-        "geo_dateline_split": q_geo_dateline_split,
-        "geo_pip_grid": q_geo_pip_grid,
-        "geo_pip_holes": q_geo_pip_holes,
-        "geo_knn": q_geo_knn,
-        "geo_tile_assign": q_geo_tile_assign,
-        "geo_tile_pyramid": q_geo_tile_pyramid,
-        "geo_cell_index": q_geo_cell_index,
-        "geo_bbox_agg": q_geo_bbox_agg,
-    }
+    return {q.name: q.fn for q in _verified_last()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "pricing_summary": Q_PRICING_SQL,
-        "revenue_by_nation": Q_REVENUE_SQL,
-        "top_parts_per_brand": Q_TOP_PARTS_SQL,
-        "events_hourly": Q_EVENTS_SQL,
-        "geo_parse_normalize": Q_GEO_PARSE_SQL,
-        "geo_dateline_split": Q_GEO_DATELINE_SQL,
-        "geo_pip_grid": Q_GEO_PIP_GRID_SQL,
-        "geo_pip_holes": Q_GEO_PIP_HOLES_SQL,
-        "geo_knn": Q_GEO_KNN_SQL,
-        "geo_tile_assign": Q_GEO_TILE_SQL,
-        "geo_tile_pyramid": _tile_pyramid_sql(),
-        "geo_cell_index": Q_GEO_CELL_SQL,
-        "geo_bbox_agg": Q_GEO_BBOX_SQL,
-    }
+    return {q.name: q.oracle for q in _verified_last()
+            if q.oracle is not None}
+
+
+_register("pricing_summary", q_pricing_summary, Q_PRICING_SQL, verified=3,
+          plan_dump=True)
+_register("revenue_by_nation", q_revenue_by_nation, Q_REVENUE_SQL, verified=3,
+          plan_dump=True)
+_register("top_parts_per_brand", q_top_parts_per_brand, Q_TOP_PARTS_SQL,
+          verified=3)
+_register("events_hourly", q_events_hourly, Q_EVENTS_SQL, verified=3)
+_register("geo_parse_normalize", q_geo_parse_normalize, Q_GEO_PARSE_SQL,
+          verified=3)
+_register("geo_dateline_split", q_geo_dateline_split, Q_GEO_DATELINE_SQL,
+          verified=3)
+_register("geo_pip_grid", q_geo_pip_grid, Q_GEO_PIP_GRID_SQL, verified=3,
+          plan_dump=True)
+_register("geo_pip_holes", q_geo_pip_holes, Q_GEO_PIP_HOLES_SQL, verified=3)
+_register("geo_knn", q_geo_knn, Q_GEO_KNN_SQL, verified=3, plan_dump=True)
+_register("geo_tile_assign", q_geo_tile_assign, Q_GEO_TILE_SQL, verified=3,
+          plan_dump=True)
+_register("geo_tile_pyramid", q_geo_tile_pyramid, _tile_pyramid_sql(),
+          verified=3)
+_register("geo_cell_index", q_geo_cell_index, Q_GEO_CELL_SQL, verified=3)
+_register("geo_bbox_agg", q_geo_bbox_agg, Q_GEO_BBOX_SQL, verified=3)
 
 
 # --------------------------------------------------------------------------
@@ -1253,61 +1290,30 @@ FROM b ORDER BY doc_id
 """
 
 
-_EXTRA_QUERIES = {
-    "text_top_terms": q_text_top_terms,
-    "doc_hash_split": q_doc_hash_split,
-    "corpus_curate": q_corpus_curate,
-    "sample_hash": q_sample_hash,
-    "sample_stratified": q_sample_stratified,
-    "text_gopher": q_text_gopher,
-    "dedup_exact": q_dedup_exact,
-    "dedup_jaccard": q_dedup_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_clusters": q_dedup_clusters,
-    "text_tokens": q_text_tokens,
-    "text_quality": q_text_quality,
-    "text_langid": q_text_langid,
-    "text_fingerprint": q_text_fingerprint,
-    "ann_topk": q_ann_topk,
-    "embed_label_stats": q_embed_label_stats,
-}
-
-_EXTRA_ORACLES = {
-    "text_top_terms": Q_TEXT_TOP_TERMS_SQL,
-    "doc_hash_split": Q_DOC_HASH_SPLIT_SQL,
-    "corpus_curate": _corpus_curate_sql(),
-    "sample_hash": Q_SAMPLE_HASH_SQL,
-    "sample_stratified": Q_SAMPLE_STRATIFIED_SQL,
-    "text_gopher": Q_TEXT_GOPHER_SQL,
-    "dedup_exact": Q_DEDUP_EXACT_SQL,
-    "dedup_jaccard": Q_DEDUP_JACCARD_SQL,
-    "dedup_minhash_lsh": _minhash_sql(),
-    "dedup_clusters": _dedup_clusters_sql(),
-    "text_tokens": Q_TEXT_TOKENS_SQL,
-    "text_quality": Q_TEXT_QUALITY_SQL,
-    "text_langid": _langid_sql(),
-    "text_fingerprint": Q_TEXT_FP_SQL,
-    "ann_topk": Q_ANN_TOPK_SQL,
-    "embed_label_stats": Q_EMBED_STATS_SQL,
-}
-
-
-_BASE_QUERIES = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _BASE_QUERIES()
-    out.update(_EXTRA_QUERIES)
-    return out
-
-
-_BASE_ORACLES = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _BASE_ORACLES()
-    out.update(_EXTRA_ORACLES)
-    return out
+_register("text_top_terms", q_text_top_terms, Q_TEXT_TOP_TERMS_SQL, verified=3,
+          bench=False)
+_register("doc_hash_split", q_doc_hash_split, Q_DOC_HASH_SPLIT_SQL, verified=3,
+          bench=False)
+_register("corpus_curate", q_corpus_curate, _corpus_curate_sql(), verified=3,
+          plan_dump=True)
+_register("sample_hash", q_sample_hash, Q_SAMPLE_HASH_SQL, verified=3)
+_register("sample_stratified", q_sample_stratified, Q_SAMPLE_STRATIFIED_SQL,
+          verified=3)
+_register("text_gopher", q_text_gopher, Q_TEXT_GOPHER_SQL, verified=3)
+_register("dedup_exact", q_dedup_exact, Q_DEDUP_EXACT_SQL, verified=3)
+_register("dedup_jaccard", q_dedup_jaccard, Q_DEDUP_JACCARD_SQL, verified=3)
+_register("dedup_minhash_lsh", q_dedup_minhash_lsh, _minhash_sql(), verified=3,
+          plan_dump=True)
+_register("dedup_clusters", q_dedup_clusters, _dedup_clusters_sql(),
+          verified=3)
+_register("text_tokens", q_text_tokens, Q_TEXT_TOKENS_SQL, verified=3)
+_register("text_quality", q_text_quality, Q_TEXT_QUALITY_SQL, verified=3)
+_register("text_langid", q_text_langid, _langid_sql(), verified=3)
+_register("text_fingerprint", q_text_fingerprint, Q_TEXT_FP_SQL, verified=3,
+          bench=False)
+_register("ann_topk", q_ann_topk, Q_ANN_TOPK_SQL, verified=3, plan_dump=True)
+_register("embed_label_stats", q_embed_label_stats, Q_EMBED_STATS_SQL,
+          verified=3)
 
 
 # --------------------------------------------------------------------------
@@ -1438,12 +1444,10 @@ FROM (
 ORDER BY id
 """
 
-_EXTRA_QUERIES["text_simhash"] = q_text_simhash
-_EXTRA_ORACLES["text_simhash"] = _simhash_sql()
-_EXTRA_QUERIES["dedup_simhash_pairs"] = q_dedup_simhash_pairs
-_EXTRA_ORACLES["dedup_simhash_pairs"] = _simhash_pairs_sql(bits=32)
-_EXTRA_QUERIES["geo_transform"] = q_geo_transform
-_EXTRA_ORACLES["geo_transform"] = Q_GEO_TRANSFORM_SQL
+_register("text_simhash", q_text_simhash, _simhash_sql(), verified=3)
+_register("dedup_simhash_pairs", q_dedup_simhash_pairs,
+          _simhash_pairs_sql(bits=32), verified=3)
+_register("geo_transform", q_geo_transform, Q_GEO_TRANSFORM_SQL, verified=3)
 
 
 def q_embed_cosine_pairs(spark, sf_dir):
@@ -1575,12 +1579,11 @@ FROM scored WHERE cos >= 0.3 ORDER BY id_a, id_b
 """.format(keys=_lsh_keys_sql(planes=3, bands=4, dim=64))
 
 
-_EXTRA_QUERIES["embed_cosine_pairs"] = q_embed_cosine_pairs
-_EXTRA_ORACLES["embed_cosine_pairs"] = Q_EMBED_PAIRS_SQL
-_EXTRA_QUERIES["ann_lsh"] = q_ann_lsh
-_EXTRA_ORACLES["ann_lsh"] = Q_ANN_LSH_SQL
-_EXTRA_QUERIES["embed_cosine_pairs_lsh"] = q_embed_cosine_pairs_lsh
-_EXTRA_ORACLES["embed_cosine_pairs_lsh"] = Q_EMBED_PAIRS_LSH_SQL
+_register("embed_cosine_pairs", q_embed_cosine_pairs, Q_EMBED_PAIRS_SQL,
+          verified=3, bench=False)
+_register("ann_lsh", q_ann_lsh, Q_ANN_LSH_SQL, verified=3, plan_dump=True)
+_register("embed_cosine_pairs_lsh", q_embed_cosine_pairs_lsh,
+          Q_EMBED_PAIRS_LSH_SQL, verified=3, plan_dump=True)
 
 
 # --------------------------------------------------------------------------
@@ -1627,8 +1630,8 @@ FROM documents
 ORDER BY media_id
 """
 
-_EXTRA_QUERIES["multimodal_meta"] = q_multimodal_meta
-_EXTRA_ORACLES["multimodal_meta"] = Q_MULTIMODAL_SQL
+_register("multimodal_meta", q_multimodal_meta, Q_MULTIMODAL_SQL, verified=3,
+          plan_dump=True)
 
 
 # --------------------------------------------------------------------------
@@ -1693,8 +1696,8 @@ FROM parts
 ORDER BY id, x, y
 """
 
-_EXTRA_QUERIES["geo_merge_burst"] = q_geo_merge_burst
-_EXTRA_ORACLES["geo_merge_burst"] = Q_GEO_MERGE_BURST_SQL
+_register("geo_merge_burst", q_geo_merge_burst, Q_GEO_MERGE_BURST_SQL,
+          verified=3)
 
 
 # --------------------------------------------------------------------------
@@ -1769,7 +1772,7 @@ def _await_stream(q, name, secs=120):
         )
 
 
-_EXTRA_QUERIES["stream_counts"] = q_stream_counts
+_register("stream_counts", q_stream_counts, verified=3, bench=False)
 # NB: stream_counts has no oracle entry (the mined-page content derives from
 # a Python RNG, not SQL-expressible). The correctness gate instead asserts
 # stream==batch equality over the same parquet (the two paths share the
@@ -1825,8 +1828,8 @@ SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS chars_sum
 FROM documents GROUP BY lang ORDER BY lang
 """
 
-_EXTRA_QUERIES["stream_doc_stats"] = q_stream_doc_stats
-_EXTRA_ORACLES["stream_doc_stats"] = Q_STREAM_DOC_STATS_SQL
+_register("stream_doc_stats", q_stream_doc_stats, Q_STREAM_DOC_STATS_SQL,
+          verified=3, bench=False)
 
 
 def q_stream_events_windows(spark, sf_dir):
@@ -1877,8 +1880,8 @@ SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
 FROM events GROUP BY 1, 2 ORDER BY hour_us, event_type
 """
 
-_EXTRA_QUERIES["stream_events_windows"] = q_stream_events_windows
-_EXTRA_ORACLES["stream_events_windows"] = Q_STREAM_EVENTS_WINDOWS_SQL
+_register("stream_events_windows", q_stream_events_windows,
+          Q_STREAM_EVENTS_WINDOWS_SQL, verified=3, bench=False)
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -1939,8 +1942,7 @@ SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
 FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
 """
 
-_EXTRA_QUERIES["ann_ivf"] = q_ann_ivf
-_EXTRA_ORACLES["ann_ivf"] = Q_ANN_IVF_SQL
+_register("ann_ivf", q_ann_ivf, Q_ANN_IVF_SQL, verified=3, plan_dump=True)
 
 
 def q_geo_extract_props(spark, sf_dir):
@@ -1990,8 +1992,8 @@ WHERE o_orderpriority = '1-URGENT'
 ORDER BY id
 """
 
-_EXTRA_QUERIES["geo_extract_props"] = q_geo_extract_props
-_EXTRA_ORACLES["geo_extract_props"] = Q_GEO_EXTRACT_SQL
+_register("geo_extract_props", q_geo_extract_props, Q_GEO_EXTRACT_SQL,
+          verified=3, bench=False)
 
 
 def q_geo_tile_join(spark, sf_dir):
@@ -2055,8 +2057,8 @@ FROM pts p JOIN cover c USING (tile_x, tile_y)
 ORDER BY point_id, poly_id
 """.format(points=_POINTS_SQL)
 
-_EXTRA_QUERIES["geo_tile_join"] = q_geo_tile_join
-_EXTRA_ORACLES["geo_tile_join"] = Q_GEO_TILE_JOIN_SQL
+_register("geo_tile_join", q_geo_tile_join, Q_GEO_TILE_JOIN_SQL, verified=3,
+          plan_dump=True)
 
 
 def q_events_sessionize(spark, sf_dir):
@@ -2123,8 +2125,8 @@ GROUP BY user_id, session_idx
 ORDER BY user_id, session_idx
 """
 
-_EXTRA_QUERIES["events_sessionize"] = q_events_sessionize
-_EXTRA_ORACLES["events_sessionize"] = Q_EVENTS_SESSION_SQL
+_register("events_sessionize", q_events_sessionize, Q_EVENTS_SESSION_SQL,
+          verified=3, plan_dump=True)
 
 
 def q_events_asof(spark, sf_dir):
@@ -2163,8 +2165,8 @@ FROM c ASOF JOIN v ON c.user_id = v.user_id AND c.tus >= v.vtus
 ORDER BY event_id
 """
 
-_EXTRA_QUERIES["events_asof"] = q_events_asof
-_EXTRA_ORACLES["events_asof"] = Q_EVENTS_ASOF_SQL
+_register("events_asof", q_events_asof, Q_EVENTS_ASOF_SQL, verified=3,
+          plan_dump=True)
 
 
 def q_events_range_join(spark, sf_dir):
@@ -2211,8 +2213,8 @@ FROM events e JOIN bins b ON e.value >= b.lo AND e.value <= b.hi
 ORDER BY event_id, bin_id
 """
 
-_EXTRA_QUERIES["events_range_join"] = q_events_range_join
-_EXTRA_ORACLES["events_range_join"] = Q_EVENTS_RANGE_SQL
+_register("events_range_join", q_events_range_join, Q_EVENTS_RANGE_SQL,
+          verified=3, plan_dump=True)
 
 
 def q_pricing_rollup(spark, sf_dir):
@@ -2248,8 +2250,8 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 ORDER BY rf, ls
 """
 
-_EXTRA_QUERIES["pricing_rollup"] = q_pricing_rollup
-_EXTRA_ORACLES["pricing_rollup"] = Q_PRICING_ROLLUP_SQL
+_register("pricing_rollup", q_pricing_rollup, Q_PRICING_ROLLUP_SQL, verified=3,
+          plan_dump=True)
 
 
 def q_geo_poly_intersect(spark, sf_dir):
@@ -2319,8 +2321,8 @@ FROM a JOIN b
 ORDER BY a_id, b_id
 """
 
-_EXTRA_QUERIES["geo_poly_intersect"] = q_geo_poly_intersect
-_EXTRA_ORACLES["geo_poly_intersect"] = Q_GEO_POLY_INTERSECT_SQL
+_register("geo_poly_intersect", q_geo_poly_intersect, Q_GEO_POLY_INTERSECT_SQL,
+          verified=3, plan_dump=True)
 
 
 def _ngram_occ_sql(table, n):
@@ -2361,8 +2363,8 @@ SELECT t.doc_id, t.total_ngrams,
 FROM tot t LEFT JOIN d USING (doc_id) ORDER BY doc_id
 """.format(occ=_ngram_occ_sql("documents", 8))
 
-_EXTRA_QUERIES["dedup_ngram_spans"] = q_dedup_ngram_spans
-_EXTRA_ORACLES["dedup_ngram_spans"] = Q_DEDUP_NGRAM_SPANS_SQL
+_register("dedup_ngram_spans", q_dedup_ngram_spans, Q_DEDUP_NGRAM_SPANS_SQL,
+          verified=3)
 
 
 def q_decontam_ngram(spark, sf_dir):
@@ -2400,8 +2402,7 @@ FROM (SELECT DISTINCT doc_id FROM tg) t
 LEFT JOIN hits h USING (doc_id) ORDER BY doc_id
 """.format(tocc=_ngram_occ_sql("tr", 8), eocc=_ngram_occ_sql("ev", 8))
 
-_EXTRA_QUERIES["decontam_ngram"] = q_decontam_ngram
-_EXTRA_ORACLES["decontam_ngram"] = Q_DECONTAM_NGRAM_SQL
+_register("decontam_ngram", q_decontam_ngram, Q_DECONTAM_NGRAM_SQL, verified=3)
 
 
 def q_text_repetition(spark, sf_dir):
@@ -2439,8 +2440,8 @@ SELECT t.doc_id, t.shingle AS top_gram, t.cnt AS top_n,
 FROM top t JOIN wc w USING (doc_id) ORDER BY doc_id
 """.format(occ=_ngram_occ_sql("documents", 2))
 
-_EXTRA_QUERIES["text_repetition"] = q_text_repetition
-_EXTRA_ORACLES["text_repetition"] = Q_TEXT_REPETITION_SQL
+_register("text_repetition", q_text_repetition, Q_TEXT_REPETITION_SQL,
+          verified=4)
 
 
 def q_pack_shards(spark, sf_dir):
@@ -2466,8 +2467,7 @@ SELECT doc_id, weight, start_offset,
 FROM c ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["pack_shards"] = q_pack_shards
-_EXTRA_ORACLES["pack_shards"] = Q_PACK_SHARDS_SQL
+_register("pack_shards", q_pack_shards, Q_PACK_SHARDS_SQL, verified=4)
 
 
 def q_semdedup(spark, sf_dir):
@@ -2509,8 +2509,7 @@ SELECT c.vec_id, c.list_id,
 FROM cassign c ORDER BY vec_id
 """
 
-_EXTRA_QUERIES["semdedup"] = q_semdedup
-_EXTRA_ORACLES["semdedup"] = Q_SEMDEDUP_SQL
+_register("semdedup", q_semdedup, Q_SEMDEDUP_SQL, verified=4)
 
 
 def q_bm25_search(spark, sf_dir):
@@ -2555,10 +2554,8 @@ FROM tk WHERE rank <= {k} ORDER BY rank
 """.format(tlist=tlist, score=bm25_score_expr_sql(), k=k)
 
 
-_EXTRA_QUERIES["bm25_search"] = q_bm25_search
-_EXTRA_ORACLES["bm25_search"] = _bm25_sql(
-    ["hash", "join", "vector", "stream"], 20
-)
+_register("bm25_search", q_bm25_search,
+          _bm25_sql(["hash", "join", "vector", "stream"], 20), verified=4)
 
 
 def q_search_fusion(spark, sf_dir):
@@ -2611,8 +2608,8 @@ FROM f QUALIFY rank_fused <= 20 ORDER BY rank_fused
 """.format(bm=_bm25_sql(terms, 30).strip(), tlist=tlist)
 
 
-_EXTRA_QUERIES["search_fusion"] = q_search_fusion
-_EXTRA_ORACLES["search_fusion"] = _q_search_fusion_sql()
+_register("search_fusion", q_search_fusion, _q_search_fusion_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_graph_pagerank(spark, sf_dir):
@@ -2671,8 +2668,8 @@ r{i} AS (
     return "".join(parts)
 
 
-_EXTRA_QUERIES["graph_pagerank"] = q_graph_pagerank
-_EXTRA_ORACLES["graph_pagerank"] = _pagerank_sql()
+_register("graph_pagerank", q_graph_pagerank, _pagerank_sql(), verified=4,
+          plan_dump=True)
 
 
 def q_graph_linkpred(spark, sf_dir):
@@ -2725,8 +2722,8 @@ LIMIT 200
 """
 
 
-_EXTRA_QUERIES["graph_linkpred"] = q_graph_linkpred
-_EXTRA_ORACLES["graph_linkpred"] = Q_GRAPH_LINKPRED_SQL
+_register("graph_linkpred", q_graph_linkpred, Q_GRAPH_LINKPRED_SQL, verified=5,
+          plan_dump=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2796,8 +2793,8 @@ FROM tot t LEFT JOIN reb r USING (doc_id)
 ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["dedup_lines"] = q_dedup_lines
-_EXTRA_ORACLES["dedup_lines"] = Q_DEDUP_LINES_SQL
+_register("dedup_lines", q_dedup_lines, Q_DEDUP_LINES_SQL, verified=4,
+          plan_dump=True)
 
 
 def q_sample_mixture(spark, sf_dir):
@@ -2823,8 +2820,7 @@ WHERE CAST(('0x' || substring(md5('mix0:' || CAST(d.doc_id AS VARCHAR)), 1, 8))
 ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["sample_mixture"] = q_sample_mixture
-_EXTRA_ORACLES["sample_mixture"] = Q_SAMPLE_MIXTURE_SQL
+_register("sample_mixture", q_sample_mixture, Q_SAMPLE_MIXTURE_SQL, verified=4)
 
 
 def q_text_quality_linear(spark, sf_dir):
@@ -2866,8 +2862,8 @@ FROM documents d LEFT JOIN s USING (doc_id)
 ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["text_quality_linear"] = q_text_quality_linear
-_EXTRA_ORACLES["text_quality_linear"] = Q_TEXT_QUALITY_LINEAR_SQL
+_register("text_quality_linear", q_text_quality_linear,
+          Q_TEXT_QUALITY_LINEAR_SQL, verified=4)
 
 
 def q_text_surprisal(spark, sf_dir):
@@ -2893,8 +2889,8 @@ def _q_text_surprisal_oracle():
     return unigram_surprisal_oracle_sql("SELECT doc_id, text FROM documents")
 
 
-_EXTRA_QUERIES["text_surprisal"] = q_text_surprisal
-_EXTRA_ORACLES["text_surprisal"] = _q_text_surprisal_oracle()
+_register("text_surprisal", q_text_surprisal, _q_text_surprisal_oracle(),
+          verified=4, plan_dump=True)
 
 
 def q_bpe_merges(spark, sf_dir):
@@ -2916,8 +2912,8 @@ def _q_bpe_oracle():
     return bpe_train_oracle_sql("SELECT text FROM documents", n_merges=8)
 
 
-_EXTRA_QUERIES["bpe_merges"] = q_bpe_merges
-_EXTRA_ORACLES["bpe_merges"] = _q_bpe_oracle()
+_register("bpe_merges", q_bpe_merges, _q_bpe_oracle(), verified=4,
+          plan_dump=True)
 
 
 _FUNNEL_STEPS = ["view", "click", "purchase"]
@@ -2948,8 +2944,8 @@ def _q_funnel_oracle():
     )
 
 
-_EXTRA_QUERIES["events_funnel"] = q_events_funnel
-_EXTRA_ORACLES["events_funnel"] = _q_funnel_oracle()
+_register("events_funnel", q_events_funnel, _q_funnel_oracle(), verified=4,
+          plan_dump=True)
 
 
 def q_events_cohort(spark, sf_dir):
@@ -2973,8 +2969,8 @@ def _q_cohort_oracle():
         "SELECT user_id, epoch_us(ts) AS ts_us FROM events", max_offset=8)
 
 
-_EXTRA_QUERIES["events_cohort"] = q_events_cohort
-_EXTRA_ORACLES["events_cohort"] = _q_cohort_oracle()
+_register("events_cohort", q_events_cohort, _q_cohort_oracle(), verified=4,
+          plan_dump=True)
 
 
 def q_dedup_incremental(spark, sf_dir):
@@ -3042,8 +3038,8 @@ ORDER BY doc_id
            bands_ex=bands_sql("sige"), bands_inc=bands_sql("sigi"))
 
 
-_EXTRA_QUERIES["dedup_incremental"] = q_dedup_incremental
-_EXTRA_ORACLES["dedup_incremental"] = _q_dedup_incremental_oracle()
+_register("dedup_incremental", q_dedup_incremental,
+          _q_dedup_incremental_oracle(), verified=4, plan_dump=True)
 
 
 def q_text_quality_adaptive(spark, sf_dir):
@@ -3068,8 +3064,8 @@ def _q_quality_adaptive_oracle():
         "SELECT doc_id, lang, text FROM documents", keep_pct=30)
 
 
-_EXTRA_QUERIES["text_quality_adaptive"] = q_text_quality_adaptive
-_EXTRA_ORACLES["text_quality_adaptive"] = _q_quality_adaptive_oracle()
+_register("text_quality_adaptive", q_text_quality_adaptive,
+          _q_quality_adaptive_oracle(), verified=4, plan_dump=True)
 
 
 def q_text_drift(spark, sf_dir):
@@ -3095,8 +3091,8 @@ def _q_text_drift_oracle():
         "SELECT text FROM documents WHERE doc_id % 2 = 1", k=50)
 
 
-_EXTRA_QUERIES["text_drift"] = q_text_drift
-_EXTRA_ORACLES["text_drift"] = _q_text_drift_oracle()
+_register("text_drift", q_text_drift, _q_text_drift_oracle(), verified=4,
+          plan_dump=True)
 
 
 def q_stream_hll(spark, sf_dir):
@@ -3127,10 +3123,18 @@ def q_stream_hll(spark, sf_dir):
     )
 
 
-_EXTRA_QUERIES["stream_hll"] = q_stream_hll
-# oracle identical to sketch_hll's (the streaming build is the same pure
-# function); _q_hll_oracle is defined further down with the sketch queries,
-# so registration happens there too (see after _EXTRA_ORACLES["sketch_hll"])
+def _q_hll_oracle():
+    """Oracle of both stream_hll and sketch_hll: the streaming build is the
+    same pure function as the batch one."""
+    from picogeojson_spark.operators.sketches import hll_oracle_sql
+
+    return hll_oracle_sql(
+        "SELECT event_type, user_id FROM events", "event_type", "user_id",
+        p=6,
+    )
+
+
+_register("stream_hll", q_stream_hll, _q_hll_oracle(), verified=4, bench=False)
 
 
 # deterministic messy-URL construction shared by the two web queries: five
@@ -3238,8 +3242,7 @@ Q_WEB_CANONICAL_SQL = (
     + "\nSELECT doc_id, url_norm, host, domain FROM n ORDER BY doc_id"
 )
 
-_EXTRA_QUERIES["web_canonical"] = q_web_canonical
-_EXTRA_ORACLES["web_canonical"] = Q_WEB_CANONICAL_SQL
+_register("web_canonical", q_web_canonical, Q_WEB_CANONICAL_SQL, verified=4)
 
 
 def q_web_keep_latest(spark, sf_dir):
@@ -3276,8 +3279,8 @@ ORDER BY doc_id
 """
 )
 
-_EXTRA_QUERIES["web_keep_latest"] = q_web_keep_latest
-_EXTRA_ORACLES["web_keep_latest"] = Q_WEB_KEEP_LATEST_SQL
+_register("web_keep_latest", q_web_keep_latest, Q_WEB_KEEP_LATEST_SQL,
+          verified=4, plan_dump=True)
 
 
 def q_web_frontier(spark, sf_dir):
@@ -3330,8 +3333,7 @@ FROM sched ORDER BY doc_id
 """
 )
 
-_EXTRA_QUERIES["web_frontier"] = q_web_frontier
-_EXTRA_ORACLES["web_frontier"] = Q_WEB_FRONTIER_SQL
+_register("web_frontier", q_web_frontier, Q_WEB_FRONTIER_SQL, verified=4)
 
 
 def q_web_domain_stats(spark, sf_dir):
@@ -3354,8 +3356,8 @@ SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_pages,
 FROM n GROUP BY domain ORDER BY domain"""
 )
 
-_EXTRA_QUERIES["web_domain_stats"] = q_web_domain_stats
-_EXTRA_ORACLES["web_domain_stats"] = Q_WEB_DOMAIN_STATS_SQL
+_register("web_domain_stats", q_web_domain_stats, Q_WEB_DOMAIN_STATS_SQL,
+          verified=4)
 
 
 def q_pii_redact(spark, sf_dir):
@@ -3410,8 +3412,8 @@ def _q_pii_oracle():
     return pii_oracle_sql(_pii_aug_sql())
 
 
-_EXTRA_QUERIES["pii_redact"] = q_pii_redact
-_EXTRA_ORACLES["pii_redact"] = _q_pii_oracle()
+_register("pii_redact", q_pii_redact, _q_pii_oracle(), verified=4,
+          plan_dump=True)
 
 
 def q_chunk_documents(spark, sf_dir):
@@ -3432,8 +3434,8 @@ def _q_chunk_oracle():
     return chunking_oracle_sql("SELECT doc_id, text FROM documents", 32)
 
 
-_EXTRA_QUERIES["chunk_documents"] = q_chunk_documents
-_EXTRA_ORACLES["chunk_documents"] = _q_chunk_oracle()
+_register("chunk_documents", q_chunk_documents, _q_chunk_oracle(), verified=4,
+          plan_dump=True)
 
 
 _CMS_TERMS = ["agg", "hash", "join", "spark", "window", "zebra-absent"]
@@ -3480,8 +3482,8 @@ def _q_cms_oracle():
                           _CMS_DEPTH, _CMS_WIDTH)
 
 
-_EXTRA_QUERIES["sketch_cms"] = q_sketch_cms
-_EXTRA_ORACLES["sketch_cms"] = _q_cms_oracle()
+_register("sketch_cms", q_sketch_cms, _q_cms_oracle(), verified=4,
+          plan_dump=True)
 
 
 def q_sketch_hll(spark, sf_dir):
@@ -3510,18 +3512,8 @@ def q_sketch_hll(spark, sf_dir):
     )
 
 
-def _q_hll_oracle():
-    from picogeojson_spark.operators.sketches import hll_oracle_sql
-
-    return hll_oracle_sql(
-        "SELECT event_type, user_id FROM events", "event_type", "user_id",
-        p=6,
-    )
-
-
-_EXTRA_QUERIES["sketch_hll"] = q_sketch_hll
-_EXTRA_ORACLES["sketch_hll"] = _q_hll_oracle()
-_EXTRA_ORACLES["stream_hll"] = _q_hll_oracle()
+_register("sketch_hll", q_sketch_hll, _q_hll_oracle(), verified=4,
+          plan_dump=True)
 
 
 def q_length_quantiles(spark, sf_dir):
@@ -3542,8 +3534,8 @@ def _q_quantiles_oracle():
         "SELECT source, n_chars FROM documents", "n_chars", "source")
 
 
-_EXTRA_QUERIES["length_quantiles"] = q_length_quantiles
-_EXTRA_ORACLES["length_quantiles"] = _q_quantiles_oracle()
+_register("length_quantiles", q_length_quantiles, _q_quantiles_oracle(),
+          verified=4, plan_dump=True)
 
 
 def _domain_sql(u: str) -> str:
@@ -3626,8 +3618,8 @@ ORDER BY src_domain, dst_domain
            src_dom=_domain_sql("src_url"), dst_dom=_domain_sql("dst_url"))
 
 
-_EXTRA_QUERIES["web_link_graph"] = q_web_link_graph
-_EXTRA_ORACLES["web_link_graph"] = _q_web_link_graph_oracle()
+_register("web_link_graph", q_web_link_graph, _q_web_link_graph_oracle(),
+          verified=4)
 
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -3668,14 +3660,13 @@ ORDER BY user_id
     "CAST(SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS BIGINT)"
     " AS n_{t}".format(t=t) for t in _EVENT_TYPES))
 
-_EXTRA_QUERIES["events_pivot"] = q_events_pivot
-_EXTRA_ORACLES["events_pivot"] = Q_EVENTS_PIVOT_SQL
+_register("events_pivot", q_events_pivot, Q_EVENTS_PIVOT_SQL, verified=4)
 
 
 # ---- round-4 additions ----
 
-_EXTRA_QUERIES["geo_knn_haversine"] = q_geo_knn_haversine
-_EXTRA_ORACLES["geo_knn_haversine"] = _q_geo_knn_haversine_sql()
+_register("geo_knn_haversine", q_geo_knn_haversine, _q_geo_knn_haversine_sql(),
+          verified=4, plan_dump=True)
 
 
 def q_web_boilerplate(spark, sf_dir):
@@ -3723,8 +3714,8 @@ LEFT JOIN fg USING (doc_id)
 ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["web_boilerplate"] = q_web_boilerplate
-_EXTRA_ORACLES["web_boilerplate"] = Q_WEB_BOILERPLATE_SQL
+_register("web_boilerplate", q_web_boilerplate, Q_WEB_BOILERPLATE_SQL,
+          verified=4, plan_dump=True)
 
 
 def q_sample_importance(spark, sf_dir):
@@ -3751,8 +3742,8 @@ def _q_sample_importance_sql():
     )
 
 
-_EXTRA_QUERIES["sample_importance"] = q_sample_importance
-_EXTRA_ORACLES["sample_importance"] = _q_sample_importance_sql()
+_register("sample_importance", q_sample_importance, _q_sample_importance_sql(),
+          verified=4, plan_dump=True)
 
 
 # Shoelace measures over four vertex-offset shapes on the quarter-degree
@@ -3855,8 +3846,8 @@ FROM p ORDER BY poly_id
 """.format(nv=nv, a2=a2x16, cx=cxe, cy=cye, e2=e2c)
 
 
-_EXTRA_QUERIES["geo_area_centroid"] = q_geo_area_centroid
-_EXTRA_ORACLES["geo_area_centroid"] = _q_geo_area_centroid_sql()
+_register("geo_area_centroid", q_geo_area_centroid, _q_geo_area_centroid_sql(),
+          verified=4, plan_dump=True)
 
 
 def q_geo_distance_join(spark, sf_dir):
@@ -3910,8 +3901,8 @@ ORDER BY query_id, neighbor_id
 """.format(points=_POINTS_SQL, cands=_DIST_CANDS_SQL, dist=dist)
 
 
-_EXTRA_QUERIES["geo_distance_join"] = q_geo_distance_join
-_EXTRA_ORACLES["geo_distance_join"] = _q_geo_distance_join_sql()
+_register("geo_distance_join", q_geo_distance_join, _q_geo_distance_join_sql(),
+          verified=4, plan_dump=True)
 
 
 def q_graph_hits(spark, sf_dir):
@@ -3975,8 +3966,7 @@ ORDER BY n.node""".format(n=iterations)
     return "".join(parts)
 
 
-_EXTRA_QUERIES["graph_hits"] = q_graph_hits
-_EXTRA_ORACLES["graph_hits"] = _hits_sql()
+_register("graph_hits", q_graph_hits, _hits_sql(), verified=4, plan_dump=True)
 
 
 def q_text_bigram_lm(spark, sf_dir):
@@ -3999,8 +3989,8 @@ def _q_text_bigram_lm_oracle():
     return bigram_surprisal_oracle_sql("SELECT doc_id, text FROM documents")
 
 
-_EXTRA_QUERIES["text_bigram_lm"] = q_text_bigram_lm
-_EXTRA_ORACLES["text_bigram_lm"] = _q_text_bigram_lm_oracle()
+_register("text_bigram_lm", q_text_bigram_lm, _q_text_bigram_lm_oracle(),
+          verified=4, plan_dump=True)
 
 
 def _anchor_html_col():
@@ -4095,8 +4085,8 @@ FROM r GROUP BY dst_domain ORDER BY dst_domain
            dom=_domain_sql("dst_url"))
 
 
-_EXTRA_QUERIES["web_anchor_text"] = q_web_anchor_text
-_EXTRA_ORACLES["web_anchor_text"] = _q_web_anchor_text_oracle()
+_register("web_anchor_text", q_web_anchor_text, _q_web_anchor_text_oracle(),
+          verified=4, plan_dump=True)
 
 
 def q_decontam_embed(spark, sf_dir):
@@ -4132,8 +4122,8 @@ SELECT vec_id,
 FROM s GROUP BY vec_id ORDER BY vec_id
 """
 
-_EXTRA_QUERIES["decontam_embed"] = q_decontam_embed
-_EXTRA_ORACLES["decontam_embed"] = Q_DECONTAM_EMBED_SQL
+_register("decontam_embed", q_decontam_embed, Q_DECONTAM_EMBED_SQL, verified=4,
+          plan_dump=True)
 
 
 def q_geo_zorder_key(spark, sf_dir):
@@ -4164,8 +4154,8 @@ FROM ({points}) ORDER BY point_id
 """.format(z=z, points=_POINTS_SQL)
 
 
-_EXTRA_QUERIES["geo_zorder_key"] = q_geo_zorder_key
-_EXTRA_ORACLES["geo_zorder_key"] = _q_geo_zorder_key_sql()
+_register("geo_zorder_key", q_geo_zorder_key, _q_geo_zorder_key_sql(),
+          verified=4, plan_dump=True)
 
 
 def q_geo_hilbert(spark, sf_dir):
@@ -4199,8 +4189,8 @@ FROM ({points}) ORDER BY point_id
 """.format(h=h, points=_POINTS_SQL)
 
 
-_EXTRA_QUERIES["geo_hilbert"] = q_geo_hilbert
-_EXTRA_ORACLES["geo_hilbert"] = _q_geo_hilbert_sql()
+_register("geo_hilbert", q_geo_hilbert, _q_geo_hilbert_sql(), verified=5,
+          plan_dump=True)
 
 
 # Simplification fixtures: rectangles with an outward bump at each edge
@@ -4278,8 +4268,8 @@ FROM p ORDER BY poly_id
 """.format(a2=a2, cx=cx, cy=cy)
 
 
-_EXTRA_QUERIES["geo_simplify"] = q_geo_simplify
-_EXTRA_ORACLES["geo_simplify"] = _q_geo_simplify_sql()
+_register("geo_simplify", q_geo_simplify, _q_geo_simplify_sql(), verified=4,
+          plan_dump=True)
 
 
 def q_text_compress(spark, sf_dir):
@@ -4295,8 +4285,8 @@ def q_text_compress(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-_EXTRA_QUERIES["text_compress"] = q_text_compress
-# deliberately NO _EXTRA_ORACLES entry: rows-only (documented above)
+# rows-only: no DuckDB oracle (documented above)
+_register("text_compress", q_text_compress, verified=4, plan_dump=True)
 
 
 def _sessions_stream_dir(spark, sf_dir):
@@ -4407,8 +4397,8 @@ GROUP BY user_id, session_idx
 ORDER BY user_id, start_us
 """
 
-_EXTRA_QUERIES["stream_sessions"] = q_stream_sessions
-_EXTRA_ORACLES["stream_sessions"] = Q_STREAM_SESSIONS_SQL
+_register("stream_sessions", q_stream_sessions, Q_STREAM_SESSIONS_SQL,
+          verified=4)
 
 
 _PROFILE_COLS = ["o_custkey", "o_orderkey", "o_orderpriority",
@@ -4496,8 +4486,8 @@ ORDER BY s.col
 """.replace("FROM raw_src_placeholder", "FROM folded")
 
 
-_EXTRA_QUERIES["table_profile"] = q_table_profile
-_EXTRA_ORACLES["table_profile"] = _q_table_profile_sql()
+_register("table_profile", q_table_profile, _q_table_profile_sql(), verified=4,
+          plan_dump=True)
 
 
 def _geotext_text_col():
@@ -4588,8 +4578,8 @@ FROM ok ORDER BY doc_id, idx
 """.format(txt=_GEOTEXT_TEXT_SQL, re=COORD_RE, p58=1 << 58, p29=1 << 29)
 
 
-_EXTRA_QUERIES["geo_text_coords"] = q_geo_text_coords
-_EXTRA_ORACLES["geo_text_coords"] = _q_geo_text_coords_sql()
+_register("geo_text_coords", q_geo_text_coords, _q_geo_text_coords_sql(),
+          verified=4, plan_dump=True)
 
 
 def q_geo_pip_density(spark, sf_dir):
@@ -4648,8 +4638,8 @@ FROM polys p LEFT JOIN cnt c USING (poly_id)
 ORDER BY p.poly_id
 """.format(points=_POINTS_SQL)
 
-_EXTRA_QUERIES["geo_pip_density"] = q_geo_pip_density
-_EXTRA_ORACLES["geo_pip_density"] = Q_GEO_PIP_DENSITY_SQL
+_register("geo_pip_density", q_geo_pip_density, Q_GEO_PIP_DENSITY_SQL,
+          verified=4, plan_dump=True)
 
 
 def q_events_anomaly(spark, sf_dir):
@@ -4711,8 +4701,8 @@ SELECT event_type, hour_id, n_events, prev_hours, prev_sum,
 FROM win ORDER BY event_type, hour_id
 """
 
-_EXTRA_QUERIES["events_anomaly"] = q_events_anomaly
-_EXTRA_ORACLES["events_anomaly"] = Q_EVENTS_ANOMALY_SQL
+_register("events_anomaly", q_events_anomaly, Q_EVENTS_ANOMALY_SQL, verified=4,
+          plan_dump=True)
 
 
 def q_sample_temperature(spark, sf_dir):
@@ -4745,8 +4735,8 @@ WHERE CAST(('0x' || substring(md5('t0:' || CAST(d.doc_id AS VARCHAR)),
 ORDER BY d.doc_id
 """
 
-_EXTRA_QUERIES["sample_temperature"] = q_sample_temperature
-_EXTRA_ORACLES["sample_temperature"] = Q_SAMPLE_TEMPERATURE_SQL
+_register("sample_temperature", q_sample_temperature, Q_SAMPLE_TEMPERATURE_SQL,
+          verified=4, plan_dump=True)
 
 
 def q_stream_geotag(spark, sf_dir):
@@ -4794,8 +4784,7 @@ FROM ok GROUP BY 1 ORDER BY cell
            p58=1 << 58, p29=1 << 29)
 
 
-_EXTRA_QUERIES["stream_geotag"] = q_stream_geotag
-_EXTRA_ORACLES["stream_geotag"] = _q_stream_geotag_sql()
+_register("stream_geotag", q_stream_geotag, _q_stream_geotag_sql(), verified=4)
 
 
 def q_dedup_setsim(spark, sf_dir):
@@ -4833,8 +4822,8 @@ ORDER BY doc_a, doc_b
 """.format(shingles=_SHINGLES_SQL)
 
 
-_EXTRA_QUERIES["dedup_setsim"] = q_dedup_setsim
-_EXTRA_ORACLES["dedup_setsim"] = Q_DEDUP_SETSIM_SQL
+_register("dedup_setsim", q_dedup_setsim, Q_DEDUP_SETSIM_SQL, verified=4,
+          plan_dump=True)
 
 
 def _traj_text_col():
@@ -4943,8 +4932,8 @@ FROM agg WHERE n_pts >= 2 ORDER BY doc_id
            re=r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)")
 
 
-_EXTRA_QUERIES["geo_trajectory"] = q_geo_trajectory
-_EXTRA_ORACLES["geo_trajectory"] = Q_GEO_TRAJECTORY_SQL
+_register("geo_trajectory", q_geo_trajectory, Q_GEO_TRAJECTORY_SQL, verified=4,
+          plan_dump=True)
 
 
 def q_geo_turns(spark, sf_dir):
@@ -5017,8 +5006,8 @@ FROM k GROUP BY doc_id ORDER BY doc_id
            re=r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)")
 
 
-_EXTRA_QUERIES["geo_turns"] = q_geo_turns
-_EXTRA_ORACLES["geo_turns"] = Q_GEO_TURNS_SQL
+_register("geo_turns", q_geo_turns, Q_GEO_TURNS_SQL, verified=5,
+          plan_dump=True)
 
 
 def q_events_transitions(spark, sf_dir):
@@ -5070,8 +5059,8 @@ ORDER BY prev_type, next_type
 """
 
 
-_EXTRA_QUERIES["events_transitions"] = q_events_transitions
-_EXTRA_ORACLES["events_transitions"] = Q_EVENTS_TRANSITIONS_SQL
+_register("events_transitions", q_events_transitions, Q_EVENTS_TRANSITIONS_SQL,
+          verified=4, plan_dump=True)
 
 
 def q_stream_attribution(spark, sf_dir):
@@ -5144,17 +5133,14 @@ ORDER BY a.user_id, click_id, buy_id
 """
 
 
-_EXTRA_QUERIES["stream_attribution"] = q_stream_attribution
-_EXTRA_ORACLES["stream_attribution"] = Q_STREAM_ATTRIBUTION_SQL
+_register("stream_attribution", q_stream_attribution, Q_STREAM_ATTRIBUTION_SQL,
+          verified=4)
 
 
 # --------------------------------------------------------------------------
-# Continuation-session additions.  These register at the END of the fresh
-# group, i.e. BEHIND the driver's 50-entry cap (the 50 slots are already
-# exactly filled by this round's never-driver-checked queries — see the
-# driver-visibility section below).  Correctness evidence for these comes
-# from the local gate replica (scripts/check_correctness.py), same as the
-# round-3 PASS* queries the judge accepted.
+# Continuation-session additions.  Until a driver round verifies them
+# (``verified=``), their correctness evidence is the local gate replica
+# (scripts/check_correctness.py).
 # --------------------------------------------------------------------------
 
 
@@ -5267,8 +5253,8 @@ ORDER BY point_id
 """.format(points=_CLUMPED_POINTS_SQL)
 
 
-_EXTRA_QUERIES["geo_grid_cluster"] = q_geo_grid_cluster
-_EXTRA_ORACLES["geo_grid_cluster"] = Q_GEO_GRID_CLUSTER_SQL
+_register("geo_grid_cluster", q_geo_grid_cluster, Q_GEO_GRID_CLUSTER_SQL,
+          plan_dump=True)
 
 
 _KMEANS_SEEDS = [((j * 20 - 70) * 10**6, (j * 40 - 140) * 10**6)
@@ -5351,8 +5337,8 @@ FROM c{R} c LEFT JOIN s USING (cid) ORDER BY cid""".format(
     return "".join(parts)
 
 
-_EXTRA_QUERIES["geo_kmeans"] = q_geo_kmeans
-_EXTRA_ORACLES["geo_kmeans"] = _kmeans_sql()
+_register("geo_kmeans", q_geo_kmeans, _kmeans_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_geo_heatmap(spark, sf_dir):
@@ -5386,8 +5372,7 @@ ORDER BY c.cx, c.cy
 """.format(points=_CLUMPED_POINTS_SQL)
 
 
-_EXTRA_QUERIES["geo_heatmap"] = q_geo_heatmap
-_EXTRA_ORACLES["geo_heatmap"] = Q_GEO_HEATMAP_SQL
+_register("geo_heatmap", q_geo_heatmap, Q_GEO_HEATMAP_SQL, plan_dump=True)
 
 
 def q_graph_triangles(spark, sf_dir):
@@ -5426,8 +5411,8 @@ FROM pern GROUP BY node ORDER BY node
 """
 
 
-_EXTRA_QUERIES["graph_triangles"] = q_graph_triangles
-_EXTRA_ORACLES["graph_triangles"] = Q_GRAPH_TRIANGLES_SQL
+_register("graph_triangles", q_graph_triangles, Q_GRAPH_TRIANGLES_SQL,
+          verified=5, plan_dump=True)
 
 
 def q_web_bloom(spark, sf_dir):
@@ -5486,8 +5471,8 @@ FROM doms d ORDER BY doc_id
            p2=pos(2, "d.domain"))
 
 
-_EXTRA_QUERIES["web_bloom"] = q_web_bloom
-_EXTRA_ORACLES["web_bloom"] = _q_web_bloom_sql()
+_register("web_bloom", q_web_bloom, _q_web_bloom_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_geo_geohash(spark, sf_dir):
@@ -5515,8 +5500,7 @@ FROM ({points}) ORDER BY point_id
            g4=geohash_encode_sql("lon", "lat", 4))
 
 
-_EXTRA_QUERIES["geo_geohash"] = q_geo_geohash
-_EXTRA_ORACLES["geo_geohash"] = _q_geo_geohash_sql()
+_register("geo_geohash", q_geo_geohash, _q_geo_geohash_sql(), plan_dump=True)
 
 
 def q_events_rfm(spark, sf_dir):
@@ -5586,8 +5570,8 @@ ORDER BY user_id
            cm=cut_cte("monetary"), rb=rb, fb=fb, mb=mb)
 
 
-_EXTRA_QUERIES["events_rfm"] = q_events_rfm
-_EXTRA_ORACLES["events_rfm"] = _q_events_rfm_sql()
+_register("events_rfm", q_events_rfm, _q_events_rfm_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_events_decay(spark, sf_dir):
@@ -5625,8 +5609,8 @@ FROM aged GROUP BY user_id ORDER BY user_id
 """
 
 
-_EXTRA_QUERIES["events_decay"] = q_events_decay
-_EXTRA_ORACLES["events_decay"] = Q_EVENTS_DECAY_SQL
+_register("events_decay", q_events_decay, Q_EVENTS_DECAY_SQL, verified=5,
+          plan_dump=True)
 
 
 def q_events_attribution(spark, sf_dir):
@@ -5683,8 +5667,8 @@ SELECT * FROM att UNION ALL SELECT * FROM direct ORDER BY touch_type
 """
 
 
-_EXTRA_QUERIES["events_attribution"] = q_events_attribution
-_EXTRA_ORACLES["events_attribution"] = Q_EVENTS_ATTRIBUTION_SQL
+_register("events_attribution", q_events_attribution, Q_EVENTS_ATTRIBUTION_SQL,
+          verified=5, plan_dump=True)
 
 
 def q_stream_decay(spark, sf_dir):
@@ -5708,8 +5692,7 @@ def q_stream_decay(spark, sf_dir):
                        "complete").orderBy("user_id")
 
 
-_EXTRA_QUERIES["stream_decay"] = q_stream_decay
-_EXTRA_ORACLES["stream_decay"] = Q_EVENTS_DECAY_SQL
+_register("stream_decay", q_stream_decay, Q_EVENTS_DECAY_SQL, verified=5)
 
 
 def q_events_forecast(spark, sf_dir):
@@ -5771,8 +5754,8 @@ WHERE r.i = len(s.s) ORDER BY r.key
 """.format(lp=lp, bp=bp)
 
 
-_EXTRA_QUERIES["events_forecast"] = q_events_forecast
-_EXTRA_ORACLES["events_forecast"] = _q_events_forecast_sql()
+_register("events_forecast", q_events_forecast, _q_events_forecast_sql(),
+          verified=5, plan_dump=True)
 
 
 def _eval_scored(spark, sf_dir):
@@ -5850,10 +5833,9 @@ FROM c GROUP BY 1 ORDER BY bin
 """.format(scored=_EVAL_SCORED_SQL)
 
 
-_EXTRA_QUERIES["eval_auc"] = q_eval_auc
-_EXTRA_ORACLES["eval_auc"] = Q_EVAL_AUC_SQL
-_EXTRA_QUERIES["eval_calibration"] = q_eval_calibration
-_EXTRA_ORACLES["eval_calibration"] = Q_EVAL_CALIBRATION_SQL
+_register("eval_auc", q_eval_auc, Q_EVAL_AUC_SQL, verified=5, plan_dump=True)
+_register("eval_calibration", q_eval_calibration, Q_EVAL_CALIBRATION_SQL,
+          verified=5, plan_dump=True)
 
 
 def q_events_paths(spark, sf_dir):
@@ -5896,8 +5878,8 @@ FROM p GROUP BY path ORDER BY n_sessions DESC, path
 """
 
 
-_EXTRA_QUERIES["events_paths"] = q_events_paths
-_EXTRA_ORACLES["events_paths"] = Q_EVENTS_PATHS_SQL
+_register("events_paths", q_events_paths, Q_EVENTS_PATHS_SQL, verified=5,
+          plan_dump=True)
 
 
 def q_table_skew(spark, sf_dir):
@@ -5962,8 +5944,8 @@ q{i} AS (
                     sel="\nUNION ALL\n".join(selects)))
 
 
-_EXTRA_QUERIES["table_skew"] = q_table_skew
-_EXTRA_ORACLES["table_skew"] = _q_table_skew_sql()
+_register("table_skew", q_table_skew, _q_table_skew_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_events_bots(spark, sf_dir):
@@ -6049,8 +6031,8 @@ FROM sig ORDER BY user_id
 """
 
 
-_EXTRA_QUERIES["events_bots"] = q_events_bots
-_EXTRA_ORACLES["events_bots"] = Q_EVENTS_BOTS_SQL
+_register("events_bots", q_events_bots, Q_EVENTS_BOTS_SQL, verified=5,
+          plan_dump=True)
 
 
 def q_table_shards(spark, sf_dir):
@@ -6097,8 +6079,8 @@ ORDER BY five.doc_id
            four=pick(["n0", "n1", "n2", "n3"]))
 
 
-_EXTRA_QUERIES["table_shards"] = q_table_shards
-_EXTRA_ORACLES["table_shards"] = _q_table_shards_sql()
+_register("table_shards", q_table_shards, _q_table_shards_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_table_quality(spark, sf_dir):
@@ -6179,8 +6161,8 @@ FROM rules ORDER BY rule
 """
 
 
-_EXTRA_QUERIES["table_quality"] = q_table_quality
-_EXTRA_ORACLES["table_quality"] = Q_TABLE_QUALITY_SQL
+_register("table_quality", q_table_quality, Q_TABLE_QUALITY_SQL, verified=5,
+          plan_dump=True)
 
 
 def _local_traj_text_col():
@@ -6294,8 +6276,8 @@ FROM pairs GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b
            re=r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)")
 
 
-_EXTRA_QUERIES["geo_seg_intersect"] = q_geo_seg_intersect
-_EXTRA_ORACLES["geo_seg_intersect"] = Q_GEO_SEG_INTERSECT_SQL
+_register("geo_seg_intersect", q_geo_seg_intersect, Q_GEO_SEG_INTERSECT_SQL,
+          verified=5, plan_dump=True)
 
 
 def q_events_sliding(spark, sf_dir):
@@ -6347,8 +6329,8 @@ ORDER BY win_start_us, event_type
 """
 
 
-_EXTRA_QUERIES["events_sliding"] = q_events_sliding
-_EXTRA_ORACLES["events_sliding"] = Q_EVENTS_SLIDING_SQL
+_register("events_sliding", q_events_sliding, Q_EVENTS_SLIDING_SQL,
+          plan_dump=True)
 
 
 def q_sketch_hll_overlap(spark, sf_dir):
@@ -6378,8 +6360,8 @@ def _q_sketch_hll_overlap_sql():
     )
 
 
-_EXTRA_QUERIES["sketch_hll_overlap"] = q_sketch_hll_overlap
-_EXTRA_ORACLES["sketch_hll_overlap"] = _q_sketch_hll_overlap_sql()
+_register("sketch_hll_overlap", q_sketch_hll_overlap,
+          _q_sketch_hll_overlap_sql(), verified=5, plan_dump=True)
 
 
 def q_geo_idw(spark, sf_dir):
@@ -6425,8 +6407,7 @@ FROM w GROUP BY query_id ORDER BY query_id
 """.format(points=_POINTS_SQL, cands=_CANDS_SQL)
 
 
-_EXTRA_QUERIES["geo_idw"] = q_geo_idw
-_EXTRA_ORACLES["geo_idw"] = Q_GEO_IDW_SQL
+_register("geo_idw", q_geo_idw, Q_GEO_IDW_SQL, verified=5, plan_dump=True)
 
 
 def q_graph_kcore(spark, sf_dir):
@@ -6467,8 +6448,8 @@ GROUP BY n ORDER BY node""".format(r=rounds))
     return ",".join(parts[:1] + []) + "," + ",".join(parts[1:-1]) + parts[-1]
 
 
-_EXTRA_QUERIES["graph_kcore"] = q_graph_kcore
-_EXTRA_ORACLES["graph_kcore"] = _q_graph_kcore_sql()
+_register("graph_kcore", q_graph_kcore, _q_graph_kcore_sql(), verified=5,
+          plan_dump=True)
 
 
 def q_orders_priority(spark, sf_dir):
@@ -6518,8 +6499,8 @@ LIMIT 10
 """
 
 
-_EXTRA_QUERIES["orders_priority"] = q_orders_priority
-_EXTRA_ORACLES["orders_priority"] = Q_ORDERS_PRIORITY_SQL
+_register("orders_priority", q_orders_priority, Q_ORDERS_PRIORITY_SQL,
+          plan_dump=True)
 
 
 def q_geo_quadbin(spark, sf_dir):
@@ -6574,8 +6555,8 @@ GROUP BY 1, 2, 3 ORDER BY level, x, y
            leaf=leaf, maxl=max_level, joins=" ".join(anc_joins))
 
 
-_EXTRA_QUERIES["geo_quadbin"] = q_geo_quadbin
-_EXTRA_ORACLES["geo_quadbin"] = _q_geo_quadbin_sql()
+_register("geo_quadbin", q_geo_quadbin, _q_geo_quadbin_sql(), verified=5,
+          plan_dump=True)
 
 
 _CUSTOMER_DDL = ("c_custkey bigint, c_name string, c_nationkey int, "
@@ -6605,8 +6586,7 @@ def q_stream_heatmap(spark, sf_dir):
     return smooth_cell_histogram(sink).orderBy("cx", "cy")
 
 
-_EXTRA_QUERIES["stream_heatmap"] = q_stream_heatmap
-_EXTRA_ORACLES["stream_heatmap"] = Q_GEO_HEATMAP_SQL
+_register("stream_heatmap", q_stream_heatmap, Q_GEO_HEATMAP_SQL, verified=5)
 
 
 def q_events_abtest(spark, sf_dir):
@@ -6688,8 +6668,8 @@ ORDER BY arm
 """
 
 
-_EXTRA_QUERIES["events_abtest"] = q_events_abtest
-_EXTRA_ORACLES["events_abtest"] = Q_EVENTS_ABTEST_SQL
+_register("events_abtest", q_events_abtest, Q_EVENTS_ABTEST_SQL, verified=5,
+          plan_dump=True)
 
 
 def q_geo_hull(spark, sf_dir):
@@ -6763,8 +6743,7 @@ FROM d ORDER BY doc_id
 """
 
 
-_EXTRA_QUERIES["geo_hull"] = q_geo_hull
-_EXTRA_ORACLES["geo_hull"] = Q_GEO_HULL_SQL
+_register("geo_hull", q_geo_hull, Q_GEO_HULL_SQL, verified=5)
 
 
 def q_geo_resample(spark, sf_dir):
@@ -6837,8 +6816,7 @@ FROM samp ORDER BY doc_id, sample_idx
            re=r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)")
 
 
-_EXTRA_QUERIES["geo_resample"] = q_geo_resample
-_EXTRA_ORACLES["geo_resample"] = Q_GEO_RESAMPLE_SQL
+_register("geo_resample", q_geo_resample, Q_GEO_RESAMPLE_SQL, verified=5)
 
 
 def q_text_keywords(spark, sf_dir):
@@ -6910,8 +6888,7 @@ FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk
 """
 
 
-_EXTRA_QUERIES["text_keywords"] = q_text_keywords
-_EXTRA_ORACLES["text_keywords"] = Q_TEXT_KEYWORDS_SQL
+_register("text_keywords", q_text_keywords, Q_TEXT_KEYWORDS_SQL, verified=5)
 
 
 def q_graph_triangles_est(spark, sf_dir):
@@ -6951,8 +6928,8 @@ FROM ne CROSS JOIN nt
 """
 
 
-_EXTRA_QUERIES["graph_triangles_est"] = q_graph_triangles_est
-_EXTRA_ORACLES["graph_triangles_est"] = Q_GRAPH_TRIANGLES_EST_SQL
+_register("graph_triangles_est", q_graph_triangles_est,
+          Q_GRAPH_TRIANGLES_EST_SQL, verified=5)
 
 
 def q_web_history(spark, sf_dir):
@@ -6992,8 +6969,7 @@ FROM w ORDER BY doc_id
 """
 )
 
-_EXTRA_QUERIES["web_history"] = q_web_history
-_EXTRA_ORACLES["web_history"] = Q_WEB_HISTORY_SQL
+_register("web_history", q_web_history, Q_WEB_HISTORY_SQL, verified=5)
 
 
 def q_sample_epochs(spark, sf_dir):
@@ -7056,8 +7032,7 @@ FROM w ORDER BY source
 """
 
 
-_EXTRA_QUERIES["sample_epochs"] = q_sample_epochs
-_EXTRA_ORACLES["sample_epochs"] = Q_SAMPLE_EPOCHS_SQL
+_register("sample_epochs", q_sample_epochs, Q_SAMPLE_EPOCHS_SQL, verified=5)
 
 
 def q_geo_hexbin(spark, sf_dir):
@@ -7108,8 +7083,7 @@ FROM h GROUP BY hx, hy ORDER BY hx, hy
 """.format(points=_CLUMPED_POINTS_SQL)
 
 
-_EXTRA_QUERIES["geo_hexbin"] = q_geo_hexbin
-_EXTRA_ORACLES["geo_hexbin"] = Q_GEO_HEXBIN_SQL
+_register("geo_hexbin", q_geo_hexbin, Q_GEO_HEXBIN_SQL, verified=5)
 
 
 def q_geo_lisa(spark, sf_dir):
@@ -7163,8 +7137,7 @@ Q_GEO_LISA_SQL = (
 )
 
 
-_EXTRA_QUERIES["geo_lisa"] = q_geo_lisa
-_EXTRA_ORACLES["geo_lisa"] = Q_GEO_LISA_SQL
+_register("geo_lisa", q_geo_lisa, Q_GEO_LISA_SQL, verified=5)
 
 
 def q_geo_moran(spark, sf_dir):
@@ -7190,8 +7163,7 @@ FROM loc"""
 )
 
 
-_EXTRA_QUERIES["geo_moran"] = q_geo_moran
-_EXTRA_ORACLES["geo_moran"] = Q_GEO_MORAN_SQL
+_register("geo_moran", q_geo_moran, Q_GEO_MORAN_SQL, verified=5)
 
 
 def q_geo_od_flows(spark, sf_dir):
@@ -7244,8 +7216,7 @@ ORDER BY from_cx, from_cy, to_cx, to_cy
            re=r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)")
 
 
-_EXTRA_QUERIES["geo_od_flows"] = q_geo_od_flows
-_EXTRA_ORACLES["geo_od_flows"] = Q_GEO_OD_FLOWS_SQL
+_register("geo_od_flows", q_geo_od_flows, Q_GEO_OD_FLOWS_SQL, verified=5)
 
 
 def q_text_readability(spark, sf_dir):
@@ -7280,8 +7251,8 @@ FROM c ORDER BY doc_id
 """
 
 
-_EXTRA_QUERIES["text_readability"] = q_text_readability
-_EXTRA_ORACLES["text_readability"] = Q_TEXT_READABILITY_SQL
+_register("text_readability", q_text_readability, Q_TEXT_READABILITY_SQL,
+          verified=5)
 
 
 def q_graph_lpa(spark, sf_dir):
@@ -7323,8 +7294,7 @@ l{k} AS MATERIALIZED (
             + "\nSELECT node, label FROM l{r} ORDER BY node".format(r=rounds))
 
 
-_EXTRA_QUERIES["graph_lpa"] = q_graph_lpa
-_EXTRA_ORACLES["graph_lpa"] = _lpa_oracle_sql(4)
+_register("graph_lpa", q_graph_lpa, _lpa_oracle_sql(4), verified=5)
 
 
 def q_text_phrase(spark, sf_dir):
@@ -7361,8 +7331,7 @@ FROM m GROUP BY doc_id ORDER BY doc_id
 """
 
 
-_EXTRA_QUERIES["text_phrase"] = q_text_phrase
-_EXTRA_ORACLES["text_phrase"] = Q_TEXT_PHRASE_SQL
+_register("text_phrase", q_text_phrase, Q_TEXT_PHRASE_SQL, verified=5)
 
 
 def q_sketch_quantiles(spark, sf_dir):
@@ -7396,8 +7365,8 @@ ORDER BY pctl
 """
 
 
-_EXTRA_QUERIES["sketch_quantiles"] = q_sketch_quantiles
-_EXTRA_ORACLES["sketch_quantiles"] = Q_SKETCH_QUANTILES_SQL
+_register("sketch_quantiles", q_sketch_quantiles, Q_SKETCH_QUANTILES_SQL,
+          verified=5)
 
 
 def q_web_redirects(spark, sf_dir):
@@ -7446,8 +7415,7 @@ ORDER BY src
 """
 
 
-_EXTRA_QUERIES["web_redirects"] = q_web_redirects
-_EXTRA_ORACLES["web_redirects"] = Q_WEB_REDIRECTS_SQL
+_register("web_redirects", q_web_redirects, Q_WEB_REDIRECTS_SQL, verified=5)
 
 
 def _stay_text_col():
@@ -7542,8 +7510,7 @@ ORDER BY doc_id, run_id
            re=r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)")
 
 
-_EXTRA_QUERIES["geo_staypoints"] = q_geo_staypoints
-_EXTRA_ORACLES["geo_staypoints"] = Q_GEO_STAYPOINTS_SQL
+_register("geo_staypoints", q_geo_staypoints, Q_GEO_STAYPOINTS_SQL, verified=5)
 
 
 def q_table_cdc(spark, sf_dir):
@@ -7596,8 +7563,7 @@ ORDER BY key
 """
 
 
-_EXTRA_QUERIES["table_cdc"] = q_table_cdc
-_EXTRA_ORACLES["table_cdc"] = Q_TABLE_CDC_SQL
+_register("table_cdc", q_table_cdc, Q_TABLE_CDC_SQL, verified=5)
 
 
 def q_table_diff(spark, sf_dir):
@@ -7660,8 +7626,8 @@ FROM j WHERE op IS NOT NULL ORDER BY doc_id
 """
 
 
-_EXTRA_QUERIES["table_diff"] = q_table_diff
-_EXTRA_ORACLES["table_diff"] = Q_TABLE_DIFF_SQL
+_register("table_diff", q_table_diff, Q_TABLE_DIFF_SQL, verified=5,
+          plan_dump=True)
 
 
 def q_web_robots(spark, sf_dir):
@@ -7740,8 +7706,7 @@ ORDER BY u.doc_id
 """
 
 
-_EXTRA_QUERIES["web_robots"] = q_web_robots
-_EXTRA_ORACLES["web_robots"] = Q_WEB_ROBOTS_SQL
+_register("web_robots", q_web_robots, Q_WEB_ROBOTS_SQL, verified=5)
 
 
 def q_geo_cell_weights(spark, sf_dir):
@@ -7800,8 +7765,8 @@ FROM cov ORDER BY id, cx, cy
 """
 
 
-_EXTRA_QUERIES["geo_cell_weights"] = q_geo_cell_weights
-_EXTRA_ORACLES["geo_cell_weights"] = Q_GEO_CELL_WEIGHTS_SQL
+_register("geo_cell_weights", q_geo_cell_weights, Q_GEO_CELL_WEIGHTS_SQL,
+          verified=5)
 
 
 def q_web_components(spark, sf_dir):
@@ -7884,8 +7849,8 @@ FROM reach GROUP BY s ORDER BY domain
            src_dom=_domain_sql("src_url"), dst_dom=_domain_sql("dst_url"))
 
 
-_EXTRA_QUERIES["web_components"] = q_web_components
-_EXTRA_ORACLES["web_components"] = _q_web_components_oracle()
+_register("web_components", q_web_components, _q_web_components_oracle(),
+          verified=5)
 
 
 _PPR_SEEDS = (1, 2, 7)
@@ -7943,8 +7908,7 @@ r{i} AS (
     return "".join(parts)
 
 
-_EXTRA_QUERIES["graph_ppr"] = q_graph_ppr
-_EXTRA_ORACLES["graph_ppr"] = _ppr_sql()
+_register("graph_ppr", q_graph_ppr, _ppr_sql(), verified=5)
 
 
 def q_stream_cdc(spark, sf_dir):
@@ -7984,8 +7948,7 @@ def q_stream_cdc(spark, sf_dir):
     return merge_latest(snap, latest, keys=("key",)).orderBy("key")
 
 
-_EXTRA_QUERIES["stream_cdc"] = q_stream_cdc
-_EXTRA_ORACLES["stream_cdc"] = Q_TABLE_CDC_SQL
+_register("stream_cdc", q_stream_cdc, Q_TABLE_CDC_SQL, verified=5)
 
 
 def q_sketch_kmv(spark, sf_dir):
@@ -8046,8 +8009,7 @@ FROM e
 """
 
 
-_EXTRA_QUERIES["sketch_kmv"] = q_sketch_kmv
-_EXTRA_ORACLES["sketch_kmv"] = Q_SKETCH_KMV_SQL
+_register("sketch_kmv", q_sketch_kmv, Q_SKETCH_KMV_SQL, verified=5)
 
 
 def q_web_path_stats(spark, sf_dir):
@@ -8106,8 +8068,7 @@ ORDER BY host, prefix, depth
 """
 
 
-_EXTRA_QUERIES["web_path_stats"] = q_web_path_stats
-_EXTRA_ORACLES["web_path_stats"] = Q_WEB_PATH_STATS_SQL
+_register("web_path_stats", q_web_path_stats, Q_WEB_PATH_STATS_SQL)
 
 
 # ===========================================================================
@@ -8162,8 +8123,7 @@ SELECT node, hops FROM d{h} ORDER BY node""".format(h=max_hops))
     return ",".join(parts[:-1]) + parts[-1]
 
 
-_EXTRA_QUERIES["graph_bfs"] = q_graph_bfs
-_EXTRA_ORACLES["graph_bfs"] = _q_graph_bfs_sql()
+_register("graph_bfs", q_graph_bfs, _q_graph_bfs_sql(), plan_dump=True)
 
 
 def _eval_ranked(spark, sf_dir):
@@ -8234,8 +8194,7 @@ ORDER BY query_id
            dcase=case.format(c="rk"), icase=case.format(c="irk"))
 
 
-_EXTRA_QUERIES["eval_ndcg"] = q_eval_ndcg
-_EXTRA_ORACLES["eval_ndcg"] = _q_eval_ndcg_sql()
+_register("eval_ndcg", q_eval_ndcg, _q_eval_ndcg_sql(), plan_dump=True)
 
 
 def q_eval_rank_at_k(spark, sf_dir):
@@ -8274,8 +8233,7 @@ FROM agg ORDER BY query_id
 """.format(ranked=_EVAL_RANKED_SQL)
 
 
-_EXTRA_QUERIES["eval_rank_at_k"] = q_eval_rank_at_k
-_EXTRA_ORACLES["eval_rank_at_k"] = Q_EVAL_RANK_SQL
+_register("eval_rank_at_k", q_eval_rank_at_k, Q_EVAL_RANK_SQL, plan_dump=True)
 
 
 def q_events_changepoint(spark, sf_dir):
@@ -8328,8 +8286,8 @@ ORDER BY event_type, hour_id
 """
 
 
-_EXTRA_QUERIES["events_changepoint"] = q_events_changepoint
-_EXTRA_ORACLES["events_changepoint"] = Q_EVENTS_CHANGEPOINT_SQL
+_register("events_changepoint", q_events_changepoint, Q_EVENTS_CHANGEPOINT_SQL,
+          plan_dump=True)
 
 
 def q_table_compaction(spark, sf_dir):
@@ -8389,8 +8347,8 @@ ORDER BY part, file_id
 """
 
 
-_EXTRA_QUERIES["table_compaction"] = q_table_compaction
-_EXTRA_ORACLES["table_compaction"] = Q_TABLE_COMPACTION_SQL
+_register("table_compaction", q_table_compaction, Q_TABLE_COMPACTION_SQL,
+          plan_dump=True)
 
 
 def q_sketch_topk(spark, sf_dir):
@@ -8439,8 +8397,7 @@ WHERE rnk <= 20 ORDER BY rnk
 """
 
 
-_EXTRA_QUERIES["sketch_topk"] = q_sketch_topk
-_EXTRA_ORACLES["sketch_topk"] = Q_SKETCH_TOPK_SQL
+_register("sketch_topk", q_sketch_topk, Q_SKETCH_TOPK_SQL, plan_dump=True)
 
 
 def q_text_collocations(spark, sf_dir):
@@ -8490,8 +8447,8 @@ WHERE rnk <= 50 ORDER BY rnk
 """
 
 
-_EXTRA_QUERIES["text_collocations"] = q_text_collocations
-_EXTRA_ORACLES["text_collocations"] = Q_TEXT_COLLOCATIONS_SQL
+_register("text_collocations", q_text_collocations, Q_TEXT_COLLOCATIONS_SQL,
+          plan_dump=True)
 
 
 def q_sample_balanced(spark, sf_dir):
@@ -8523,8 +8480,8 @@ ORDER BY label, vec_id
 """
 
 
-_EXTRA_QUERIES["sample_balanced"] = q_sample_balanced
-_EXTRA_ORACLES["sample_balanced"] = Q_SAMPLE_BALANCED_SQL
+_register("sample_balanced", q_sample_balanced, Q_SAMPLE_BALANCED_SQL,
+          plan_dump=True)
 
 
 def q_geo_snap(spark, sf_dir):
@@ -8612,8 +8569,7 @@ ORDER BY point_id
 """
 
 
-_EXTRA_QUERIES["geo_snap"] = q_geo_snap
-_EXTRA_ORACLES["geo_snap"] = Q_GEO_SNAP_SQL
+_register("geo_snap", q_geo_snap, Q_GEO_SNAP_SQL, plan_dump=True)
 
 
 def q_web_mirror(spark, sf_dir):
@@ -8670,8 +8626,7 @@ ORDER BY host_a, host_b
 """
 
 
-_EXTRA_QUERIES["web_mirror"] = q_web_mirror
-_EXTRA_ORACLES["web_mirror"] = Q_WEB_MIRROR_SQL
+_register("web_mirror", q_web_mirror, Q_WEB_MIRROR_SQL, plan_dump=True)
 
 
 def q_stream_dedupe(spark, sf_dir):
@@ -8705,8 +8660,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-_EXTRA_QUERIES["stream_dedupe"] = q_stream_dedupe
-_EXTRA_ORACLES["stream_dedupe"] = Q_STREAM_DEDUPE_SQL
+_register("stream_dedupe", q_stream_dedupe, Q_STREAM_DEDUPE_SQL, bench=False)
 
 
 def q_web_crawl_schedule(spark, sf_dir):
@@ -8743,8 +8697,8 @@ FROM sched ORDER BY url_id
 """)
 
 
-_EXTRA_QUERIES["web_crawl_schedule"] = q_web_crawl_schedule
-_EXTRA_ORACLES["web_crawl_schedule"] = Q_WEB_CRAWL_SCHEDULE_SQL
+_register("web_crawl_schedule", q_web_crawl_schedule, Q_WEB_CRAWL_SCHEDULE_SQL,
+          plan_dump=True)
 
 
 def q_geo_gistar(spark, sf_dir):
@@ -8787,8 +8741,7 @@ ORDER BY c.cx, c.cy
 """.format(points=_CLUMPED_POINTS_SQL)
 
 
-_EXTRA_QUERIES["geo_gistar"] = q_geo_gistar
-_EXTRA_ORACLES["geo_gistar"] = Q_GEO_GISTAR_SQL
+_register("geo_gistar", q_geo_gistar, Q_GEO_GISTAR_SQL, plan_dump=True)
 
 
 # --------------------------------------------------------------------------
@@ -8903,8 +8856,7 @@ SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
 FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
 """
 
-_EXTRA_QUERIES["ann_ivfpq"] = q_ann_ivfpq
-_EXTRA_ORACLES["ann_ivfpq"] = Q_ANN_IVFPQ_SQL
+_register("ann_ivfpq", q_ann_ivfpq, Q_ANN_IVFPQ_SQL, plan_dump=True)
 
 
 
@@ -8956,8 +8908,8 @@ SELECT CAST(m AS BIGINT) AS m_edges,
 FROM nd
 """
 
-_EXTRA_QUERIES["graph_assortativity"] = q_graph_assortativity
-_EXTRA_ORACLES["graph_assortativity"] = Q_GRAPH_ASSORTATIVITY_SQL
+_register("graph_assortativity", q_graph_assortativity,
+          Q_GRAPH_ASSORTATIVITY_SQL, bench=False)
 
 
 def q_graph_clustcoef(spark, sf_dir):
@@ -9004,8 +8956,8 @@ FROM deg d LEFT JOIN tcnt t ON t.node = d.node
 ORDER BY d.node
 """
 
-_EXTRA_QUERIES["graph_clustcoef"] = q_graph_clustcoef
-_EXTRA_ORACLES["graph_clustcoef"] = Q_GRAPH_CLUSTCOEF_SQL
+_register("graph_clustcoef", q_graph_clustcoef, Q_GRAPH_CLUSTCOEF_SQL,
+          bench=False)
 
 
 
@@ -9055,8 +9007,7 @@ SELECT threshold, tp, fp, fn, tn,
 FROM per_t ORDER BY threshold
 """.format(scored=_EVAL_SCORED_SQL)
 
-_EXTRA_QUERIES["eval_pr_curve"] = q_eval_pr_curve
-_EXTRA_ORACLES["eval_pr_curve"] = Q_EVAL_PR_CURVE_SQL
+_register("eval_pr_curve", q_eval_pr_curve, Q_EVAL_PR_CURVE_SQL, bench=False)
 
 
 # Closed integer fence boxes in micro-degrees: overlapping (1/2, 3/8),
@@ -9130,8 +9081,7 @@ ORDER BY entity_id, seq, fence_id, event
 """.format(fences=", ".join(
     "({}, {}, {}, {}, {})".format(*row) for row in _GEOFENCE_FENCES))
 
-_EXTRA_QUERIES["geo_geofence"] = q_geo_geofence
-_EXTRA_ORACLES["geo_geofence"] = Q_GEO_GEOFENCE_SQL
+_register("geo_geofence", q_geo_geofence, Q_GEO_GEOFENCE_SQL, bench=False)
 
 
 def q_graph_featagg(spark, sf_dir):
@@ -9180,8 +9130,7 @@ FROM h1 JOIN h2 ON h2.u = h1.u JOIN f ON f.node = h1.u
 ORDER BY node
 """
 
-_EXTRA_QUERIES["graph_featagg"] = q_graph_featagg
-_EXTRA_ORACLES["graph_featagg"] = Q_GRAPH_FEATAGG_SQL
+_register("graph_featagg", q_graph_featagg, Q_GRAPH_FEATAGG_SQL, bench=False)
 
 
 def q_graph_sssp(spark, sf_dir):
@@ -9241,8 +9190,7 @@ SELECT node, dist FROM d{r} ORDER BY node""".format(r=max_rounds))
     return ",".join(parts[:-1]) + parts[-1]
 
 
-_EXTRA_QUERIES["graph_sssp"] = q_graph_sssp
-_EXTRA_ORACLES["graph_sssp"] = _q_graph_sssp_sql()
+_register("graph_sssp", q_graph_sssp, _q_graph_sssp_sql(), bench=False)
 
 
 def q_events_survival(spark, sf_dir):
@@ -9291,8 +9239,8 @@ JOIN rec p ON p.rn = o.rn - 1
 ORDER BY t_days
 """
 
-_EXTRA_QUERIES["events_survival"] = q_events_survival
-_EXTRA_ORACLES["events_survival"] = Q_EVENTS_SURVIVAL_SQL
+_register("events_survival", q_events_survival, Q_EVENTS_SURVIVAL_SQL,
+          bench=False)
 
 
 def q_graph_ktruss(spark, sf_dir):
@@ -9347,8 +9295,7 @@ ORDER BY e.u, e.v""".format(R=rounds))
     return ",".join(parts)
 
 
-_EXTRA_QUERIES["graph_ktruss"] = q_graph_ktruss
-_EXTRA_ORACLES["graph_ktruss"] = _q_graph_ktruss_sql()
+_register("graph_ktruss", q_graph_ktruss, _q_graph_ktruss_sql(), bench=False)
 
 
 def q_geo_hausdorff(spark, sf_dir):
@@ -9400,8 +9347,7 @@ WHERE h1.ea < h1.eb AND GREATEST(h1.hd, h2.hd) <= 4000000000000
 ORDER BY entity_a, entity_b
 """
 
-_EXTRA_QUERIES["geo_hausdorff"] = q_geo_hausdorff
-_EXTRA_ORACLES["geo_hausdorff"] = Q_GEO_HAUSDORFF_SQL
+_register("geo_hausdorff", q_geo_hausdorff, Q_GEO_HAUSDORFF_SQL, bench=False)
 
 
 def q_events_cube(spark, sf_dir):
@@ -9444,8 +9390,7 @@ GROUP BY CUBE (event_type, day)
 ORDER BY gflags, event_type, day
 """
 
-_EXTRA_QUERIES["events_cube"] = q_events_cube
-_EXTRA_ORACLES["events_cube"] = Q_EVENTS_CUBE_SQL
+_register("events_cube", q_events_cube, Q_EVENTS_CUBE_SQL, bench=False)
 
 
 def q_table_checksum(spark, sf_dir):
@@ -9484,8 +9429,8 @@ SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM h GROUP BY shard ORDER BY shard
 """
 
-_EXTRA_QUERIES["table_checksum"] = q_table_checksum
-_EXTRA_ORACLES["table_checksum"] = Q_TABLE_CHECKSUM_SQL
+_register("table_checksum", q_table_checksum, Q_TABLE_CHECKSUM_SQL,
+          bench=False)
 
 
 def q_geo_dtw(spark, sf_dir):
@@ -9571,8 +9516,7 @@ WHERE r.i = p3.n AND r.row[p3.m] <= 3000000000000
 ORDER BY entity_a, entity_b
 """
 
-_EXTRA_QUERIES["geo_dtw"] = q_geo_dtw
-_EXTRA_ORACLES["geo_dtw"] = Q_GEO_DTW_SQL
+_register("geo_dtw", q_geo_dtw, Q_GEO_DTW_SQL, bench=False)
 
 
 def q_eval_confusion(spark, sf_dir):
@@ -9636,8 +9580,8 @@ SELECT class, CAST(tp AS BIGINT) AS tp,
 FROM j ORDER BY class
 """
 
-_EXTRA_QUERIES["eval_confusion"] = q_eval_confusion
-_EXTRA_ORACLES["eval_confusion"] = Q_EVAL_CONFUSION_SQL
+_register("eval_confusion", q_eval_confusion, Q_EVAL_CONFUSION_SQL,
+          bench=False)
 
 
 def q_events_trend(spark, sf_dir):
@@ -9692,8 +9636,7 @@ SELECT key, n, sum_x, sum_y, sum_xy, sum_xx,
 FROM s ORDER BY key
 """
 
-_EXTRA_QUERIES["events_trend"] = q_events_trend
-_EXTRA_ORACLES["events_trend"] = Q_EVENTS_TREND_SQL
+_register("events_trend", q_events_trend, Q_EVENTS_TREND_SQL, bench=False)
 
 
 def q_geo_colocation(spark, sf_dir):
@@ -9743,8 +9686,8 @@ GROUP BY 1, 2 HAVING COUNT(*) >= 3
 ORDER BY entity_a, entity_b
 """
 
-_EXTRA_QUERIES["geo_colocation"] = q_geo_colocation
-_EXTRA_ORACLES["geo_colocation"] = Q_GEO_COLOCATION_SQL
+_register("geo_colocation", q_geo_colocation, Q_GEO_COLOCATION_SQL,
+          bench=False)
 
 
 def q_dedup_fuzzy(spark, sf_dir):
@@ -9769,8 +9712,7 @@ WHERE levenshtein(a.s_name, b.s_name) <= 1
 ORDER BY id_a, id_b
 """
 
-_EXTRA_QUERIES["dedup_fuzzy"] = q_dedup_fuzzy
-_EXTRA_ORACLES["dedup_fuzzy"] = Q_DEDUP_FUZZY_SQL
+_register("dedup_fuzzy", q_dedup_fuzzy, Q_DEDUP_FUZZY_SQL, bench=False)
 
 
 def q_events_cdf(spark, sf_dir):
@@ -9804,8 +9746,7 @@ SELECT key, v, cnt, cum, n,
 FROM c ORDER BY key, v
 """
 
-_EXTRA_QUERIES["events_cdf"] = q_events_cdf
-_EXTRA_ORACLES["events_cdf"] = Q_EVENTS_CDF_SQL
+_register("events_cdf", q_events_cdf, Q_EVENTS_CDF_SQL, bench=False)
 
 
 def q_table_gini(spark, sf_dir):
@@ -9847,119 +9788,7 @@ SELECT key, n, CAST(sv AS BIGINT) AS sum_v,
 FROM s ORDER BY key
 """
 
-_EXTRA_QUERIES["table_gini"] = q_table_gini
-_EXTRA_ORACLES["table_gini"] = Q_TABLE_GINI_SQL
-
-
-# --------------------------------------------------------------------------
-# Driver-visibility reordering (round 5 rotation).
-#
-# The round driver verifies only the FIRST 50 entries of queries() in
-# registration order (proven in VERDICT.md round 3: CORRECTNESS_r03.json's
-# key list == registration order[0:50]; confirmed again in round 4:
-# CORRECTNESS_r04.json == the curated fresh-50, key-for-key).  After the
-# r03 + r04 windows, 100 queries have a green driver row and 56 have only
-# the local gate-replica PASS* evidence.  Round 5 rotates the cap onto 50
-# of those 56; the 6-query overflow (_QUEUED_R06 below) plus anything
-# added this round sorts directly behind the frozen window so round 6
-# catches them next.  Rows-only queries (stream_counts, text_compress —
-# no DuckDB oracle possible, documented) are already driver-verified and
-# stay permanently behind the cap so the window spends slots only on
-# hash-verifiable names.
-# --------------------------------------------------------------------------
-
-# Union of the CORRECTNESS_r03.json and CORRECTNESS_r04.json key lists
-# (historical fact, frozen — these 100 names all have a green driver row).
-_DRIVER_VERIFIED = frozenset([
-    # --- round 3 window ---
-    "pricing_summary", "revenue_by_nation", "top_parts_per_brand",
-    "events_hourly", "geo_parse_normalize", "geo_dateline_split",
-    "geo_pip_grid", "geo_pip_holes", "geo_knn", "geo_tile_assign",
-    "geo_tile_pyramid", "geo_cell_index", "geo_bbox_agg", "text_top_terms",
-    "doc_hash_split", "corpus_curate", "sample_hash", "sample_stratified",
-    "text_gopher", "dedup_exact", "dedup_jaccard", "dedup_minhash_lsh",
-    "dedup_clusters", "text_tokens", "text_quality", "text_langid",
-    "text_fingerprint", "ann_topk", "embed_label_stats", "text_simhash",
-    "dedup_simhash_pairs", "geo_transform", "embed_cosine_pairs", "ann_lsh",
-    "embed_cosine_pairs_lsh", "multimodal_meta", "geo_merge_burst",
-    "stream_counts", "stream_doc_stats", "stream_events_windows", "ann_ivf",
-    "geo_extract_props", "geo_tile_join", "events_sessionize", "events_asof",
-    "events_range_join", "pricing_rollup", "geo_poly_intersect",
-    "dedup_ngram_spans", "decontam_ngram",
-    # --- round 4 window ---
-    "text_repetition", "pack_shards", "semdedup", "bm25_search",
-    "graph_pagerank", "dedup_lines", "sample_mixture", "text_quality_linear",
-    "text_surprisal", "bpe_merges", "events_funnel", "events_cohort",
-    "dedup_incremental", "text_quality_adaptive", "text_drift", "stream_hll",
-    "web_canonical", "web_keep_latest", "web_frontier", "web_domain_stats",
-    "pii_redact", "chunk_documents", "sketch_cms", "sketch_hll",
-    "length_quantiles", "web_link_graph", "events_pivot",
-    "geo_knn_haversine", "web_boilerplate", "sample_importance",
-    "geo_area_centroid", "geo_distance_join", "graph_hits", "text_bigram_lm",
-    "web_anchor_text", "decontam_embed", "geo_zorder_key", "geo_simplify",
-    "text_compress", "stream_sessions", "table_profile", "geo_text_coords",
-    "geo_pip_density", "events_anomaly", "sample_temperature",
-    "stream_geotag", "dedup_setsim", "geo_trajectory", "events_transitions",
-    "stream_attribution",
-])
-
-# The round-5 frozen window: exactly the 56 never-driver-verified names
-# minus the 6 queued below, in their original registration order.  An
-# explicit ordered tuple (not a computed set) so that adding queries
-# elsewhere in the file can NEVER displace a window member.
-_FRESH_R05 = (
-    "search_fusion", "graph_linkpred", "geo_hilbert", "geo_turns",
-    "geo_kmeans", "graph_triangles", "web_bloom", "events_rfm",
-    "events_decay", "events_attribution", "stream_decay", "events_forecast",
-    "eval_auc", "eval_calibration", "events_paths", "table_skew",
-    "events_bots", "table_shards", "table_quality", "geo_seg_intersect",
-    "sketch_hll_overlap", "geo_idw", "graph_kcore", "geo_quadbin",
-    "stream_heatmap", "events_abtest", "geo_hull", "geo_resample",
-    "text_keywords", "graph_triangles_est", "web_history", "sample_epochs",
-    "geo_hexbin", "geo_lisa", "geo_moran", "geo_od_flows",
-    "text_readability", "graph_lpa", "text_phrase", "sketch_quantiles",
-    "web_redirects", "geo_staypoints", "table_cdc", "table_diff",
-    "web_robots", "geo_cell_weights", "web_components", "graph_ppr",
-    "stream_cdc", "sketch_kmv",
-)
-
-# 6-query overflow (56 never-verified > one 50-slot window): the oldest
-# never-verified additions with the strongest supplementary evidence
-# (brute-force differential tests / simple one-agg shapes) queue for the
-# round-6 window, ordered first among the behind-window group.
-_QUEUED_R06 = (
-    "geo_grid_cluster", "geo_heatmap", "geo_geohash", "events_sliding",
-    "orders_priority", "web_path_stats",
-)
-
-
-def _driver_order(names):
-    """Frozen round-5 window first (positions 0-49), then the round-6
-    queue, then any round-5 additions in registration order (they carry
-    gate-replica evidence until rotated in), then the 100 driver-verified
-    names.  All groups remain covered by scripts/check_correctness.py."""
-    window = [n for n in _FRESH_R05 if n in names]
-    queued = [n for n in _QUEUED_R06 if n in names]
-    placed = set(window) | set(queued)
-    new = [n for n in names
-           if n not in placed and n not in _DRIVER_VERIFIED]
-    stable = [n for n in names if n in _DRIVER_VERIFIED and n not in placed]
-    return window + queued + new + stable
-
-
-_REG_QUERIES = queries
-_REG_ORACLES = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    reg = _REG_QUERIES()
-    return {n: reg[n] for n in _driver_order(reg)}
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    reg = _REG_ORACLES()
-    order = _driver_order(_REG_QUERIES())
-    return {n: reg[n] for n in order if n in reg}
+_register("table_gini", q_table_gini, Q_TABLE_GINI_SQL, bench=False)
 
 
 def q_graph_walks(spark, sf_dir):
@@ -10018,8 +9847,7 @@ s{t} AS MATERIALIZED (
 
 Q_GRAPH_WALKS_SQL = _q_graph_walks_sql()
 
-_EXTRA_QUERIES["graph_walks"] = q_graph_walks
-_EXTRA_ORACLES["graph_walks"] = Q_GRAPH_WALKS_SQL
+_register("graph_walks", q_graph_walks, Q_GRAPH_WALKS_SQL, plan_dump=True)
 
 
 def q_table_chi2(spark, sf_dir):
@@ -10066,8 +9894,7 @@ SELECT n, r, c, CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
 FROM g
 """
 
-_EXTRA_QUERIES["table_chi2"] = q_table_chi2
-_EXTRA_ORACLES["table_chi2"] = Q_TABLE_CHI2_SQL
+_register("table_chi2", q_table_chi2, Q_TABLE_CHI2_SQL, plan_dump=True)
 
 
 def q_orders_basket(spark, sf_dir):
@@ -10109,8 +9936,8 @@ CROSS JOIN tot t
 ORDER BY u, v
 """
 
-_EXTRA_QUERIES["orders_basket"] = q_orders_basket
-_EXTRA_ORACLES["orders_basket"] = Q_ORDERS_BASKET_SQL
+_register("orders_basket", q_orders_basket, Q_ORDERS_BASKET_SQL,
+          plan_dump=True)
 
 
 def q_text_vocab_stats(spark, sf_dir):
@@ -10154,8 +9981,8 @@ FROM nd LEFT JOIN voc ON nd.grp = voc.grp
 ORDER BY nd.grp
 """
 
-_EXTRA_QUERIES["text_vocab_stats"] = q_text_vocab_stats
-_EXTRA_ORACLES["text_vocab_stats"] = Q_TEXT_VOCAB_STATS_SQL
+_register("text_vocab_stats", q_text_vocab_stats, Q_TEXT_VOCAB_STATS_SQL,
+          plan_dump=True)
 
 
 def q_table_benford(spark, sf_dir):
@@ -10197,8 +10024,8 @@ SELECT grp, CAST(MAX(n) AS BIGINT) AS n,
 FROM j GROUP BY grp ORDER BY grp
 """
 
-_EXTRA_QUERIES["table_benford"] = q_table_benford
-_EXTRA_ORACLES["table_benford"] = Q_TABLE_BENFORD_SQL
+_register("table_benford", q_table_benford, Q_TABLE_BENFORD_SQL,
+          plan_dump=True)
 
 
 def q_graph_reciprocity(spark, sf_dir):
@@ -10241,8 +10068,8 @@ SELECT nn.n_nodes, m.n_edges, r.n_recip,
 FROM m, nn, r, mo, mi
 """
 
-_EXTRA_QUERIES["graph_reciprocity"] = q_graph_reciprocity
-_EXTRA_ORACLES["graph_reciprocity"] = Q_GRAPH_RECIPROCITY_SQL
+_register("graph_reciprocity", q_graph_reciprocity, Q_GRAPH_RECIPROCITY_SQL,
+          plan_dump=True)
 
 
 def q_eval_kappa(spark, sf_dir):
@@ -10298,8 +10125,7 @@ SELECT g.n, g.agree,
 FROM g, pe
 """
 
-_EXTRA_QUERIES["eval_kappa"] = q_eval_kappa
-_EXTRA_ORACLES["eval_kappa"] = Q_EVAL_KAPPA_SQL
+_register("eval_kappa", q_eval_kappa, Q_EVAL_KAPPA_SQL, plan_dump=True)
 
 
 def q_events_acf(spark, sf_dir):
@@ -10365,8 +10191,7 @@ SELECT key, n,
 FROM g ORDER BY key
 """
 
-_EXTRA_QUERIES["events_acf"] = q_events_acf
-_EXTRA_ORACLES["events_acf"] = Q_EVENTS_ACF_SQL
+_register("events_acf", q_events_acf, Q_EVENTS_ACF_SQL, plan_dump=True)
 
 
 def q_table_simpson(spark, sf_dir):
@@ -10402,8 +10227,8 @@ SELECT key, n, n_cats,
 FROM g ORDER BY key
 """
 
-_EXTRA_QUERIES["table_simpson"] = q_table_simpson
-_EXTRA_ORACLES["table_simpson"] = Q_TABLE_SIMPSON_SQL
+_register("table_simpson", q_table_simpson, Q_TABLE_SIMPSON_SQL,
+          plan_dump=True)
 
 
 def q_events_runs(spark, sf_dir):
@@ -10464,8 +10289,7 @@ SELECT key, n1, n2, runs,
 FROM g ORDER BY key
 """
 
-_EXTRA_QUERIES["events_runs"] = q_events_runs
-_EXTRA_ORACLES["events_runs"] = Q_EVENTS_RUNS_SQL
+_register("events_runs", q_events_runs, Q_EVENTS_RUNS_SQL, plan_dump=True)
 
 
 def q_events_markov(spark, sf_dir):
@@ -10537,8 +10361,8 @@ FROM p{r} ORDER BY state""".format(r=rounds))
 
 Q_EVENTS_MARKOV_SQL = _q_events_markov_sql()
 
-_EXTRA_QUERIES["events_markov"] = q_events_markov
-_EXTRA_ORACLES["events_markov"] = Q_EVENTS_MARKOV_SQL
+_register("events_markov", q_events_markov, Q_EVENTS_MARKOV_SQL,
+          plan_dump=True)
 
 
 def q_geo_union_area(spark, sf_dir):
@@ -10624,8 +10448,8 @@ FROM nr LEFT JOIN area ON nr.grp = area.grp
 ORDER BY nr.grp
 """
 
-_EXTRA_QUERIES["geo_union_area"] = q_geo_union_area
-_EXTRA_ORACLES["geo_union_area"] = Q_GEO_UNION_AREA_SQL
+_register("geo_union_area", q_geo_union_area, Q_GEO_UNION_AREA_SQL,
+          plan_dump=True)
 
 
 def q_eval_mcc(spark, sf_dir):
@@ -10677,8 +10501,7 @@ SELECT tp, tn, fp, fn,
 FROM g
 """
 
-_EXTRA_QUERIES["eval_mcc"] = q_eval_mcc
-_EXTRA_ORACLES["eval_mcc"] = Q_EVAL_MCC_SQL
+_register("eval_mcc", q_eval_mcc, Q_EVAL_MCC_SQL, plan_dump=True)
 
 
 def q_table_histogram(spark, sf_dir):
@@ -10718,8 +10541,8 @@ FROM b GROUP BY key, bin, vmin, span
 ORDER BY key, bin
 """
 
-_EXTRA_QUERIES["table_histogram"] = q_table_histogram
-_EXTRA_ORACLES["table_histogram"] = Q_TABLE_HISTOGRAM_SQL
+_register("table_histogram", q_table_histogram, Q_TABLE_HISTOGRAM_SQL,
+          plan_dump=True)
 
 
 def q_embed_pca(spark, sf_dir):
@@ -10772,8 +10595,7 @@ SELECT d AS i, CAST(v AS BIGINT) AS v FROM v{r} ORDER BY i"""
 
 Q_EMBED_PCA_SQL = _q_embed_pca_sql()
 
-_EXTRA_QUERIES["embed_pca"] = q_embed_pca
-_EXTRA_ORACLES["embed_pca"] = Q_EMBED_PCA_SQL
+_register("embed_pca", q_embed_pca, Q_EMBED_PCA_SQL, plan_dump=True)
 
 
 def q_events_seasonal(spark, sf_dir):
@@ -10819,8 +10641,8 @@ SELECT event_type, hod, cnt,
 FROM prof ORDER BY event_type, hod
 """
 
-_EXTRA_QUERIES["events_seasonal"] = q_events_seasonal
-_EXTRA_ORACLES["events_seasonal"] = Q_EVENTS_SEASONAL_SQL
+_register("events_seasonal", q_events_seasonal, Q_EVENTS_SEASONAL_SQL,
+          plan_dump=True)
 
 
 def q_table_drift_chi2(spark, sf_dir):
@@ -10873,8 +10695,8 @@ SELECT n, r, c, CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
 FROM g
 """
 
-_EXTRA_QUERIES["table_drift_chi2"] = q_table_drift_chi2
-_EXTRA_ORACLES["table_drift_chi2"] = Q_TABLE_DRIFT_CHI2_SQL
+_register("table_drift_chi2", q_table_drift_chi2, Q_TABLE_DRIFT_CHI2_SQL,
+          plan_dump=True)
 
 
 def q_text_code_detect(spark, sf_dir):
@@ -10922,8 +10744,8 @@ SELECT doc_id, n_chars, n_sym, n_digit,
 FROM b ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["text_code_detect"] = q_text_code_detect
-_EXTRA_ORACLES["text_code_detect"] = Q_TEXT_CODE_DETECT_SQL
+_register("text_code_detect", q_text_code_detect, Q_TEXT_CODE_DETECT_SQL,
+          plan_dump=True)
 
 
 def q_orders_backlog(spark, sf_dir):
@@ -10970,8 +10792,8 @@ SELECT CAST(t AS BIGINT) AS t, delta,
 FROM d ORDER BY t
 """
 
-_EXTRA_QUERIES["orders_backlog"] = q_orders_backlog
-_EXTRA_ORACLES["orders_backlog"] = Q_ORDERS_BACKLOG_SQL
+_register("orders_backlog", q_orders_backlog, Q_ORDERS_BACKLOG_SQL,
+          plan_dump=True)
 
 
 def q_events_anomaly_mad(spark, sf_dir):
@@ -11027,8 +10849,8 @@ WHERE d._dev > 3 * md.mad
 ORDER BY d.key, d.t
 """
 
-_EXTRA_QUERIES["events_anomaly_mad"] = q_events_anomaly_mad
-_EXTRA_ORACLES["events_anomaly_mad"] = Q_EVENTS_ANOMALY_MAD_SQL
+_register("events_anomaly_mad", q_events_anomaly_mad, Q_EVENTS_ANOMALY_MAD_SQL,
+          bench=False)
 
 
 def q_table_abc(spark, sf_dir):
@@ -11067,8 +10889,7 @@ SELECT key, v, rnk, cum,
 FROM ranked ORDER BY rnk
 """
 
-_EXTRA_QUERIES["table_abc"] = q_table_abc
-_EXTRA_ORACLES["table_abc"] = Q_TABLE_ABC_SQL
+_register("table_abc", q_table_abc, Q_TABLE_ABC_SQL, bench=False)
 
 
 def q_eval_lift(spark, sf_dir):
@@ -11122,8 +10943,7 @@ SELECT bucket, n_rows, pos, cum_rows, cum_pos,
 FROM c ORDER BY bucket
 """.format(scored=_EVAL_SCORED_SQL)
 
-_EXTRA_QUERIES["eval_lift"] = q_eval_lift
-_EXTRA_ORACLES["eval_lift"] = Q_EVAL_LIFT_SQL
+_register("eval_lift", q_eval_lift, Q_EVAL_LIFT_SQL, plan_dump=True)
 
 
 def q_eval_brier(spark, sf_dir):
@@ -11152,11 +10972,13 @@ g AS (
   FROM pr),
 nd AS (
   SELECT n, pos, ssq,
-         1000000 * pos * (n - pos) AS refp,
-         1000000 * (1000000 * pos * (n - pos) - ssq * n) AS num
+         1000000 * CAST(pos AS HUGEINT) * (n - pos) AS refp,
+         1000000 * (1000000 * CAST(pos AS HUGEINT) * (n - pos)
+                    - CAST(ssq AS HUGEINT) * n) AS num
   FROM g)
 SELECT n, pos, ssq,
-       CAST(CASE WHEN n > 0 THEN ssq * 1000000 // (n * 1000000) END
+       CAST(CASE WHEN n > 0
+                 THEN CAST(ssq AS HUGEINT) * 1000000 // (n * 1000000) END
             AS BIGINT) AS brier_ppm,
        CAST(CASE WHEN refp <> 0
                  THEN ((num) - (((num) % refp + refp) % refp)) // refp
@@ -11164,8 +10986,7 @@ SELECT n, pos, ssq,
 FROM nd
 """.format(scored=_EVAL_SCORED_SQL)
 
-_EXTRA_QUERIES["eval_brier"] = q_eval_brier
-_EXTRA_ORACLES["eval_brier"] = Q_EVAL_BRIER_SQL
+_register("eval_brier", q_eval_brier, Q_EVAL_BRIER_SQL, plan_dump=True)
 
 
 def q_events_burstiness(spark, sf_dir):
@@ -11208,8 +11029,8 @@ SELECT key, n_slots, nz_slots, total,
 FROM g ORDER BY key
 """
 
-_EXTRA_QUERIES["events_burstiness"] = q_events_burstiness
-_EXTRA_ORACLES["events_burstiness"] = Q_EVENTS_BURSTINESS_SQL
+_register("events_burstiness", q_events_burstiness, Q_EVENTS_BURSTINESS_SQL,
+          plan_dump=True)
 
 
 def q_text_zipf(spark, sf_dir):
@@ -11253,8 +11074,7 @@ SELECT bucket, rank_lo, n_types, tokens,
 FROM c ORDER BY bucket
 """
 
-_EXTRA_QUERIES["text_zipf"] = q_text_zipf
-_EXTRA_ORACLES["text_zipf"] = Q_TEXT_ZIPF_SQL
+_register("text_zipf", q_text_zipf, Q_TEXT_ZIPF_SQL, plan_dump=True)
 
 
 def q_table_fd(spark, sf_dir):
@@ -11306,8 +11126,7 @@ Q_TABLE_FD_SQL = (
     + ") ORDER BY det, dep"
 )
 
-_EXTRA_QUERIES["table_fd"] = q_table_fd
-_EXTRA_ORACLES["table_fd"] = Q_TABLE_FD_SQL
+_register("table_fd", q_table_fd, Q_TABLE_FD_SQL, plan_dump=True)
 
 
 def q_web_url_templates(spark, sf_dir):
@@ -11388,8 +11207,8 @@ SELECT host, template, n_pages, n_urls,
 FROM r WHERE rnk <= 3 ORDER BY host, rnk
 """
 
-_EXTRA_QUERIES["web_url_templates"] = q_web_url_templates
-_EXTRA_ORACLES["web_url_templates"] = Q_WEB_URL_TEMPLATES_SQL
+_register("web_url_templates", q_web_url_templates, Q_WEB_URL_TEMPLATES_SQL,
+          plan_dump=True)
 
 
 def q_graph_closeness(spark, sf_dir):
@@ -11452,8 +11271,8 @@ FROM d{h} GROUP BY seed ORDER BY seed""".format(h=max_hops))
 
 Q_GRAPH_CLOSENESS_SQL = _q_graph_closeness_sql()
 
-_EXTRA_QUERIES["graph_closeness"] = q_graph_closeness
-_EXTRA_ORACLES["graph_closeness"] = Q_GRAPH_CLOSENESS_SQL
+_register("graph_closeness", q_graph_closeness, Q_GRAPH_CLOSENESS_SQL,
+          plan_dump=True)
 
 
 def q_embed_outliers(spark, sf_dir):
@@ -11491,8 +11310,8 @@ SELECT vec_id, dist2 FROM sc
 ORDER BY dist2 DESC, vec_id ASC LIMIT 25
 """
 
-_EXTRA_QUERIES["embed_outliers"] = q_embed_outliers
-_EXTRA_ORACLES["embed_outliers"] = Q_EMBED_OUTLIERS_SQL
+_register("embed_outliers", q_embed_outliers, Q_EMBED_OUTLIERS_SQL,
+          plan_dump=True)
 
 
 def q_eval_regression(spark, sf_dir):
@@ -11535,8 +11354,8 @@ SELECT n, sae, sse,
 FROM nd
 """
 
-_EXTRA_QUERIES["eval_regression"] = q_eval_regression
-_EXTRA_ORACLES["eval_regression"] = Q_EVAL_REGRESSION_SQL
+_register("eval_regression", q_eval_regression, Q_EVAL_REGRESSION_SQL,
+          plan_dump=True)
 
 
 def q_graph_negsample(spark, sf_dir):
@@ -11581,8 +11400,8 @@ WHERE neg IN (SELECT node FROM nodes)
 ORDER BY u, j
 """
 
-_EXTRA_QUERIES["graph_negsample"] = q_graph_negsample
-_EXTRA_ORACLES["graph_negsample"] = Q_GRAPH_NEGSAMPLE_SQL
+_register("graph_negsample", q_graph_negsample, Q_GRAPH_NEGSAMPLE_SQL,
+          plan_dump=True)
 
 
 def q_graph_skipgram(spark, sf_dir):
@@ -11622,8 +11441,8 @@ GROUP BY 1, 2 ORDER BY center, context""")
 
 Q_GRAPH_SKIPGRAM_SQL = _q_graph_skipgram_sql()
 
-_EXTRA_QUERIES["graph_skipgram"] = q_graph_skipgram
-_EXTRA_ORACLES["graph_skipgram"] = Q_GRAPH_SKIPGRAM_SQL
+_register("graph_skipgram", q_graph_skipgram, Q_GRAPH_SKIPGRAM_SQL,
+          plan_dump=True)
 
 
 def q_geo_knn_classify(spark, sf_dir):
@@ -11669,8 +11488,8 @@ SELECT query_id, label, votes, nearest_rank
 FROM p WHERE r = 1 ORDER BY query_id
 """.format(points=_POINTS_SQL, cands=_CANDS_SQL)
 
-_EXTRA_QUERIES["geo_knn_classify"] = q_geo_knn_classify
-_EXTRA_ORACLES["geo_knn_classify"] = Q_GEO_KNN_CLASSIFY_SQL
+_register("geo_knn_classify", q_geo_knn_classify, Q_GEO_KNN_CLASSIFY_SQL,
+          plan_dump=True)
 
 
 def q_sketch_ams(spark, sf_dir):
@@ -11713,8 +11532,7 @@ FROM z
 
 Q_SKETCH_AMS_SQL = _q_sketch_ams_sql()
 
-_EXTRA_QUERIES["sketch_ams"] = q_sketch_ams
-_EXTRA_ORACLES["sketch_ams"] = Q_SKETCH_AMS_SQL
+_register("sketch_ams", q_sketch_ams, Q_SKETCH_AMS_SQL, plan_dump=True)
 
 
 def q_dedup_containment(spark, sf_dir):
@@ -11747,8 +11565,8 @@ WHERE inter_sz * 10 >= 9 * s.sz
 ORDER BY src, dst
 """.format(shingles=_SHINGLES_SQL)
 
-_EXTRA_QUERIES["dedup_containment"] = q_dedup_containment
-_EXTRA_ORACLES["dedup_containment"] = Q_DEDUP_CONTAINMENT_SQL
+_register("dedup_containment", q_dedup_containment, Q_DEDUP_CONTAINMENT_SQL,
+          plan_dump=True)
 
 
 def q_multimodal_frames(spark, sf_dir):
@@ -11807,8 +11625,8 @@ SELECT media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
 FROM f ORDER BY media_id, frame_idx
 """
 
-_EXTRA_QUERIES["multimodal_frames"] = q_multimodal_frames
-_EXTRA_ORACLES["multimodal_frames"] = Q_MULTIMODAL_FRAMES_SQL
+_register("multimodal_frames", q_multimodal_frames, Q_MULTIMODAL_FRAMES_SQL,
+          plan_dump=True)
 
 
 def q_geo_silhouette(spark, sf_dir):
@@ -11867,8 +11685,8 @@ FROM s GROUP BY cid ORDER BY cid
 
 Q_GEO_SILHOUETTE_SQL = _q_geo_silhouette_sql()
 
-_EXTRA_QUERIES["geo_silhouette"] = q_geo_silhouette
-_EXTRA_ORACLES["geo_silhouette"] = Q_GEO_SILHOUETTE_SQL
+_register("geo_silhouette", q_geo_silhouette, Q_GEO_SILHOUETTE_SQL,
+          plan_dump=True)
 
 
 def q_eval_ngram_overlap(spark, sf_dir):
@@ -11948,8 +11766,8 @@ SELECT n_docs, p1_num, p1_den,
 FROM nd, j1, j2
 """
 
-_EXTRA_QUERIES["eval_ngram_overlap"] = q_eval_ngram_overlap
-_EXTRA_ORACLES["eval_ngram_overlap"] = Q_EVAL_NGRAM_OVERLAP_SQL
+_register("eval_ngram_overlap", q_eval_ngram_overlap, Q_EVAL_NGRAM_OVERLAP_SQL,
+          plan_dump=True)
 
 
 def q_graph_modularity(spark, sf_dir):
@@ -12009,8 +11827,8 @@ FROM nd
 
 Q_GRAPH_MODULARITY_SQL = _q_graph_modularity_sql()
 
-_EXTRA_QUERIES["graph_modularity"] = q_graph_modularity
-_EXTRA_ORACLES["graph_modularity"] = Q_GRAPH_MODULARITY_SQL
+_register("graph_modularity", q_graph_modularity, Q_GRAPH_MODULARITY_SQL,
+          plan_dump=True)
 
 
 def q_events_wau(spark, sf_dir):
@@ -12049,8 +11867,7 @@ SELECT day_id, dau, wau, mau,
 FROM w ORDER BY day_id
 """
 
-_EXTRA_QUERIES["events_wau"] = q_events_wau
-_EXTRA_ORACLES["events_wau"] = Q_EVENTS_WAU_SQL
+_register("events_wau", q_events_wau, Q_EVENTS_WAU_SQL, plan_dump=True)
 
 
 def q_text_garbage(spark, sf_dir):
@@ -12106,8 +11923,7 @@ FROM c ORDER BY doc_id
 
 Q_TEXT_GARBAGE_SQL = _q_text_garbage_sql()
 
-_EXTRA_QUERIES["text_garbage"] = q_text_garbage
-_EXTRA_ORACLES["text_garbage"] = Q_TEXT_GARBAGE_SQL
+_register("text_garbage", q_text_garbage, Q_TEXT_GARBAGE_SQL, plan_dump=True)
 
 
 def q_table_fk(spark, sf_dir):
@@ -12176,8 +11992,7 @@ Q_TABLE_FK_SQL = (
     + ") ORDER BY fk"
 )
 
-_EXTRA_QUERIES["table_fk"] = q_table_fk
-_EXTRA_ORACLES["table_fk"] = Q_TABLE_FK_SQL
+_register("table_fk", q_table_fk, Q_TABLE_FK_SQL, plan_dump=True)
 
 
 def q_events_interarrival(spark, sf_dir):
@@ -12212,8 +12027,8 @@ def _q_events_interarrival_sql():
 
 Q_EVENTS_INTERARRIVAL_SQL = _q_events_interarrival_sql()
 
-_EXTRA_QUERIES["events_interarrival"] = q_events_interarrival
-_EXTRA_ORACLES["events_interarrival"] = Q_EVENTS_INTERARRIVAL_SQL
+_register("events_interarrival", q_events_interarrival,
+          Q_EVENTS_INTERARRIVAL_SQL, plan_dump=True)
 
 
 def q_stream_ams(spark, sf_dir):
@@ -12237,8 +12052,7 @@ def q_stream_ams(spark, sf_dir):
     return _run_stream(spark, sk, "stream_ams", "complete")
 
 
-_EXTRA_QUERIES["stream_ams"] = q_stream_ams
-_EXTRA_ORACLES["stream_ams"] = Q_SKETCH_AMS_SQL
+_register("stream_ams", q_stream_ams, Q_SKETCH_AMS_SQL)
 
 
 def q_multimodal_dedup(spark, sf_dir):
@@ -12274,8 +12088,8 @@ HAVING COUNT(*) >= 2
 ORDER BY payload_md5
 """
 
-_EXTRA_QUERIES["multimodal_dedup"] = q_multimodal_dedup
-_EXTRA_ORACLES["multimodal_dedup"] = Q_MULTIMODAL_DEDUP_SQL
+_register("multimodal_dedup", q_multimodal_dedup, Q_MULTIMODAL_DEDUP_SQL,
+          plan_dump=True)
 
 
 def q_graph_degrees(spark, sf_dir):
@@ -12313,8 +12127,8 @@ SELECT bucket, CAST(pow(2, bucket) AS BIGINT) AS deg_lo, n_nodes,
 FROM b ORDER BY bucket
 """
 
-_EXTRA_QUERIES["graph_degrees"] = q_graph_degrees
-_EXTRA_ORACLES["graph_degrees"] = Q_GRAPH_DEGREES_SQL
+_register("graph_degrees", q_graph_degrees, Q_GRAPH_DEGREES_SQL,
+          plan_dump=True)
 
 
 def q_embed_norms(spark, sf_dir):
@@ -12352,8 +12166,7 @@ SELECT bucket,
 FROM b ORDER BY bucket
 """
 
-_EXTRA_QUERIES["embed_norms"] = q_embed_norms
-_EXTRA_ORACLES["embed_norms"] = Q_EMBED_NORMS_SQL
+_register("embed_norms", q_embed_norms, Q_EMBED_NORMS_SQL, plan_dump=True)
 
 
 def q_eval_ks(spark, sf_dir):
@@ -12410,8 +12223,7 @@ SELECT CAST(MAX(n_a) AS BIGINT) AS n_a,
 FROM d2
 """
 
-_EXTRA_QUERIES["eval_ks"] = q_eval_ks
-_EXTRA_ORACLES["eval_ks"] = Q_EVAL_KS_SQL
+_register("eval_ks", q_eval_ks, Q_EVAL_KS_SQL, plan_dump=True)
 
 
 def q_orders_lag_quantiles(spark, sf_dir):
@@ -12452,8 +12264,8 @@ def _q_orders_lag_sql():
 
 Q_ORDERS_LAG_SQL = _q_orders_lag_sql()
 
-_EXTRA_QUERIES["orders_lag_quantiles"] = q_orders_lag_quantiles
-_EXTRA_ORACLES["orders_lag_quantiles"] = Q_ORDERS_LAG_SQL
+_register("orders_lag_quantiles", q_orders_lag_quantiles, Q_ORDERS_LAG_SQL,
+          plan_dump=True)
 
 
 def q_dedup_cluster_sizes(spark, sf_dir):
@@ -12493,8 +12305,8 @@ FROM csz GROUP BY size ORDER BY size
 
 Q_DEDUP_CLUSTER_SIZES_SQL = _q_dedup_cluster_sizes_sql()
 
-_EXTRA_QUERIES["dedup_cluster_sizes"] = q_dedup_cluster_sizes
-_EXTRA_ORACLES["dedup_cluster_sizes"] = Q_DEDUP_CLUSTER_SIZES_SQL
+_register("dedup_cluster_sizes", q_dedup_cluster_sizes,
+          Q_DEDUP_CLUSTER_SIZES_SQL, plan_dump=True)
 
 
 def q_geo_compact(spark, sf_dir):
@@ -12554,8 +12366,7 @@ c{p} AS MATERIALIZED (SELECT px AS x, py AS y FROM f{z})""".format(
 
 Q_GEO_COMPACT_SQL = _q_geo_compact_sql()
 
-_EXTRA_QUERIES["geo_compact"] = q_geo_compact
-_EXTRA_ORACLES["geo_compact"] = Q_GEO_COMPACT_SQL
+_register("geo_compact", q_geo_compact, Q_GEO_COMPACT_SQL, plan_dump=True)
 
 
 def q_geo_uncompact(spark, sf_dir):
@@ -12594,8 +12405,8 @@ FROM ({points})
 ORDER BY x, y
 """.format(points=_POINTS_SQL)
 
-_EXTRA_QUERIES["geo_uncompact"] = q_geo_uncompact
-_EXTRA_ORACLES["geo_uncompact"] = Q_GEO_UNCOMPACT_SQL
+_register("geo_uncompact", q_geo_uncompact, Q_GEO_UNCOMPACT_SQL,
+          plan_dump=True)
 
 
 def q_text_lexicon(spark, sf_dir):
@@ -12645,8 +12456,7 @@ SELECT doc_id, n_tokens, pos_n, neg_n,
 FROM j ORDER BY doc_id
 """
 
-_EXTRA_QUERIES["text_lexicon"] = q_text_lexicon
-_EXTRA_ORACLES["text_lexicon"] = Q_TEXT_LEXICON_SQL
+_register("text_lexicon", q_text_lexicon, Q_TEXT_LEXICON_SQL, plan_dump=True)
 
 
 def q_table_keys(spark, sf_dir):
@@ -12687,8 +12497,7 @@ Q_TABLE_KEYS_SQL = (
     + ") ORDER BY col"
 )
 
-_EXTRA_QUERIES["table_keys"] = q_table_keys
-_EXTRA_ORACLES["table_keys"] = Q_TABLE_KEYS_SQL
+_register("table_keys", q_table_keys, Q_TABLE_KEYS_SQL, plan_dump=True)
 
 
 def q_events_new_users(spark, sf_dir):
@@ -12726,5 +12535,5 @@ SELECT CAST(d AS BIGINT) AS day_id,
 FROM f GROUP BY d ORDER BY day_id
 """
 
-_EXTRA_QUERIES["events_new_users"] = q_events_new_users
-_EXTRA_ORACLES["events_new_users"] = Q_EVENTS_NEW_USERS_SQL
+_register("events_new_users", q_events_new_users, Q_EVENTS_NEW_USERS_SQL,
+          plan_dump=True)

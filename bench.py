@@ -19,225 +19,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = [
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_parts_per_brand",
-    "events_hourly",
-    "geo_parse_normalize",
-    "geo_dateline_split",
-    "geo_pip_grid",
-    "geo_pip_holes",
-    "geo_knn",
-    "geo_tile_assign",
-    "geo_tile_pyramid",
-    "geo_cell_index",
-    "geo_bbox_agg",
-    "geo_transform",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_simhash_pairs",
-    "dedup_ngram_spans",
-    "decontam_ngram",
-    "corpus_curate",
-    "sample_hash",
-    "sample_stratified",
-    "text_tokens",
-    "text_quality",
-    "text_langid",
-    "text_simhash",
-    "text_gopher",
-    "text_repetition",
-    "pack_shards",
-    "ann_topk",
-    "ann_lsh",
-    "ann_ivf",
-    "embed_cosine_pairs_lsh",
-    "semdedup",
-    "bm25_search",
-    "graph_pagerank",
-    "embed_label_stats",
-    "multimodal_meta",
-    "geo_merge_burst",
-    "geo_tile_join",
-    "events_sessionize",
-    "events_asof",
-    "events_range_join",
-    "pricing_rollup",
-    "geo_poly_intersect",
-    "dedup_lines",
-    "dedup_incremental",
-    "sample_mixture",
-    "text_quality_linear",
-    "text_surprisal",
-    "text_quality_adaptive",
-    "text_drift",
-    "bpe_merges",
-    "web_canonical",
-    "web_keep_latest",
-    "web_frontier",
-    "web_domain_stats",
-    "pii_redact",
-    "chunk_documents",
-    "sketch_cms",
-    "sketch_hll",
-    "length_quantiles",
-    "web_link_graph",
-    "events_pivot",
-    "events_funnel",
-    "events_cohort",
-    "geo_knn_haversine",
-    "web_boilerplate",
-    "sample_importance",
-    "geo_area_centroid",
-    "geo_distance_join",
-    "geo_zorder_key",
-    "graph_hits",
-    "text_bigram_lm",
-    "web_anchor_text",
-    "decontam_embed",
-    "geo_simplify",
-    "text_compress",
-    "stream_sessions",
-    "table_profile",
-    "geo_text_coords",
-    "geo_pip_density",
-    "events_anomaly",
-    "sample_temperature",
-    "stream_geotag",
-    "dedup_setsim",
-    "geo_trajectory",
-    "events_transitions",
-    "stream_attribution",
-    # continuation-session additions (SURVEY.md section 2.16)
-    "geo_grid_cluster",
-    "geo_heatmap",
-    "graph_triangles",
-    "web_bloom",
-    "geo_geohash",
-    "events_rfm",
-    "geo_seg_intersect",
-    "events_sliding",
-    "sketch_hll_overlap",
-    "geo_idw",
-    "graph_kcore",
-    "orders_priority",
-    "geo_quadbin",
-    "stream_heatmap",
-    "events_abtest",
-    "geo_hull",
-    "geo_resample",
-    "text_keywords",
-    "graph_triangles_est",
-    "web_history",
-    "sample_epochs",
-    "geo_hexbin",
-    "geo_lisa",
-    "geo_moran",
-    "geo_od_flows",
-    "text_readability",
-    "graph_lpa",
-    "text_phrase",
-    "sketch_quantiles",
-    "web_redirects",
-    "geo_staypoints",
-    "table_cdc",
-    "web_robots",
-    "geo_cell_weights",
-    "web_components",
-    "graph_ppr",
-    "stream_cdc",
-    "sketch_kmv",
-    "web_path_stats",
-    # fourth-continuation-session additions (SURVEY.md section 2.18)
-    "geo_hilbert",
-    "geo_turns",
-    "table_diff",
-    "events_decay",
-    "graph_linkpred",
-    "geo_kmeans",
-    "events_attribution",
-    "events_bots",
-    "table_shards",
-    "table_quality",
-    "search_fusion",
-    "stream_decay",
-    "events_forecast",
-    "eval_auc",
-    "eval_calibration",
-    "events_paths",
-    "table_skew",
-    "graph_bfs",
-    "eval_ndcg",
-    "eval_rank_at_k",
-    "events_changepoint",
-    "table_compaction",
-    "sketch_topk",
-    "text_collocations",
-    "sample_balanced",
-    "geo_snap",
-    "web_mirror",
-    "web_crawl_schedule",
-    "geo_gistar",
-    "ann_ivfpq",
-    # fifth-session additions
-    "graph_walks",
-    "table_chi2",
-    "orders_basket",
-    "text_vocab_stats",
-    "table_benford",
-    "graph_reciprocity",
-    "eval_kappa",
-    "events_acf",
-    "events_runs",
-    "events_markov",
-    "table_simpson",
-    "geo_union_area",
-    "eval_mcc",
-    "table_histogram",
-    "embed_pca",
-    "events_seasonal",
-    "table_drift_chi2",
-    "text_code_detect",
-    "orders_backlog",
-    # sixth-session additions
-    "eval_lift",
-    "eval_brier",
-    "events_burstiness",
-    "text_zipf",
-    "table_fd",
-    "web_url_templates",
-    "graph_closeness",
-    "embed_outliers",
-    "eval_regression",
-    "graph_negsample",
-    "graph_skipgram",
-    "geo_knn_classify",
-    "sketch_ams",
-    "dedup_containment",
-    "multimodal_frames",
-    "geo_silhouette",
-    "eval_ngram_overlap",
-    "graph_modularity",
-    "events_wau",
-    "text_garbage",
-    "table_fk",
-    "events_interarrival",
-    "stream_ams",
-    "multimodal_dedup",
-    "graph_degrees",
-    "embed_norms",
-    "eval_ks",
-    "orders_lag_quantiles",
-    "dedup_cluster_sizes",
-    "geo_compact",
-    "geo_uncompact",
-    "text_lexicon",
-    "table_keys",
-    "events_new_users",
-]
+
+def bench_queries():
+    """The timed suite: every registry query with ``bench`` set, in
+    registration order.  Imports the entry module but starts no Spark."""
+    import __spark_entry__ as entry
+
+    return [q.name for q in entry.registry() if q.bench]
 
 
 def ensure_pages_parquet(spark, n_pages: int) -> str:
@@ -305,6 +93,7 @@ def main():
 
     timings = {}
     qs = entry.queries()
+    names = bench_queries()
 
     # warm the JVM, Python UDF workers, and the broadcast/refine machinery
     # once (excluded from timings) — first use of each path costs ~5-10s of
@@ -344,8 +133,8 @@ def main():
         return round(best, 3)
 
     litmus3 = [litmus_point()]
-    half = len(BENCH_QUERIES) // 2
-    for i, name in enumerate(BENCH_QUERIES):
+    half = len(names) // 2
+    for i, name in enumerate(names):
         timings[name] = round(time_query(name), 3)
         if i == half:
             litmus3.append(litmus_point())
@@ -385,7 +174,7 @@ def main():
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline suite wall-clock ({} oracle queries + pages spine)".format(
-            len(BENCH_QUERIES)
+            len(names)
         ),
         "value": total,
         "unit": "sec",

@@ -14,164 +14,13 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-HEADLINE = [
-    "pricing_summary",
-    "revenue_by_nation",
-    "geo_pip_grid",
-    "geo_tile_assign",
-    "geo_tile_join",
-    "geo_knn",
-    "dedup_minhash_lsh",
-    "events_sessionize",
-    "events_asof",
-    "events_range_join",
-    "multimodal_meta",
-    "ann_topk",
-    "ann_lsh",
-    "ann_ivf",
-    "embed_cosine_pairs_lsh",
-    "geo_poly_intersect",
-    "pricing_rollup",
-    "graph_pagerank",
-    "dedup_lines",
-    "pii_redact",
-    "chunk_documents",
-    "sketch_cms",
-    "sketch_hll",
-    "text_surprisal",
-    "text_quality_adaptive",
-    "bpe_merges",
-    "events_funnel",
-    "events_cohort",
-    "dedup_incremental",
-    "web_keep_latest",
-    "text_drift",
-    "length_quantiles",
-    "corpus_curate",
-    # round-4 additions
-    "geo_knn_haversine",
-    "geo_distance_join",
-    "geo_area_centroid",
-    "geo_zorder_key",
-    "geo_simplify",
-    "graph_hits",
-    "text_bigram_lm",
-    "web_anchor_text",
-    "web_boilerplate",
-    "sample_importance",
-    "decontam_embed",
-    "table_profile",
-    "text_compress",
-    "geo_text_coords",
-    "geo_pip_density",
-    "events_anomaly",
-    "sample_temperature",
-    # round-4 closing additions
-    "dedup_setsim",
-    "geo_trajectory",
-    "events_transitions",
-    # continuation-session additions (SURVEY.md section 2.16)
-    "geo_grid_cluster",
-    "geo_heatmap",
-    "geo_quadbin",
-    "geo_seg_intersect",
-    "geo_idw",
-    "geo_geohash",
-    "graph_triangles",
-    "graph_kcore",
-    "web_bloom",
-    "events_rfm",
-    "events_sliding",
-    "events_abtest",
-    "sketch_hll_overlap",
-    "orders_priority",
-    # fourth-continuation additions
-    "geo_hilbert",
-    "geo_turns",
-    "geo_kmeans",
-    "table_diff",
-    "table_shards",
-    "table_quality",
-    "events_decay",
-    "events_attribution",
-    "events_bots",
-    "graph_linkpred",
-    "search_fusion",
-    "events_forecast",
-    "eval_auc",
-    "eval_calibration",
-    "events_paths",
-    "table_skew",
-    "graph_bfs",
-    "eval_ndcg",
-    "eval_rank_at_k",
-    "events_changepoint",
-    "table_compaction",
-    "sketch_topk",
-    "text_collocations",
-    "sample_balanced",
-    "geo_snap",
-    "web_mirror",
-    "web_crawl_schedule",
-    "geo_gistar",
-    "ann_ivfpq",
-    # fifth-session additions (SURVEY.md section 2.20)
-    "graph_walks",
-    "table_chi2",
-    "orders_basket",
-    "text_vocab_stats",
-    "table_benford",
-    "graph_reciprocity",
-    "eval_kappa",
-    "events_acf",
-    "events_runs",
-    "events_markov",
-    "table_simpson",
-    "geo_union_area",
-    "eval_mcc",
-    "table_histogram",
-    "embed_pca",
-    "events_seasonal",
-    "table_drift_chi2",
-    "text_code_detect",
-    "orders_backlog",
-    # sixth-session additions
-    "eval_lift",
-    "eval_brier",
-    "events_burstiness",
-    "text_zipf",
-    "table_fd",
-    "web_url_templates",
-    "graph_closeness",
-    "embed_outliers",
-    "eval_regression",
-    "graph_negsample",
-    "graph_skipgram",
-    "geo_knn_classify",
-    "sketch_ams",
-    "dedup_containment",
-    "multimodal_frames",
-    "geo_silhouette",
-    "eval_ngram_overlap",
-    "graph_modularity",
-    "events_wau",
-    "text_garbage",
-    "table_fk",
-    "events_interarrival",
-    # stream_ams omitted: a streaming query whose dumped plan would only
-    # show the memory-sink scan (no stream_* query is in this list)
-    "multimodal_dedup",
-    "graph_degrees",
-    "embed_norms",
-    "eval_ks",
-    "orders_lag_quantiles",
-    "dedup_cluster_sizes",
-    "geo_compact",
-    "geo_uncompact",
-    "text_lexicon",
-    "table_keys",
-    "events_new_users",
-]
+
+def headline():
+    """The dumped queries: every registry query with ``plan_dump`` set, in
+    registration order.  Imports the entry module but starts no Spark."""
+    import __spark_entry__ as entry
+
+    return [q.name for q in entry.registry() if q.plan_dump]
 
 
 def main():
@@ -191,7 +40,7 @@ def main():
            "", "Scale factor dir: `{}`. AQE is enabled, so runtime-replanned".format(sf_dir),
            "stages may appear as AdaptiveSparkPlan; the static plan below is",
            "what Catalyst chose before runtime stats.", ""]
-    for name in HEADLINE:
+    for name in headline():
         df = qs[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")

@@ -23,17 +23,10 @@ sys.path.insert(0, REPO)
 
 
 def child(cores: int, pages_path: str):
-    from pyspark.sql import functions as F
-
-    from picogeojson_spark.operators import (
-        assign_tiles_points,
-        filter_by_type,
-        mine_features,
-        pip_join,
-    )
+    from picogeojson_spark.operators import mine_features
     from picogeojson_spark.session import get_spark
 
-    import __spark_entry__ as em
+    from bench import run_spine
 
     spark = get_spark(
         master="local[{}]".format(cores),
@@ -50,26 +43,11 @@ def child(cores: int, pages_path: str):
 
     def one_run():
         t0 = time.time()
-        # cache only the small points projection (not the wide features):
-        # materializing here both runs the mining once and keeps every stage
-        # at <=1 chained python UDF
-        pts = filter_by_type(mine_features(pages), "Point").select(
-            (F.pmod(F.col("doc_id"), F.lit(2**40)) * 100
-             + F.col("feature_idx")).alias("point_id"),
-            "lon",
-            "lat",
-        ).persist()
-        pts.count()
-        pairs = pip_join(pts, em._grid_polygons(spark))
-        n_pairs = pairs.count()
-        n_tiles = assign_tiles_points(pts, z=10).count()
-        secs = time.time() - t0
-        pts.unpersist()
-        return secs, n_pairs, n_tiles
+        joined = run_spine(spark, pages_path)
+        return time.time() - t0, joined
 
     # two serial repetitions; report the best (shields against ambient noise)
-    runs = [one_run(), one_run()]
-    secs, n_pairs, n_tiles = min(runs)
+    secs, joined = min(one_run(), one_run())
     spark.stop()
     print(
         json.dumps(
@@ -78,8 +56,8 @@ def child(cores: int, pages_path: str):
                 "n_pages": n_pages,
                 "secs": round(secs, 3),
                 "pages_per_sec": round(n_pages / secs, 1),
-                "joined_rows": n_pairs + n_tiles,
-                "joined_rows_per_sec": round((n_pairs + n_tiles) / secs, 1),
+                "joined_rows": joined,
+                "joined_rows_per_sec": round(joined / secs, 1),
             }
         )
     )

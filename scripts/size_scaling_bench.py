@@ -26,18 +26,11 @@ sys.path.insert(0, REPO)
 def main():
     sizes = [int(a) for a in sys.argv[1:]] or [200000, 800000, 2000000]
 
-    from pyspark.sql import functions as F
-
-    from picogeojson_spark.operators import (
-        assign_tiles_points,
-        filter_by_type,
-        mine_features,
-        pip_join,
-    )
+    from picogeojson_spark.operators import mine_features
     from picogeojson_spark.session import get_spark
     from picogeojson_spark.sources import pages_dataframe
 
-    import __spark_entry__ as em
+    from bench import run_spine
 
     spark = get_spark(
         master="local[32]",
@@ -55,19 +48,9 @@ def main():
         return path
 
     def spine(path):
-        pages = spark.read.parquet(path)
         t0 = time.time()
-        pts = filter_by_type(mine_features(pages), "Point").select(
-            (F.pmod(F.col("doc_id"), F.lit(2**40)) * 100
-             + F.col("feature_idx")).alias("point_id"),
-            "lon", "lat",
-        ).persist()
-        pts.count()
-        pip_join(pts, em._grid_polygons(spark)).count()
-        assign_tiles_points(pts, z=10).count()
-        dt = time.time() - t0
-        pts.unpersist()
-        return dt
+        run_spine(spark, path)
+        return time.time() - t0
 
     mine_features(spark.read.parquet(ensure(sizes[0])).limit(2000)).count()
     for n in sizes:

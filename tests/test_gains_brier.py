@@ -156,3 +156,26 @@ def test_brier_custom_scale(spark):
     assert r.brier_ppm == 2 * 10**6 // (2 * 16)
     with pytest.raises(ValueError):
         brier_score(_pdf(spark, rows), scale=0)
+
+
+def test_brier_oracle_matches_spark_past_int64(spark, tmp_path):
+    """eval_brier's DuckDB oracle vs its Spark query on 20k documents,
+    about half of them positive: pos * (n - pos) is ~1e8, so the scaled
+    skill numerator (~1e20) is past INT64 and must run in HUGEINT."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        [(i, (i * 7919) % 600) for i in range(20000)],
+        "doc_id long, n_chars long",
+    ).write.parquet(path)
+    got = [tuple(r) for r in entry.q_eval_brier(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                "read_parquet('{}/*.parquet')".format(path))
+    want = con.execute(entry.oracle_sql()["eval_brier"]).fetchall()
+    n, pos = got[0][:2]
+    assert n == 20000 and pos * (n - pos) > 9 * 10**7
+    assert got == want
