@@ -7,4 +7,10 @@ fortyninemaps/picogeojson v0.8.0 exactly (the ``geo`` kernel), and execution
 expressed as Spark DataFrame plans with Arrow-batched pandas UDFs.
 """
 
+from .session import install_zip_invalidation_guard
+
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an engine UDF imports this package, so
+# the guard covers all of the engine's Python stages
+install_zip_invalidation_guard()

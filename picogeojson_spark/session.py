@@ -5,15 +5,86 @@ cluster the package ships via ``spark-submit --py-files picogeojson_spark.zip``
 (see ``build_pyfiles_zip``); ``ensure_shipped`` is the programmatic
 equivalent (``sc.addPyFile``) for sessions created without it — it closes
 the "works in the repo checkout, fails on executors" gap.
+``install_zip_invalidation_guard`` removes the per-task cost of the zips a
+Python worker imports from (``pyspark.zip``, py4j, jars, this package's own
+shipped zip).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
 import tempfile
 import zipfile
 
 _PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+
+
+def install_zip_invalidation_guard() -> bool:
+    """Skip zip re-reads that cannot change what an import finds.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task, and before CPython 3.13 each ``zipimporter`` on ``sys.path`` then
+    re-reads its archive's whole central directory (``pyspark.zip`` alone
+    has about a dozen importers). The guard re-reads an archive only when its
+    ``(st_mtime_ns, st_size, st_ino)`` differs from the stat taken before
+    its last read, or when the stat fails; otherwise the importer gets that
+    read's directory back. A rewritten or deleted archive is re-read as
+    before. Every archive gets its stat key when the guard first sees it:
+    the path importers that exist at install, and each importer created
+    later for an archive not seen yet, read it once more right away, so the
+    next task's set-up reads nothing.
+
+    Installed once per process (idempotent). Returns whether the guard is
+    installed; always False on 3.13+, whose invalidation is already lazy.
+    """
+    if sys.version_info >= (3, 13):
+        return False
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if hasattr(cls.invalidate_caches, "__wrapped__"):
+        return True
+    stock = cls.invalidate_caches
+    # archive path -> (stat key taken just before its last directory read,
+    # the directory that read returned)
+    last_reads = {}
+
+    @functools.wraps(stock)
+    def invalidate_caches(self):
+        archive = self.archive
+        try:
+            st = os.stat(archive)
+        except OSError:
+            last_reads.pop(archive, None)
+            return stock(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        last = last_reads.get(archive)
+        if last is not None and last[0] == key:
+            self._files = last[1]
+            zipimport._zip_directory_cache[archive] = last[1]
+            return
+        stock(self)
+        if zipimport._zip_directory_cache.get(archive) is self._files:
+            last_reads[archive] = (key, self._files)
+        else:  # unreadable archive: the stock method emptied it
+            last_reads.pop(archive, None)
+
+    stock_init = cls.__init__
+
+    @functools.wraps(stock_init)
+    def __init__(self, path):
+        stock_init(self, path)
+        if self.archive not in last_reads:
+            invalidate_caches(self)
+
+    cls.invalidate_caches = invalidate_caches
+    cls.__init__ = __init__
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, cls):
+            invalidate_caches(importer)
+    return True
 
 
 def build_pyfiles_zip(out_path: str = None) -> str:

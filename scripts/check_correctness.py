@@ -140,7 +140,10 @@ def main():
     # JVM starts — the 1g default OOMs on shuffle-heavy queries at sf0.1
     # (first hit: graph_triangles' 90M-wedge stage took the whole session
     # down mid-gate). Overridable via GATE_DRIVER_MEM.
+    # no console progress bar: its \r-written lines would share log lines
+    # with the PASS rows (spark.ui.enabled=false does not turn it off)
     extra = {"spark.ui.enabled": "false",
+             "spark.ui.showConsoleProgress": "false",
              "spark.driver.memory": os.environ.get("GATE_DRIVER_MEM",
                                                    "16g")}
     if "GATE_ANSI" in os.environ:
