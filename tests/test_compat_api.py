@@ -8,7 +8,7 @@ import pytest
 
 from picogeojson_spark.geo import compat
 
-FIXTURES = "/root/reference/tests"
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 def _fixture(name):

@@ -54,7 +54,7 @@ def test_documented_edge_semantics():
                    False, False, False]
 
 
-def test_hole_boundary(oracle):
+def test_hole_boundary():
     rings = [
         [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]],
         # hole, CW per RFC winding
@@ -72,7 +72,7 @@ def test_hole_boundary(oracle):
     assert got.tolist() == [c[2] for c in cases]
 
 
-def test_dateline_adjacent(oracle):
+def test_dateline_adjacent():
     """Points ±180-adjacent against the reference's dateline polygon, cut."""
     from picogeojson_spark.geo import cut_dateline, make_polygon
 
