@@ -178,10 +178,14 @@ def _feature_rows(url, doc_id, parsed_docs, level, max_cells):
             try:
                 cut = cut_dateline(geom)
                 bb = _bbox2d(cut)
-            except (TypeError, ValueError, KeyError, IndexError) as e:
+                cells = None if bb is None else cover_bbox_ints(
+                    bb[0], bb[1], bb[2], bb[3], level, max_cells)
+            except (TypeError, ValueError, KeyError, IndexError,
+                    OverflowError) as e:
                 # degenerate shapes the reference itself cannot serialize
-                # (e.g. mixed-dimensionality GeometryCollections) surface as
-                # error rows, never as task failures
+                # (e.g. mixed-dimensionality GeometryCollections) and
+                # non-finite coordinates (NaN, Infinity, 1e400), which have
+                # no cell, surface as error rows, never as task failures
                 yield {
                     "url": url, "doc_id": doc_id, "feature_idx": idx,
                     "geom_type": geom.get("type"), "geometry_json": None,
@@ -193,11 +197,8 @@ def _feature_rows(url, doc_id, parsed_docs, level, max_cells):
                 idx += 1
                 continue
             if bb is None:
-                cells = None
                 lon = lat = None
             else:
-                cells = cover_bbox_ints(bb[0], bb[1], bb[2], bb[3],
-                                        level, max_cells)
                 lon = (bb[0] + bb[2]) / 2.0
                 lat = (bb[1] + bb[3]) / 2.0
             if geom["type"] == "Point":

@@ -67,16 +67,31 @@ def _round_loop(start, step, rounds, finish=None, iteration_log=None):
     ``start`` is the round-0 vector, persisted by the caller when a later
     round reads it again; it is also round 0's frontier.  Round ``r``
     (1-based) builds ``next_state, frontier = step(state, frontier, r)``
-    as lazy plans, persists both — the frontier first, so a state built
-    from it reads its cache — and runs exactly ONE Spark action, a count
-    of the new frontier.  An empty frontier is a fixed point and ends the
-    loop before ``rounds``; the state then stays the previous round's.
-    Steps of the form ``(v, v)`` never stop early.  At exit — bound
-    reached, empty frontier or error — the loop returns
-    ``finish(state).localCheckpoint(eager=True)`` and unpersists every
-    vector it pinned, ``start`` included, so nothing stays in the SQL
-    CacheManager after the operator returns.  ``iteration_log`` gets one
-    ``{"round", "wall_s", "gc_ms"}`` dict per round (see ``pagerank``).
+    as lazy plans and runs exactly ONE Spark action.  Before the last
+    round it persists both — the frontier first, so a state built from
+    it reads its cache — and counts the new frontier.  An empty frontier
+    is a fixed point and ends the loop early, returning
+    ``finish(state).localCheckpoint(eager=True)`` with the previous
+    round's state.  Steps of the form ``(v, v)`` never stop early.
+    Whatever the exit — bound reached, empty frontier or error — the loop
+    unpersists every vector it pinned, ``start`` included, so nothing
+    stays in the SQL CacheManager after the operator returns.
+    ``iteration_log`` gets one ``{"round", "wall_s", "gc_ms"}`` dict per
+    round (see ``pagerank``).
+
+    Last-round rule: round ``rounds`` builds no frontier cache and runs
+    no count; its action IS the returned checkpoint, of
+    ``finish(next_state)``.  ``next_state`` is still persisted, so the
+    checkpoint, which fills that cache, takes its real size as its
+    statistics; checkpointed from the bare plan it would carry Catalyst's
+    estimate (GBs for a 2000-node vector), and a join with the result
+    would no longer broadcast it.  The rule is exact even when the last
+    frontier would have come out empty, because ``next_state`` then
+    holds ``state``'s rows: the BFS union adds no row, sssp's min over
+    ``dist ∪ ∅`` is ``dist``, and ``(v, v)`` steps never stop early.  A
+    call that runs all its rounds thus runs ``rounds`` actions, not
+    ``rounds + 1``; one whose round r < ``rounds`` finds an empty
+    frontier runs r + 1.
 
     Vectors are PERSISTED, not localCheckpointed: a checkpoint is an
     opaque RDD scan whose outputPartitioning Catalyst forgets, so the next
@@ -104,6 +119,12 @@ def _round_loop(start, step, rounds, finish=None, iteration_log=None):
         for r in range(1, rounds + 1):
             t0, gc0 = _iter_probe_start(spark, iteration_log)
             nxt, new = step(state, frontier, r)
+            if r == rounds:
+                pinned.append(nxt.persist())
+                out = (finish(nxt) if finish else nxt).localCheckpoint(
+                    eager=True)
+                _iter_probe_end(spark, iteration_log, r - 1, t0, gc0)
+                return out
             pinned += [new.persist(), nxt if nxt is new else nxt.persist()]
             empty = new.count() == 0
             _iter_probe_end(spark, iteration_log, r - 1, t0, gc0)
@@ -158,7 +179,7 @@ def pagerank(
     retrieval-expansion and related-nodes primitive): initial mass and
     the per-round teleport base go only to the listed seed nodes
     (``scale div n_seeds`` each, 0 elsewhere); the iteration loop
-    (:func:`_round_loop`, one count per round) and the integer
+    (:func:`_round_loop`, one action per round) and the integer
     determinism contract are shared verbatim with the uniform variant.
     ``seeds`` is a small in-driver
     sequence (query-sized, not corpus-sized); seeds absent from the
@@ -166,7 +187,8 @@ def pagerank(
 
     ``iteration_log``: pass a list to receive one dict per round
     ``{"round", "wall_s", "gc_ms"}`` (wall time of the round's
-    materializing count + driver-JVM GC time delta — in local mode the
+    materializing action, the last round's being the returned
+    checkpoint, + driver-JVM GC time delta — in local mode the
     driver JVM IS the executor, so this captures executor GC).  The
     round-4 verdict flagged a code-invariant 2-10x wall spread on this
     loop; the log is the adjudication instrument
@@ -626,7 +648,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     neighbor key so every round reuses the same layout), one map-side-
     combined (node, label) count, and one per-node top-1 window
     (WindowGroupLimit — partial rank before the shuffle).  Rounds run
-    through :func:`_round_loop` with one count each.  Labels never leave
+    through :func:`_round_loop` with one action each.  Labels never leave
     the JVM.
     """
     if rounds < 1:
@@ -725,7 +747,7 @@ def bfs_hops(edges: DataFrame, sources: DataFrame,
     persisted and hash-partitioned on the join key so every round reuses
     one layout — then one distinct and one anti-join against the
     visited set (:func:`_bfs_step`).  Rounds run through
-    :func:`_round_loop` with one count each and stop early on an empty
+    :func:`_round_loop` with one action each and stop early on an empty
     frontier, so diameter-small graphs never pay the full bound.  Hop
     values never leave the JVM.
     """
@@ -982,8 +1004,9 @@ def sssp_bounded(
     symmetric edge table (persisted, hash-partitioned on the join key —
     one layout reused every round), then one map-side-combined min per
     candidate node and one min-merge groupBy over the node-bounded dist
-    vector.  Rounds run through :func:`_round_loop` with one count each
-    (the improved set); weights and distances never leave the JVM.
+    vector.  Rounds run through :func:`_round_loop` with one action each
+    (a count of the improved set; in the last round, the returned
+    checkpoint); weights and distances never leave the JVM.
     """
     if max_rounds < 0:
         raise ValueError("max_rounds must be >= 0")

@@ -74,27 +74,33 @@ def polygon_cover_df(polygons: DataFrame, level: int = DEFAULT_LEVEL,
     )
 
 
-def cell_expr(lon, lat, level: int):
-    """JVM-side replica of ``geo.cells.cell_of``: same double arithmetic in
-    the same order (add, divide, multiply, floor — all IEEE-754 binary64 on
-    both sides), same clip, same bit packing, so the produced cell ids are
-    BIT-IDENTICAL to the numpy kernel (pinned by a differential test over
-    random points plus the ±180/±90 edges). Being a plain expression it
-    runs in whole-stage codegen — no Python worker on the point side."""
+def _cell_sql(lon: str, lat: str, level: int) -> str:
+    """SQL text of ``geo.cells.cell_of`` over the columns named ``lon`` and
+    ``lat``: same double arithmetic in the same order (add, divide,
+    multiply, floor — all IEEE-754 binary64 on both sides; the ``D``
+    suffix keeps the literals doubles, not decimals), same clip, same bit
+    packing."""
     from ..geo.cells import grid_shape
 
     nx, ny = grid_shape(level)
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx)))
-    y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(ny)))
-    x = F.least(F.greatest(x, F.lit(0).cast("long")),
-                F.lit(int(nx - 1)).cast("long"))
-    y = F.least(F.greatest(y, F.lit(0).cast("long")),
-                F.lit(int(ny - 1)).cast("long"))
-    return (
-        F.lit(int(level) << LEVEL_SHIFT).cast("long")
-        .bitwiseOR(F.shiftleft(x, X_SHIFT))
-        .bitwiseOR(y)
-    )
+
+    def axis(col, offset, span, n):
+        return ("least(greatest(floor((`{c}` + {o!r}D) / {s!r}D * {n!r}D),"
+                " 0L), {m}L)".format(c=col, o=offset, s=span, n=float(n),
+                                     m=n - 1))
+
+    return "{tag}L | shiftleft({x}, {xs}) | {y}".format(
+        tag=int(level) << LEVEL_SHIFT, xs=X_SHIFT,
+        x=axis(lon, 180.0, 360.0, nx), y=axis(lat, 90.0, 180.0, ny))
+
+
+def cell_expr(lon: str, lat: str, level: int):
+    """JVM-side replica of ``geo.cells.cell_of`` over the columns named
+    ``lon`` and ``lat`` (:func:`_cell_sql`), so the produced cell ids are
+    BIT-IDENTICAL to the numpy kernel (pinned by a differential test over
+    random points plus the ±180/±90 edges). Being a plain expression it
+    runs in whole-stage codegen — no Python worker on the point side."""
+    return F.expr(_cell_sql(lon, lat, level))
 
 
 def point_ancestors_df(points: DataFrame, level: int = DEFAULT_LEVEL,
@@ -102,15 +108,15 @@ def point_ancestors_df(points: DataFrame, level: int = DEFAULT_LEVEL,
     """points(point_id, lon, lat) -> (cell, point_id, lon, lat), one row per
     ancestor level so mixed-level polygon covers still equi-join.
 
-    Pure JVM expressions (``cell_expr`` per level, one array explode): the
-    point side — unbounded at production scale — pays NO Python stage here,
-    which also leaves the exact-refine UDF as the only Python stage in the
-    whole pip_join pipeline (chained mapInPandas UDFs in one stage
-    oversubscribe python workers; see CLAUDE.md)."""
-    cells = F.array(*[
-        cell_expr(F.col("lon"), F.col("lat"), lv)
-        for lv in range(min_level, level + 1)
-    ])
+    Pure JVM expressions (the :func:`cell_expr` SQL per level, one array
+    explode): the point side — unbounded at production scale — pays NO
+    Python stage here, which also leaves the exact-refine UDF as the only
+    Python stage in the whole pip_join pipeline (chained mapInPandas UDFs
+    in one stage oversubscribe python workers; see CLAUDE.md).  The array
+    is parsed from one SQL string; built from Column objects it would cost
+    ~210 py4j calls on the driver."""
+    cells = F.expr("array({})".format(", ".join(
+        _cell_sql("lon", "lat", lv) for lv in range(min_level, level + 1))))
     return points.select(
         F.explode(cells).alias("cell"), "point_id", "lon", "lat"
     )

@@ -1,5 +1,5 @@
 """label_propagation: convergence on disjoint cliques, python brute
-replay differential; cache hygiene and one count per round for every
+replay differential; cache hygiene and one action per round for every
 operator on the shared round loop."""
 
 import pytest
@@ -68,14 +68,12 @@ LOOP_OPS = ("pagerank", "label_propagation", "bfs_hops", "sssp_bounded",
 FRONTIER_OPS = ("bfs_hops", "sssp_bounded", "closeness_sample")
 
 
-def _run_loop_op(spark, op, seed, rounds=3):
-    """``op`` over the unit-weight path 1-2-3-4-5 (seeded ops from
+def _run_loop_op(spark, op, seed, rounds=3, n=5):
+    """``op`` over the unit-weight path 1-2-...-n (seeded ops from
     ``seed``)."""
     from picogeojson_spark.operators import graph
 
-    e = spark.createDataFrame(
-        [(1, 2, 1), (2, 3, 1), (3, 4, 1), (4, 5, 1)],
-        "u long, v long, w long")
+    e = spark.range(1, n).selectExpr("id AS u", "id + 1 AS v", "1L AS w")
     uv = e.select("u", "v")
     src = spark.createDataFrame([(seed,)], "node long")
     if op == "pagerank":
@@ -91,16 +89,23 @@ def _run_loop_op(spark, op, seed, rounds=3):
     return graph.sssp_bounded(e, src, max_rounds=rounds)
 
 
-def _fail_round_2(loop):
-    """``_round_loop`` whose round-2 frontier count fails in the tasks."""
+def _fail_round(loop, k):
+    """``_round_loop`` whose round-``k`` vectors fail in the tasks: the
+    frontier count raises before the last round, the returned checkpoint
+    in it."""
     from pyspark.sql import functions as F
+
+    def fail(df):
+        msg = "round {} fails".format(k)
+        return df.filter(F.raise_error(F.lit(msg)).isNull())
 
     def failing_loop(start, step, rounds, *args, **kwargs):
         def failing_step(state, frontier, r):
             nxt, new = step(state, frontier, r)
-            if r == 2:
-                new = new.filter(F.raise_error(F.lit("round 2 fails"))
-                                 .isNull())
+            if r == k:
+                failed = fail(nxt)
+                new = failed if nxt is new else fail(new)
+                nxt = failed
             return nxt, new
         return loop(start, failing_step, rounds, *args, **kwargs)
     return failing_loop
@@ -109,16 +114,20 @@ def _fail_round_2(loop):
 @pytest.mark.parametrize("op,case", (
     [(op, "bound") for op in LOOP_OPS]
     + [(op, "seed_without_edges") for op in FRONTIER_OPS]
-    + [(op, "round_2_raises") for op in LOOP_OPS]))
+    + [(op, "round_2_raises") for op in LOOP_OPS]
+    + [(op, "last_round_raises") for op in LOOP_OPS]))
 def test_no_pinned_cache_after_return(spark, monkeypatch, op, case):
     from picogeojson_spark.operators import graph
 
     jcm = spark._jsparkSession.sharedState().cacheManager()
     seed = 99 if case == "seed_without_edges" else 1
-    if case == "round_2_raises":
+    if case.endswith("_raises"):
+        # from node 1 every frontier up to round 3 is non-empty, so round
+        # 3 is the last of the default 3
+        k = 2 if case == "round_2_raises" else 3
         monkeypatch.setattr(graph, "_round_loop",
-                            _fail_round_2(graph._round_loop))
-        with pytest.raises(Exception, match="round 2 fails"):
+                            _fail_round(graph._round_loop, k))
+        with pytest.raises(Exception, match="round {} fails".format(k)):
             _run_loop_op(spark, op, seed).collect()
     else:
         assert _run_loop_op(spark, op, seed).count() > 0
@@ -126,18 +135,45 @@ def test_no_pinned_cache_after_return(spark, monkeypatch, op, case):
 
 
 @pytest.mark.parametrize("op", LOOP_OPS)
-def test_one_count_per_round(spark, monkeypatch, op):
+def test_one_action_per_round(spark, monkeypatch, op):
     # from node 3 the frontier is {2, 4}, then {1, 5}, then empty: the
-    # frontier ops stop in round 3 of 6; pagerank and LPA run all 3 rounds
-    # and pagerank counts its node set once before them
-    counts = []
+    # frontier ops count it in rounds 1-3 of 6 and then checkpoint round
+    # 2's state; pagerank and LPA count rounds 1-2 of 3, the checkpoint is
+    # round 3's action, and pagerank counts its node set once before them
+    calls = {"count": 0, "localCheckpoint": 0}
     cls = type(spark.range(1))   # the session's concrete DataFrame class
-    real = cls.count
-    monkeypatch.setattr(cls, "count",
-                        lambda df: counts.append(1) or real(df))
+    for name in calls:
+        def spy(df, *args, _name=name, _real=getattr(cls, name), **kwargs):
+            calls[_name] += 1
+            return _real(df, *args, **kwargs)
+        monkeypatch.setattr(cls, name, spy)
     rounds = 3 if op in ("pagerank", "label_propagation") else 6
     _run_loop_op(spark, op, 3, rounds=rounds).collect()
-    assert len(counts) == 3 + (op == "pagerank")
+    counts = 2 if op == "label_propagation" else 3
+    assert calls == {"count": counts, "localCheckpoint": 1}
+
+
+@pytest.mark.parametrize("op", FRONTIER_OPS)
+def test_frontier_empty_at_bound(spark, op):
+    # from node 3 round 3's frontier is the first empty one: with a bound
+    # of 3 the last round returns its state without counting it
+    def rows(rounds):
+        return sorted(_run_loop_op(spark, op, 3, rounds=rounds).collect())
+
+    at_bound = rows(3)
+    assert at_bound == rows(6)
+    assert len(at_bound) == (1 if op == "closeness_sample" else 5)
+
+
+@pytest.mark.parametrize("op", LOOP_OPS)
+def test_result_reports_materialized_size(spark, op):
+    # a checkpoint takes the statistics of the plan it saves: a filled
+    # cache reports the vector's real size (~32 KB here), a bare plan
+    # Catalyst's join-product estimate (~1 GB), which stops a join with
+    # the result from broadcasting it
+    size = (_run_loop_op(spark, op, 1, n=2000)._jdf.queryExecution()
+            .optimizedPlan().stats().sizeInBytes())
+    assert size < 2**20, size
 
 
 def test_rounds_validation(spark):
@@ -145,3 +181,4 @@ def test_rounds_validation(spark):
 
     with pytest.raises(ValueError):
         label_propagation(_edges(spark, [(1, 2)]), rounds=0)
+

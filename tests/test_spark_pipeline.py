@@ -81,6 +81,25 @@ def test_mined_features_match_oracle(spark, features):
     assert len(expected) > N_PAGES * 0.5  # corpus actually contains geometry
 
 
+@pytest.mark.parametrize("literal", ["NaN", "Infinity", "1e400"])
+def test_non_finite_coordinates_become_error_rows(spark, literal):
+    """A candidate whose coordinates parse to NaN or ±inf has no cell: it
+    must yield one parse_error row, and the page's other features must
+    survive (not fail the mining task)."""
+    text = ('<p>{"type": "Point", "coordinates": [%s, 1.0]} and '
+            '{"type": "Point", "coordinates": [2.0, 3.0]}</p>' % literal)
+    pages = spark.createDataFrame([("http://x/nan", text)],
+                                  "url string, text string")
+    rows = sorted(mine_features(pages, partitions=1).collect(),
+                  key=lambda r: r.feature_idx)
+    assert [r.geom_type for r in rows] == ["Point", "Point"]
+    bad, good = rows
+    assert bad.parse_error.split(":")[0] in ("ValueError", "OverflowError")
+    assert bad.cells is None and bad.geometry_json is None
+    assert good.parse_error is None
+    assert (good.lon, good.lat) == (2.0, 3.0) and good.cells
+
+
 def test_filter_helpers(spark, features):
     pts = filter_by_type(features, "Point")
     assert pts.filter("geom_type != 'Point'").count() == 0
@@ -218,7 +237,7 @@ def test_cell_expr_matches_numpy_kernel(spark):
     for lv in range(MIN_LEVEL, 11):
         got = np.array([
             r.c for r in pdf.select(
-                cell_expr(F.col("lon"), F.col("lat"), lv).alias("c")
+                cell_expr("lon", "lat", lv).alias("c")
             ).collect()
         ])
         want = cell_of(lon, lat, lv)
