@@ -41,8 +41,9 @@ def ensure_pages_parquet(spark, n_pages: int) -> str:
     return path
 
 
-def run_spine(spark, pages_path: str):
-    """The headline pipeline: pages parquet -> mine -> PIP join + tiles."""
+def run_spine(pages):
+    """The headline pipeline: pages -> mine -> PIP join + tiles; returns
+    the joined plus tiled row count."""
     from pyspark.sql import functions as F
 
     from picogeojson_spark.operators import (
@@ -54,7 +55,7 @@ def run_spine(spark, pages_path: str):
 
     import __spark_entry__ as entry_mod
 
-    pages = spark.read.parquet(pages_path)
+    spark = pages.sparkSession
     # cache only the small points projection; materializing it runs the
     # mining once and keeps every stage at <=1 chained python UDF
     pts = filter_by_type(mine_features(pages), "Point").select(
@@ -150,7 +151,7 @@ def main():
     spine_sec = float("inf")
     for _ in range(3):
         t0 = time.time()
-        joined = run_spine(spark, pages_path)
+        joined = run_spine(spark.read.parquet(pages_path))
         spine_sec = min(spine_sec, time.time() - t0)
     timings["pages_spine"] = round(spine_sec, 3)
 

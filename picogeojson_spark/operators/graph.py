@@ -143,6 +143,25 @@ def _round_loop(start, step, rounds, finish=None, iteration_log=None):
             df.unpersist()
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` that reports ``df``'s real size.
+
+    A checkpoint takes the statistics of the plan it saves.  Of a bare
+    plan those are Catalyst's estimate (1e17 to 1e128 bytes for the
+    results of ``hits``, ``k_truss`` and ``random_walks`` on a 2000-node
+    path), so a join with the result could never broadcast it.  With
+    ``df`` persisted the checkpoint fills the cache and takes its real
+    size; the cache is released once the checkpoint holds the rows.
+    This is :func:`_round_loop`'s last-round rule for operators whose
+    rounds do not run through it.
+    """
+    df.persist()
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        df.unpersist()
+
+
 def _symmetrize(edges: DataFrame, *extra) -> DataFrame:
     """Both directions of every undirected ``(u, v)`` edge: ``edges``
     plus ``edges`` with u and v swapped (a lazy union, no dedup).  The
@@ -392,7 +411,7 @@ def hits(
             _iter_probe_end(edges.sparkSession, iteration_log,
                             _it, _t0, _gc0)
 
-        out = (
+        out = _materialized(
             nodes.join(hubs.withColumnRenamed("node", "n1"),
                        F.col("node") == F.col("n1"), "left")
             .join(auths.withColumnRenamed("node", "n2"),
@@ -402,7 +421,6 @@ def hits(
                 F.coalesce("hub", F.lit(0)).cast("long").alias("hub"),
                 F.coalesce("auth", F.lit(0)).cast("long").alias("auth"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         e_src.unpersist()
@@ -1097,14 +1115,13 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
         raise ValueError("k must be >= 3 (k=3 keeps triangle edges)")
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    e = edges.select("u", "v").localCheckpoint(eager=True)
+    e = _materialized(edges.select("u", "v"))
     n = e.count()
     for _ in range(rounds):
-        keep = (
+        keep = _materialized(
             edge_support(e)
             .filter(F.col("support") >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
         nk = keep.count()
         e = keep
@@ -1181,7 +1198,7 @@ def random_walks(edges: DataFrame, walk_length: int = 4,
             out = out.union(state.select(
                 "walk_id", F.lit(t).cast("long").alias("step"),
                 F.col("cur").alias("node")))
-        return out.localCheckpoint(eager=True)
+        return _materialized(out)
     finally:
         adj.unpersist()
 

@@ -47,7 +47,12 @@ def fixture_docs():
 
 @pytest.fixture(scope="session")
 def spark():
+    """The suite's one session.  The package zip ships at start-up, so
+    every Python worker imports from the same path whichever tests ran
+    before (a registry query would otherwise ship it midway)."""
     from pyspark.sql import SparkSession
+
+    from picogeojson_spark.session import ensure_shipped
 
     spark = (
         SparkSession.builder.master("local[4]")
@@ -59,5 +64,6 @@ def spark():
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    ensure_shipped(spark)
     yield spark
     spark.stop()

@@ -1,6 +1,7 @@
 """label_propagation: convergence on disjoint cliques, python brute
 replay differential; cache hygiene and one action per round for every
-operator on the shared round loop."""
+operator on the shared round loop; real result sizes for every
+checkpointed graph result."""
 
 import pytest
 
@@ -173,6 +174,23 @@ def test_result_reports_materialized_size(spark, op):
     # the result from broadcasting it
     size = (_run_loop_op(spark, op, 1, n=2000)._jdf.queryExecution()
             .optimizedPlan().stats().sizeInBytes())
+    assert size < 2**20, size
+
+
+@pytest.mark.parametrize("op", ["hits", "k_truss", "random_walks"])
+def test_unlooped_result_reports_materialized_size(spark, op):
+    # the operators that keep their own loops return checkpoints too, and
+    # the same rule holds: their results report their real size
+    from picogeojson_spark.operators import graph
+
+    e = spark.range(1, 2000).selectExpr("id AS u", "id + 1 AS v")
+    if op == "hits":
+        out = graph.hits(e, src_col="u", dst_col="v")
+    elif op == "k_truss":
+        out = graph.k_truss(e)
+    else:
+        out = graph.random_walks(e.selectExpr("u AS src", "v AS dst"))
+    size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert size < 2**20, size
 
 
