@@ -4,12 +4,16 @@ Lazy DataFrame plan::
 
     pages --mapInPandas--> (url, doc_id, feature_idx, geom_type,
                             geometry_json, props, props_json, feature_id,
-                            crs, bbox, lon, lat, cells, parse_error)
+                            crs, bbox, lon, lat, parse_error)
+          --select--> the same columns + cells = cover_expr(bbox)
 
-One Arrow batch UDF fuses extract→mine→parse→normalize→cut→bbox→cells (the
+One Arrow batch UDF fuses extract→mine→parse→normalize→cut→bbox (the
 reference's whole read path runs per document inside the batch; see SURVEY
 §3.1), so there is exactly one JVM↔Python crossing and no shuffle. The only
 shuffles in downstream pipelines are the joins/aggregations themselves.
+The bbox cell cover ``cells`` is a JVM expression over the mined ``bbox``
+(``pip_join.cover_expr``, bit-identical to ``geo.cells.cover_bbox_ints``),
+so Catalyst prunes it from every query that does not select it.
 
 Mining: a string-aware balanced-brace scanner finds top-level JSON object
 candidates in ``text``; candidates whose ``"type"`` member is an RFC-7946
@@ -29,22 +33,33 @@ from pyspark.sql import functions as F
 
 from ..geo import codec
 from ..geo.algebra import ATOMIC_TYPES  # noqa: F401  (re-export convenience)
-from ..geo.cells import DEFAULT_LEVEL, cover_bbox_ints
+from ..geo.bounds import geometry_bbox
+from ..geo.cells import DEFAULT_LEVEL, _bbox_cell_range, cover_bbox_ints
 from ..geo.dateline import cut_dateline
 from ..sources.extract import extract_text
+from .pip_join import cover_expr
 
 _TYPE_HINT = re.compile(
     r'"type"\s*:\s*"(?:Point|MultiPoint|LineString|MultiLineString|Polygon|'
     r'MultiPolygon|GeometryCollection|Feature|FeatureCollection)"'
 )
 
+BBOX_DDL = "bbox struct<xmin: double, ymin: double, xmax: double, ymax: double>"
+
+#: the columns of ``mine_features``, in order. ``cells`` is computed in the
+#: JVM from ``bbox`` after the mining UDF (see the module docstring); the
+#: UDF itself returns every other column.
 FEATURES_SCHEMA_DDL = (
     "url string, doc_id long, feature_idx int, geom_type string, "
     "geometry_json string, props map<string,string>, props_json string, "
-    "feature_id string, crs string, "
-    "bbox struct<xmin: double, ymin: double, xmax: double, ymax: double>, "
+    "feature_id string, crs string, " + BBOX_DDL + ", "
     "lon double, lat double, cells array<long>, parse_error string"
 )
+_UDF_SCHEMA_DDL = FEATURES_SCHEMA_DDL.replace("cells array<long>, ", "")
+_UDF_COLUMNS = [
+    "url", "doc_id", "feature_idx", "geom_type", "geometry_json", "props",
+    "props_json", "feature_id", "crs", "bbox", "lon", "lat", "parse_error",
+]
 
 
 def _scan_balanced(s: str, start: int) -> int:
@@ -128,19 +143,22 @@ def mine_candidates(text: str):
 
 _GEOM_OPTS = codec.SerializeOptions(antimeridian_cutting=False, write_bbox=False)
 
+# ``json.dumps`` with any non-default option builds a new encoder per call;
+# these are the two it would build, made once
+_dumps_sorted = json.JSONEncoder(sort_keys=True).encode
+_dumps_compact = json.JSONEncoder(separators=(",", ":")).encode
+
 
 def _flat_props(props):
     if not isinstance(props, dict):
         return None, None
     flat = {}
     for k, v in props.items():
-        flat[str(k)] = v if isinstance(v, str) else json.dumps(v, sort_keys=True)
-    return flat, json.dumps(props, sort_keys=True)
+        flat[str(k)] = v if isinstance(v, str) else _dumps_sorted(v)
+    return flat, _dumps_sorted(props)
 
 
 def _bbox2d(geom):
-    from ..geo.bounds import geometry_bbox
-
     bb = geometry_bbox(geom)
     if bb is None:
         return None
@@ -149,7 +167,11 @@ def _bbox2d(geom):
 
 
 def _feature_rows(url, doc_id, parsed_docs, level, max_cells):
-    """Explode parsed documents into canonical feature rows."""
+    """Explode parsed documents into canonical feature rows.
+
+    ``max_cells=None`` leaves ``cells`` None (the mining UDF: the cover is
+    ``cover_expr`` in the JVM) but still checks the bbox at ``level``, so a
+    non-finite one becomes the same ``parse_error`` row as with a cover."""
     idx = 0
     for parsed, err, raw in parsed_docs:
         if err is not None:
@@ -178,8 +200,14 @@ def _feature_rows(url, doc_id, parsed_docs, level, max_cells):
             try:
                 cut = cut_dateline(geom)
                 bb = _bbox2d(cut)
-                cells = None if bb is None else cover_bbox_ints(
-                    bb[0], bb[1], bb[2], bb[3], level, max_cells)
+                if bb is None:
+                    cells = None
+                elif max_cells is None:
+                    _bbox_cell_range(bb[0], bb[1], bb[2], bb[3], level)
+                    cells = None
+                else:
+                    cells = cover_bbox_ints(
+                        bb[0], bb[1], bb[2], bb[3], level, max_cells)
             except (TypeError, ValueError, KeyError, IndexError,
                     OverflowError) as e:
                 # degenerate shapes the reference itself cannot serialize
@@ -206,11 +234,10 @@ def _feature_rows(url, doc_id, parsed_docs, level, max_cells):
             yield {
                 "url": url, "doc_id": doc_id, "feature_idx": idx,
                 "geom_type": geom["type"],
-                "geometry_json": json.dumps(
-                    codec.to_dict(cut, _GEOM_OPTS, root=False), separators=(",", ":")
-                ),
+                "geometry_json": _dumps_compact(
+                    codec.to_dict(cut, _GEOM_OPTS, root=False)),
                 "props": flat, "props_json": pjson, "feature_id": fid,
-                "crs": json.dumps(crs, sort_keys=True) if crs is not None else None,
+                "crs": _dumps_sorted(crs) if crs is not None else None,
                 "bbox": bb, "lon": lon, "lat": lat, "cells": cells,
                 "parse_error": None,
             }
@@ -232,19 +259,21 @@ def mine_features(
     ``partitions``: the mining stage is CPU-bound in Python, but Spark sizes
     scan partitions by *bytes* (maxPartitionBytes coalesces small files into
     a handful of splits), which would cap UDF parallelism far below the core
-    count. Pass the cluster's task slots (or leave None to auto-use
-    ``defaultParallelism``) to repartition the (cheap) text upstream of the
-    (expensive) parse. Pass 0 to keep the scan partitioning untouched.
+    count. Pass the cluster's task slots (the default, None, uses
+    ``defaultParallelism``: one mining task per slot) to repartition the
+    (cheap) text upstream of the (expensive) parse. Pass 0 to keep the scan
+    partitioning untouched.
+
+    ``cells`` is ``cover_expr(bbox, level, max_cells)``, evaluated in the
+    JVM only by queries that select it.
     """
     import pandas as pd
 
     cols = ["url", "html"] if use_html else ["url", "text"]
     if partitions is None:
-        # 2x task slots, measured best (straggler smoothing without python
-        # worker churn: 8 slots on 800k pages -> 22.9s @1x, 19.2s @2x,
-        # 24.7s @3x); Spark's own bytes-based scan splits are still wrong
-        # for CPU-bound UDFs either way
-        partitions = 2 * pages.sparkSession.sparkContext.defaultParallelism
+        # one task per slot: with the per-task zip re-reads gone, a second
+        # wave of smaller tasks no longer pays for its set-up (see CLAUDE.md)
+        partitions = pages.sparkSession.sparkContext.defaultParallelism
     if partitions:
         pages = pages.repartition(partitions)
 
@@ -264,17 +293,13 @@ def mine_features(
                         parsed_docs.append(
                             (None, "{}: {}".format(type(e).__name__, e), raw)
                         )
-                rows.extend(_feature_rows(url, doc_id, parsed_docs, level, max_cells))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "doc_id", "feature_idx", "geom_type", "geometry_json",
-                    "props", "props_json", "feature_id", "crs", "bbox", "lon",
-                    "lat", "cells", "parse_error",
-                ],
-            )
+                rows.extend(_feature_rows(url, doc_id, parsed_docs, level, None))
+            yield pd.DataFrame(rows, columns=_UDF_COLUMNS)
 
-    return pages.select(*cols).mapInPandas(run, schema=FEATURES_SCHEMA_DDL)
+    mined = pages.select(*cols).mapInPandas(run, schema=_UDF_SCHEMA_DDL)
+    # the cast only relaxes containsNull=false to the DDL's array<bigint>
+    cells = cover_expr("bbox", level, max_cells).cast("array<bigint>")
+    return mined.select(*_UDF_COLUMNS[:-1], cells.alias("cells"), "parse_error")
 
 
 def _doc_id(url: str) -> int:

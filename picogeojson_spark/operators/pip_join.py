@@ -29,7 +29,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..geo.cells import DEFAULT_LEVEL, LEVEL_SHIFT, X_SHIFT, cover_bbox_ints
+from ..geo.cells import DEFAULT_LEVEL, LEVEL_SHIFT, X_SHIFT, _bbox_cell_range
 
 MIN_LEVEL = 6
 
@@ -42,26 +42,26 @@ def polygon_cover_df(polygons: DataFrame, level: int = DEFAULT_LEVEL,
     never drop below the point side's ancestor range (which would silently
     miss pairs); continent-sized polygons therefore pay more cover cells
     rather than losing correctness.
+
+    Python only parses each polygon for its 2-D bbox (one row per polygon
+    out of the UDF); the cells are expanded by the JVM (:func:`cover_expr`,
+    one ``explode``), so ``geometry_json`` is not copied once per cell
+    through Arrow.
     """
     import pandas as pd
 
-    def cover(batches):
-        for pdf in batches:
-            out_cell, out_pid, out_geom = [], [], []
-            for pid, gj in zip(pdf["poly_id"], pdf["geometry_json"]):
-                g = json.loads(gj)
-                from ..geo.bounds import geometry_bbox
+    from .features import BBOX_DDL, _bbox2d
 
-                bb = geometry_bbox(g)
-                ndim = len(bb) // 2
-                cells = cover_bbox_ints(bb[0], bb[1], bb[ndim], bb[ndim + 1],
-                                        level, max_cells, min_level=min_level)
-                out_cell.extend(cells)
-                out_pid.extend([pid] * len(cells))
-                out_geom.extend([gj] * len(cells))
-            yield pd.DataFrame(
-                {"cell": out_cell, "poly_id": out_pid, "geometry_json": out_geom}
-            )
+    def bboxes(batches):
+        for pdf in batches:
+            out = []
+            for gj in pdf["geometry_json"]:
+                bb = _bbox2d(json.loads(gj))
+                # a non-finite polygon must fail here, as the Python cover
+                # did, not cover to the clipped grid edge
+                _bbox_cell_range(bb[0], bb[1], bb[2], bb[3], level)
+                out.append(bb)
+            yield pdf.assign(bbox=out)
 
     # polygon tables are usually tiny next to the point side: coalesce so the
     # cover UDF pays a handful of python-worker round trips, not one per core
@@ -70,24 +70,33 @@ def polygon_cover_df(polygons: DataFrame, level: int = DEFAULT_LEVEL,
     slots = polygons.sparkSession.sparkContext.defaultParallelism
     src = polygons.select("poly_id", "geometry_json").coalesce(max(8, slots))
     return src.mapInPandas(
-        cover, schema="cell long, poly_id long, geometry_json string"
-    )
+        bboxes, schema="poly_id long, geometry_json string, " + BBOX_DDL
+    ).select(F.explode(cover_expr("bbox", level, max_cells, min_level))
+             .alias("cell"), "poly_id", "geometry_json")
+
+
+def _axis_sql(col: str, offset: float, span: float, n: str, top: str) -> str:
+    """SQL text of one grid axis of ``geo.cells._bbox_cell_range``:
+    ``min(max(floor((v + offset) / span * n), 0), top)`` with ``n`` (a
+    double) and ``top`` (``n - 1``, a bigint) given as SQL text. The double
+    arithmetic runs in the kernel's order (add, divide, multiply, floor —
+    IEEE-754 binary64 on both sides; the ``D`` suffix keeps the literals
+    doubles, not decimals)."""
+    return ("least(greatest(floor(({c} + {o!r}D) / {s!r}D * {n}), 0L), {t})"
+            .format(c=col, o=offset, s=span, n=n, t=top))
 
 
 def _cell_sql(lon: str, lat: str, level: int) -> str:
     """SQL text of ``geo.cells.cell_of`` over the columns named ``lon`` and
-    ``lat``: same double arithmetic in the same order (add, divide,
-    multiply, floor — all IEEE-754 binary64 on both sides; the ``D``
-    suffix keeps the literals doubles, not decimals), same clip, same bit
-    packing."""
+    ``lat``: the :func:`_axis_sql` arithmetic at a literal level, then the
+    same bit packing."""
     from ..geo.cells import grid_shape
 
     nx, ny = grid_shape(level)
 
     def axis(col, offset, span, n):
-        return ("least(greatest(floor((`{c}` + {o!r}D) / {s!r}D * {n!r}D),"
-                " 0L), {m}L)".format(c=col, o=offset, s=span, n=float(n),
-                                     m=n - 1))
+        return _axis_sql("`{}`".format(col), offset, span,
+                         "{!r}D".format(float(n)), "{}L".format(n - 1))
 
     return "{tag}L | shiftleft({x}, {xs}) | {y}".format(
         tag=int(level) << LEVEL_SHIFT, xs=X_SHIFT,
@@ -101,6 +110,54 @@ def cell_expr(lon: str, lat: str, level: int):
     random points plus the ±180/±90 edges). Being a plain expression it
     runs in whole-stage codegen — no Python worker on the point side."""
     return F.expr(_cell_sql(lon, lat, level))
+
+
+def cover_expr(bbox: str, level: int, max_cells: int, min_level: int = 0):
+    """JVM-side replica of ``geo.cells.cover_bbox_ints`` over the bbox
+    struct column named ``bbox`` (``xmin, ymin, xmax, ymax``): the same
+    cell ids in the same order (x outer, y inner), as ``array<bigint>``;
+    null where ``bbox`` or one of its fields is null. Like the kernel it
+    expects finite values (callers reject non-finite boxes in Python first,
+    with ``_bbox_cell_range``), and an inverted axis (``xmin > xmax``, as
+    in the 4-value bbox the kernel gives a 3-D MultiPolygon) covers no
+    cell, as Python's empty ``range`` does.
+
+    The level is the finest in ``level..min_level`` whose cover fits in
+    ``max_cells`` cells, else ``min_level``: one first-fit ``aggregate``
+    over the levels. That is ``_fit_cover_level``'s answer because ``nx``
+    is a power of two — ``floor(2t) >> 1 == floor(t)``, so a coarser level
+    never has more cells. The level is then bound once (``transform`` over
+    a one-element array) for the cell enumeration. Each axis is
+    :func:`_axis_sql` at ``n = 2^(lv+1)`` (x) or ``2^lv`` (y), exact in
+    double. Pinned bit-identical by a differential test."""
+    if not min_level <= level:
+        raise ValueError("cover_expr needs min_level <= level")
+
+    def axis(field, offset, span, shift):
+        n = "shiftleft(1L, lv + {})".format(shift)
+        return _axis_sql("`{}`.`{}`".format(bbox, field), offset, span,
+                         "double({})".format(n), "{} - 1L".format(n))
+
+    x0, x1 = (axis(f, 180.0, 360.0, 1) for f in ("xmin", "xmax"))
+    y0, y1 = (axis(f, 90.0, 180.0, 0) for f in ("ymin", "ymax"))
+    fits = "({x1} - {x0} + 1L) * ({y1} - {y0} + 1L) <= {m}L".format(
+        x0=x0, x1=x1, y0=y0, y1=y1, m=int(max_cells))
+    pick = ("aggregate(sequence({l}, {ml}, -1), -1, (acc, lv) -> "
+            "IF(acc >= 0, acc, IF(lv = {ml} OR {fits}, lv, -1)))").format(
+                l=int(level), ml=int(min_level), fits=fits)
+    # an inverted axis is an empty range, as in Python (``sequence`` would
+    # count down)
+    cells = ("IF({x0} <= {x1} AND {y0} <= {y1}, "
+             "flatten(transform(sequence({x0}, {x1}), cx -> "
+             "transform(sequence({y0}, {y1}), cy -> "
+             "shiftleft(bigint(lv), {ls}) | shiftleft(cx, {xs}) | cy))), "
+             "array())").format(
+                 x0=x0, x1=x1, y0=y0, y1=y1, ls=LEVEL_SHIFT, xs=X_SHIFT)
+    # greatest/least skip nulls, so a null field would clip to cell 0
+    null = " + ".join("`{}`.`{}`".format(bbox, f)
+                      for f in ("xmin", "ymin", "xmax", "ymax"))
+    return F.expr("IF({} IS NULL, NULL, transform(array({}), lv -> {})[0])"
+                  .format(null, pick, cells))
 
 
 def point_ancestors_df(points: DataFrame, level: int = DEFAULT_LEVEL,
@@ -122,7 +179,7 @@ def point_ancestors_df(points: DataFrame, level: int = DEFAULT_LEVEL,
     )
 
 
-#: geometry-cache capacity for the refine stage. A worker holding the
+#: geometry-cache capacity for the refine stage. A task holding the
 #: full candidate stream for > cap distinct polygons evicts least-recently
 #: -used geometries instead of silently stopping to cache (the pre-round-4
 #: behavior re-parsed every polygon past #4096 on EVERY batch — a per-batch
@@ -135,8 +192,14 @@ def _refine_batches(batches, cache_cap=REFINE_GEOM_CACHE_CAP, stats=None):
     over pandas batches of (point_id, lon, lat, poly_id, geometry_json)
     yielding exact (point_id, poly_id) PIP pairs.
 
-    Geometries are parsed at most once while they stay inside the LRU cache
-    (``cache_cap`` entries per worker); ``stats`` (a dict) receives a
+    Within a batch, polygons are visited in order of first appearance and
+    each polygon's candidates in batch order: ``factorize`` numbers the
+    polygons, one stable ``argsort`` of those codes makes each polygon's
+    rows one contiguous slice, and the kernel runs on numpy slices (a
+    pandas ``groupby`` spent most of the refine in per-group frame
+    indexing). Geometries are parsed at most once while they stay inside
+    the LRU cache (``cache_cap`` entries per task: Spark runs the
+    generator once per partition); ``stats`` (a dict) receives a
     ``parses`` counter so tests can assert the re-parse bound directly.
     """
     import collections
@@ -152,12 +215,23 @@ def _refine_batches(batches, cache_cap=REFINE_GEOM_CACHE_CAP, stats=None):
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        keep_pid, keep_poly = [], []
-        # group on the int key only; parse each polygon once per worker
-        for poly_id, grp in pdf.groupby("poly_id", sort=False):
+        codes, poly_ids = pd.factorize(pdf["poly_id"].to_numpy(), sort=False)
+        order = np.argsort(codes, kind="stable")
+        # a null poly_id (code -1) sorts first and, as in a groupby, is
+        # never refined
+        start = int((codes < 0).sum())
+        ends = start + np.cumsum(np.bincount(codes[codes >= 0],
+                                             minlength=len(poly_ids)))
+        xs_all = pdf["lon"].to_numpy(dtype=np.float64)[order]
+        ys_all = pdf["lat"].to_numpy(dtype=np.float64)[order]
+        pids_all = pdf["point_id"].to_numpy()[order]
+        geom_json = pdf["geometry_json"].to_numpy()
+        empty = np.empty(0, dtype=np.int64)
+        keep_pid, keep_poly = [empty], [empty]
+        for poly_id, end in zip(poly_ids, ends):
             geom = geom_cache.get(poly_id)
             if geom is None:
-                geom = json.loads(grp["geometry_json"].iloc[0])
+                geom = json.loads(geom_json[order[start]])
                 if stats is not None:
                     stats["parses"] += 1
                 geom_cache[poly_id] = geom
@@ -165,14 +239,14 @@ def _refine_batches(batches, cache_cap=REFINE_GEOM_CACHE_CAP, stats=None):
                     geom_cache.popitem(last=False)
             else:
                 geom_cache.move_to_end(poly_id)
-            xs = grp["lon"].to_numpy(dtype=np.float64)
-            ys = grp["lat"].to_numpy(dtype=np.float64)
-            mask = points_in_geometry(xs, ys, geom)
+            mask = points_in_geometry(xs_all[start:end], ys_all[start:end], geom)
             if mask.any():
-                pids = grp["point_id"].to_numpy()[mask]
-                keep_pid.extend(int(p) for p in pids)
-                keep_poly.extend([int(poly_id)] * int(mask.sum()))
-        yield pd.DataFrame({"point_id": keep_pid, "poly_id": keep_poly})
+                pids = pids_all[start:end][mask]
+                keep_pid.append(pids)
+                keep_poly.append(np.full(len(pids), poly_id, dtype=np.int64))
+            start = end
+        yield pd.DataFrame({"point_id": np.concatenate(keep_pid),
+                            "poly_id": np.concatenate(keep_poly)})
 
 
 def _refine(candidates: DataFrame) -> DataFrame:

@@ -12,8 +12,10 @@ shipped zip).
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
+import shutil
 import sys
 import tempfile
 import zipfile
@@ -88,9 +90,13 @@ def install_zip_invalidation_guard() -> bool:
 
 
 def build_pyfiles_zip(out_path: str = None) -> str:
-    """Zip the package for ``spark-submit --py-files``. Returns the path."""
+    """Zip the package for ``spark-submit --py-files``. Returns the path.
+
+    Without ``out_path`` the zip goes to a new private temp directory, so
+    processes (from one checkout or several) never write the same file."""
     if out_path is None:
-        out_path = os.path.join(tempfile.gettempdir(), "picogeojson_spark.zip")
+        out_path = os.path.join(tempfile.mkdtemp(prefix="picogeojson_spark-"),
+                                "picogeojson_spark.zip")
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, _dirnames, filenames in os.walk(_PKG_ROOT):
             for fn in filenames:
@@ -104,9 +110,19 @@ def build_pyfiles_zip(out_path: str = None) -> str:
     return out_path
 
 
+@functools.lru_cache(maxsize=None)
+def shipped_zip_path() -> str:
+    """This process's package zip: built on the first call, then reused
+    (``addPyFile`` of one path twice is a no-op); removed at exit. A
+    process killed by a signal (a terminated pool worker) leaves it."""
+    path = build_pyfiles_zip()
+    atexit.register(shutil.rmtree, os.path.dirname(path), ignore_errors=True)
+    return path
+
+
 def ensure_shipped(spark) -> None:
     """Make the package importable on executors regardless of deploy mode."""
-    spark.sparkContext.addPyFile(build_pyfiles_zip())
+    spark.sparkContext.addPyFile(shipped_zip_path())
 
 
 def get_spark(

@@ -581,9 +581,15 @@ def _leg(family, cores, paths):
 
 
 def _in_fresh_process(fn, *args):
-    """``fn(*args)`` in a new interpreter, so it starts its own JVM."""
-    with multiprocessing.get_context("spawn").Pool(1) as pool:
+    """``fn(*args)`` in a new interpreter, so it starts its own JVM. The
+    worker is joined, not terminated, so its exit handlers run (they
+    remove the package zip its session shipped)."""
+    pool = multiprocessing.get_context("spawn").Pool(1)
+    try:
         return pool.apply(fn, args)
+    finally:
+        pool.close()
+        pool.join()
 
 
 def report(family, legs, results):

@@ -83,3 +83,93 @@ def test_many_polygons_beyond_cap_bounded_parses():
     # sequential ids mean the first batch ends with [n-cap, n) cached and
     # the second batch starts at 0: full re-parse is expected and bounded.
     assert stats["parses"] == 2 * n
+
+
+def _groupby_refine(batches, cache_cap, stats):
+    """The refine as it was written with a pandas ``groupby``: the oracle
+    for the sort-sliced one (same rows, same order, same parses)."""
+    import collections
+
+    import numpy as np
+
+    from picogeojson_spark.geo.pip import points_in_geometry
+
+    geom_cache = collections.OrderedDict()
+    stats.setdefault("parses", 0)
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        keep_pid, keep_poly = [], []
+        for poly_id, grp in pdf.groupby("poly_id", sort=False):
+            geom = geom_cache.get(poly_id)
+            if geom is None:
+                geom = json.loads(grp["geometry_json"].iloc[0])
+                stats["parses"] += 1
+                geom_cache[poly_id] = geom
+                if len(geom_cache) > cache_cap:
+                    geom_cache.popitem(last=False)
+            else:
+                geom_cache.move_to_end(poly_id)
+            xs = grp["lon"].to_numpy(dtype=np.float64)
+            ys = grp["lat"].to_numpy(dtype=np.float64)
+            mask = points_in_geometry(xs, ys, geom)
+            if mask.any():
+                pids = grp["point_id"].to_numpy()[mask]
+                keep_pid.extend(int(p) for p in pids)
+                keep_poly.extend([int(poly_id)] * int(mask.sum()))
+        yield pd.DataFrame({"point_id": keep_pid, "poly_id": keep_poly})
+
+
+def _random_geometry(pid):
+    """Polygon, Polygon with a hole, or MultiPolygon around a pid-keyed
+    centre, so a repeated poly_id always names the same geometry."""
+    cx, cy = (pid % 7) * 3.0, (pid // 7) * 3.0
+
+    def square(x, y, r):
+        return [[x - r, y - r], [x + r, y - r], [x + r, y + r], [x - r, y + r],
+                [x - r, y - r]]
+
+    kind = pid % 3
+    if kind == 0:
+        return {"type": "Polygon", "coordinates": [square(cx, cy, 1.0)]}
+    if kind == 1:
+        return {"type": "Polygon", "coordinates": [
+            square(cx, cy, 1.2), square(cx, cy, 0.5)[::-1]]}
+    return {"type": "MultiPolygon", "coordinates": [
+        [square(cx - 0.6, cy, 0.4)], [square(cx + 0.6, cy, 0.4)]]}
+
+
+def _random_candidates(rng, n, poly_pool):
+    pids = rng.choice(poly_pool, n)
+    return pd.DataFrame({
+        "point_id": rng.integers(0, 10**12, n),
+        "lon": (pids % 7) * 3.0 + rng.uniform(-1.5, 1.5, n),
+        "lat": (pids // 7) * 3.0 + rng.uniform(-1.5, 1.5, n),
+        "poly_id": pids,
+        "geometry_json": [json.dumps(_random_geometry(int(p))) for p in pids],
+    })
+
+
+def test_sort_sliced_refine_equals_groupby_refine():
+    """Random candidate batches (holes, MultiPolygons, poly_ids repeated
+    across batches, an empty batch): the same pairs in the same order and
+    the same parse count as the groupby refine, at a cache cap that
+    evicts."""
+    import numpy as np
+
+    rng = np.random.default_rng(29)
+    pool = np.arange(40)
+    batches = [_random_candidates(rng, int(rng.integers(1, 300)), pool)
+               for _ in range(12)]
+    batches.insert(5, batches[0].iloc[:0])
+    for cap in (4, 64):
+        want_stats, got_stats = {}, {}
+        want = list(_groupby_refine(iter(batches), cap, want_stats))
+        got = list(_refine_batches(iter(batches), cache_cap=cap, stats=got_stats))
+        assert len(got) == len(want) == len(batches) - 1
+        for g, w in zip(got, want):
+            assert list(g.columns) == ["point_id", "poly_id"]
+            assert g["point_id"].tolist() == w["point_id"].tolist()
+            assert g["poly_id"].tolist() == w["poly_id"].tolist()
+        assert got_stats == want_stats
+    assert sum(len(w) for w in want) > 0

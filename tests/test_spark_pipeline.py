@@ -48,16 +48,22 @@ def test_text_byte_identity(spark, pages):
 
 def test_mined_features_match_oracle(spark, features):
     """Every embedded GeoJSON block is found and parsed identically to a
-    driver-side run of the same kernel over the same text."""
+    driver-side run of the same kernel over the same text, and the mined
+    ``cells`` (a JVM cover of the mined bbox) equal the Python cover."""
+    from pyspark.sql.types import _parse_datatype_string
+
     from picogeojson_spark.operators.features import (
+        FEATURES_SCHEMA_DDL,
         _doc_id,
         _feature_rows,
         mine_candidates,
     )
     from picogeojson_spark.geo import codec
 
+    assert features.schema == _parse_datatype_string(FEATURES_SCHEMA_DDL)
     got = {
-        (r["url"], r["feature_idx"]): (r["geom_type"], r["geometry_json"])
+        (r["url"], r["feature_idx"]): (r["geom_type"], r["geometry_json"],
+                                       r["cells"])
         for r in features.collect()
     }
     expected = {}
@@ -74,11 +80,13 @@ def test_mined_features_match_oracle(spark, features):
             expected[(row["url"], row["feature_idx"])] = (
                 row["geom_type"],
                 row["geometry_json"],
+                row["cells"],
             )
             if row["parse_error"] is not None:
                 n_err += 1
     assert got == expected
     assert len(expected) > N_PAGES * 0.5  # corpus actually contains geometry
+    assert sum(len(v[2] or ()) for v in expected.values()) > len(expected)
 
 
 @pytest.mark.parametrize("literal", ["NaN", "Infinity", "1e400"])
@@ -242,6 +250,141 @@ def test_cell_expr_matches_numpy_kernel(spark):
         ])
         want = cell_of(lon, lat, lv)
         assert (got == want).all(), "level {} diverged".format(lv)
+
+
+def _boundary_boxes(level, max_cells):
+    """Boxes whose level-``level`` cover has max_cells - 1, max_cells or
+    max_cells + 1 cells: cell-centred edges and exact cell edges."""
+    from picogeojson_spark.geo.cells import grid_shape
+
+    nx, ny = grid_shape(level)
+    w, h = 360.0 / nx, 180.0 / ny
+    out = []
+    for t in (max_cells - 1, max_cells, max_cells + 1):
+        for kx in range(1, t + 1):
+            ky = t // kx
+            if kx * ky != t or kx > nx or ky > ny:
+                continue
+            x0, y0 = (nx - kx) // 3, (ny - ky) // 2
+            out.append((-180.0 + (x0 + 0.5) * w, -90.0 + (y0 + 0.5) * h,
+                        -180.0 + (x0 + kx - 0.5) * w, -90.0 + (y0 + ky - 0.5) * h))
+            out.append((-180.0 + x0 * w, -90.0 + y0 * h,
+                        -180.0 + (x0 + kx - 1) * w, -90.0 + (y0 + ky - 1) * h))
+    return out
+
+
+def test_cover_expr_matches_numpy_kernel(spark):
+    """The JVM cover must be BIT-identical to geo.cells.cover_bbox_ints —
+    same cells, same order, same level pick — for random boxes of every
+    size, inverted boxes, the ±180/±90 edges, degenerate point boxes,
+    boxes at the max_cells boundary of levels 1-12, and null bboxes."""
+    from picogeojson_spark.geo.cells import cover_bbox_ints
+    from picogeojson_spark.operators.features import BBOX_DDL
+    from picogeojson_spark.operators.pip_join import cover_expr
+
+    rng = np.random.default_rng(17)
+    boxes = []
+    for _ in range(1500):
+        a, b = sorted(rng.uniform(-180, 180, 2))
+        c, d = sorted(rng.uniform(-90, 90, 2))
+        boxes.append((a, c, b, d))
+        x, y = rng.uniform(-180, 180), rng.uniform(-90, 90)
+        size = float(rng.choice([1e-9, 1e-3, 0.05, 0.5, 5.0, 50.0, 400.0]))
+        boxes.append((x, y, min(x + size, 180.0), min(y + size / 2, 90.0)))
+        boxes.append((x, y, x, y))
+        # inverted axes: the 4-value bbox of a 3-D MultiPolygon
+        boxes.append((b, c, a, d))
+        boxes.append((a, d, b, c))
+        boxes.append((b, d, a, c))
+    edges_x = [-180.0, -179.999999, -1e-12, 0.0, 1e-12, 179.999999, 180.0]
+    edges_y = [-90.0, -89.999999, -1e-12, 0.0, 1e-12, 89.999999, 90.0]
+    for x in edges_x:
+        for y in edges_y:
+            boxes.append((x, y, x, y))
+            boxes.append((x, y, 180.0, 90.0))
+            boxes.append((-180.0, -90.0, x, y))
+    for level in range(1, 13):
+        for max_cells in (32, 64):
+            boxes.extend(_boundary_boxes(level, max_cells))
+    boxes = [tuple(float(v) for v in b) for b in boxes]
+    df = spark.createDataFrame(
+        [(i, b) for i, b in enumerate(boxes)]
+        + [(len(boxes), None), (len(boxes) + 1, (1.0, None, 2.0, 3.0))],
+        "i int, " + BBOX_DDL).cache()
+    params = [(12, 32, 0), (12, 64, 6), (10, 64, 3)]
+    params += [(lv, m, 0) for lv in range(1, 13) for m in (32, 64)]
+    for level, max_cells, min_level in params:
+        got = dict(df.select(
+            "i", cover_expr("bbox", level, max_cells, min_level).alias("c")
+        ).collect())
+        assert got.pop(len(boxes)) is None and got.pop(len(boxes) + 1) is None
+        bad = [b for i, b in enumerate(boxes) if got[i] != cover_bbox_ints(
+            *b, level, max_cells, min_level=min_level)]
+        assert not bad, ((level, max_cells, min_level), len(bad), bad[:3])
+    df.unpersist()
+
+
+def _random_polygon(rng, dims):
+    """A random star-shaped ring around a random centre, 2-D or 3-D."""
+    cx, cy = rng.uniform(-170, 170), rng.uniform(-80, 80)
+    r = float(rng.choice([0.001, 0.1, 1.0, 8.0]))
+    ang = np.sort(rng.uniform(0, 2 * np.pi, int(rng.integers(3, 9))))
+    ring = [[float(np.clip(cx + r * np.cos(a), -180, 180)),
+             float(np.clip(cy + r * np.sin(a), -90, 90))] for a in ang]
+    if dims == 3:
+        ring = [p + [float(rng.uniform(0, 100))] for p in ring]
+    return [ring + [ring[0]]]
+
+
+def test_polygon_cover_df_matches_python_cover(spark):
+    """The JVM-expanded polygon cover has exactly the rows the Python
+    cover emitted: the 10-degree world grid, and random 2-D and 3-D
+    Polygons and MultiPolygons."""
+    from picogeojson_spark.geo.bounds import geometry_bbox
+    from picogeojson_spark.geo.cells import cover_bbox_ints
+    from picogeojson_spark.operators.pip_join import MIN_LEVEL, polygon_cover_df
+
+    rng = np.random.default_rng(23)
+    geoms = []
+    for gx in range(36):
+        for gy in range(18):
+            x0, y0 = gx * 10.0 - 180.0, gy * 10.0 - 90.0
+            geoms.append({"type": "Polygon", "coordinates": [[
+                [x0, y0], [x0 + 10.0, y0], [x0 + 10.0, y0 + 10.0],
+                [x0, y0 + 10.0], [x0, y0]]]})
+    for i in range(200):
+        dims = 2 + i % 2
+        if i % 4 < 2:
+            geoms.append({"type": "Polygon",
+                          "coordinates": _random_polygon(rng, dims)})
+        else:
+            geoms.append({"type": "MultiPolygon", "coordinates": [
+                _random_polygon(rng, dims) for _ in range(int(rng.integers(1, 4)))]})
+    polys = [(pid, json.dumps(g)) for pid, g in enumerate(geoms)]
+    want = []
+    for pid, gj in polys:
+        bb = geometry_bbox(json.loads(gj))
+        nd = len(bb) // 2
+        want.extend((c, pid, gj) for c in cover_bbox_ints(
+            bb[0], bb[1], bb[nd], bb[nd + 1], 12, 64, min_level=MIN_LEVEL))
+    df = spark.createDataFrame(polys, "poly_id long, geometry_json string")
+    cover = polygon_cover_df(df)
+    assert cover.columns == ["cell", "poly_id", "geometry_json"]
+    assert sorted(tuple(r) for r in cover.collect()) == sorted(want)
+
+
+def test_unselected_cells_are_pruned(spark):
+    """A query that does not select ``cells`` runs no cover expression."""
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    mined = mine_features(spark.createDataFrame(
+        [("http://x/1", '{"type": "Point", "coordinates": [1.0, 2.0]}')],
+        "url string, text string"))
+    assert "flatten(" in optimized(mined.select("cells"))
+    plan = optimized(mined.select("geom_type", "lon", "lat"))
+    assert "flatten(" not in plan and "aggregate(" not in plan
+    assert "MapInPandas" in plan
 
 
 def test_point_ancestors_plan_has_no_python(spark, features):
