@@ -562,14 +562,12 @@ FROM levels GROUP BY 1, 2, 3 ORDER BY tile_z, tile_x, tile_y
 
 def q_geo_cell_index(spark, sf_dir):
     """Hierarchical cell ids at level 12 + a level-8 parent rollup count."""
-    from picogeojson_spark.functions.geo_udfs import cell_of_udf
+    from picogeojson_spark.operators.pip_join import cell_expr
 
     pts = _points_from_customer(spark, sf_dir)
-    cell12 = cell_of_udf(12)
-    cell8 = cell_of_udf(8)
     return (
-        pts.withColumn("cell12", cell12("lon", "lat"))
-        .withColumn("cell8", cell8("lon", "lat"))
+        pts.withColumn("cell12", cell_expr("lon", "lat", 12))
+        .withColumn("cell8", cell_expr("lon", "lat", 8))
         .groupBy("cell8")
         .agg(F.count("*").alias("n_points"),
              F.countDistinct("cell12").alias("n_subcells"))
@@ -4572,8 +4570,8 @@ SELECT doc_id, idx,
        CAST(round(lat * 4) AS BIGINT) AS lat_x4,
        CAST(round(lon * 4) AS BIGINT) AS lon_x4,
        CAST(8 AS BIGINT) * {p58}
-         + CAST(floor((lon + 180) / 360 * 512) AS BIGINT) * {p29}
-         + CAST(floor((lat + 90) / 180 * 256) AS BIGINT) AS cell
+         + least(CAST(floor((lon + 180) / 360 * 512) AS BIGINT), 511) * {p29}
+         + least(CAST(floor((lat + 90) / 180 * 256) AS BIGINT), 255) AS cell
 FROM ok ORDER BY doc_id, idx
 """.format(txt=_GEOTEXT_TEXT_SQL, re=COORD_RE, p58=1 << 58, p29=1 << 29)
 
@@ -4775,8 +4773,8 @@ men AS (
   FROM ex, LATERAL (SELECT unnest(range(1, len(lats) + 1)) AS j) s),
 ok AS (SELECT lat, lon FROM men WHERE abs(lat) < 90 AND abs(lon) < 180)
 SELECT CAST(8 AS BIGINT) * {p58}
-         + CAST(floor((lon + 180) / 360 * 512) AS BIGINT) * {p29}
-         + CAST(floor((lat + 90) / 180 * 256) AS BIGINT) AS cell,
+         + least(CAST(floor((lon + 180) / 360 * 512) AS BIGINT), 511) * {p29}
+         + least(CAST(floor((lat + 90) / 180 * 256) AS BIGINT), 255) AS cell,
        CAST(COUNT(*) AS BIGINT) AS n_mentions
 FROM ok GROUP BY 1 ORDER BY cell
 """.format(txt=_GEOTEXT_TEXT_SQL,

@@ -7,10 +7,6 @@ the reference's user-callable surface becomes vectorized pandas UDFs).
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import functions as F  # noqa: F401
-
 
 def parse_normalize_udf():
     """geometry_json -> struct(geom_type, first_x, first_y, second_x,
@@ -106,18 +102,3 @@ def dateline_cut_udf():
         return pd.DataFrame(rows)
 
     return dateline_cut
-
-
-def cell_of_udf(level: int):
-    """(lon, lat) -> cell id at ``level`` (vectorized numpy)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..geo.cells import cell_of
-
-    @pandas_udf("long")
-    def cell(lon, lat):
-        import pandas as pd
-
-        return pd.Series(cell_of(lon.to_numpy(), lat.to_numpy(), level))
-
-    return cell

@@ -17,6 +17,13 @@ Properties the engine relies on:
 - **SQL-checkable**: the id is plain floor/shift arithmetic, so DuckDB can
   recompute it for the correctness oracle.
 
+This module is the one owner of the grid's arithmetic. The numpy kernel
+below is the reference; its SQL twin (:func:`axis_sql`, :func:`cell_sql`,
+:func:`ancestors_sql`, :func:`cover_sql`) spells the same operations as
+Spark SQL text, which the operators parse with ``F.expr`` so the JVM
+computes the cells (no pyspark import here). Operators never respell the
+formulas; differential tests pin the twin bit-identical to the kernel.
+
 Trade-off vs true S2 (cube-face quadtree): cells shrink in area toward the
 poles. For web-mined geodata (population-weighted) the skew-handling path
 (salting + AQE) absorbs the imbalance; the scheme is only a *pruning* index —
@@ -40,10 +47,6 @@ DEFAULT_LEVEL = 12  # ~4.4 km x 4.4 km at the equator
 
 def grid_shape(level: int):
     return 2 ** (level + 1), 2**level
-
-
-def xy_to_cell(level, x, y):
-    return (np.int64(level) << LEVEL_SHIFT) | (np.int64(x) << X_SHIFT) | np.int64(y)
 
 
 def cell_to_level_xy(cell):
@@ -194,6 +197,111 @@ def cell_bounds(cell):
     return lon0, lat0, lon0 + w, lat0 + h
 
 
-def cell_center(cell):
-    x0, y0, x1, y1 = cell_bounds(cell)
-    return (x0 + x1) / 2.0, (y0 + y1) / 2.0
+# --------------------------------------------------------------- SQL twin
+
+
+def axis_sql(col: str, offset: float, span: float, n: str, top: str = None
+             ) -> str:
+    """SQL text of one grid axis of :func:`_bbox_cell_range`:
+    ``min(max(floor((v + offset) / span * n), 0), top)`` with ``n`` (a
+    double) and ``top`` (``n - 1``, a bigint) given as SQL text;
+    ``top=None`` leaves the floor unclamped. The double arithmetic runs in
+    the kernel's order (add, divide, multiply, floor — IEEE-754 binary64 on
+    both sides; the ``D`` suffix keeps the literals doubles, not decimals).
+    No null check: ``greatest``/``least`` skip nulls, so callers guard the
+    whole expression once (:func:`null_guard_sql`)."""
+    v = "floor(({c} + {o!r}D) / {s!r}D * {n})".format(
+        c=col, o=offset, s=span, n=n)
+    if top is None:
+        return v
+    return "least(greatest({}, 0L), {})".format(v, top)
+
+
+def cell_xy_sql(lon: str, lat: str, level: int, clamp: bool = True):
+    """SQL text of :func:`cell_of`'s grid ``(x, y)`` over the columns named
+    ``lon`` and ``lat`` at a literal level (no null guard). ``clamp=False``
+    leaves the floors unclamped, so ``lon = 180`` gives ``x = nx``."""
+    nx, ny = grid_shape(level)
+
+    def axis(col, offset, span, n):
+        return axis_sql("`{}`".format(col), offset, span,
+                        "{!r}D".format(float(n)),
+                        "{}L".format(n - 1) if clamp else None)
+
+    return axis(lon, 180.0, 360.0, nx), axis(lat, 90.0, 180.0, ny)
+
+
+def null_guard_sql(cols, body: str) -> str:
+    """``body``, or NULL when any of the numeric SQL expressions ``cols``
+    is null: one check for a whole expression, however often the body
+    repeats its inputs."""
+    return "IF({} IS NULL, NULL, {})".format(" + ".join(cols), body)
+
+
+def _packed_cell_sql(lon: str, lat: str, level: int) -> str:
+    x, y = cell_xy_sql(lon, lat, level)
+    return "{tag}L | shiftleft({x}, {xs}) | {y}".format(
+        tag=int(level) << LEVEL_SHIFT, xs=X_SHIFT, x=x, y=y)
+
+
+def cell_sql(lon: str, lat: str, level: int) -> str:
+    """SQL text of :func:`cell_of` over the columns named ``lon`` and
+    ``lat``: the :func:`axis_sql` arithmetic at a literal level, the same
+    bit packing, and NULL for a null coordinate."""
+    return null_guard_sql(["`{}`".format(lon), "`{}`".format(lat)],
+                          _packed_cell_sql(lon, lat, level))
+
+
+def ancestors_sql(lon: str, lat: str, min_level: int, level: int) -> str:
+    """SQL text of the array of a point's cells at ``min_level..level``
+    (coarsest first), NULL for a null coordinate."""
+    return null_guard_sql(
+        ["`{}`".format(lon), "`{}`".format(lat)],
+        "array({})".format(", ".join(_packed_cell_sql(lon, lat, lv)
+                                     for lv in range(min_level, level + 1))))
+
+
+def cover_sql(bbox: str, level: int, max_cells: int, min_level: int = 0) -> str:
+    """SQL text of :func:`cover_bbox_ints` over the bbox struct column
+    named ``bbox`` (``xmin, ymin, xmax, ymax``): the same cell ids in the
+    same order (x outer, y inner), as ``array<bigint>``; null where
+    ``bbox`` or one of its fields is null. Like the kernel it expects
+    finite values (callers reject non-finite boxes in Python first, with
+    :func:`_bbox_cell_range`), and an inverted axis (``xmin > xmax``, as
+    in the 4-value bbox the kernel gives a 3-D MultiPolygon) covers no
+    cell, as Python's empty ``range`` does.
+
+    The level is the finest in ``level..min_level`` whose cover fits in
+    ``max_cells`` cells, else ``min_level``: one first-fit ``aggregate``
+    over the levels. That is :func:`_fit_cover_level`'s answer because
+    ``nx`` is a power of two — ``floor(2t) >> 1 == floor(t)``, so a coarser
+    level never has more cells. The level is then bound once
+    (``transform`` over a one-element array) for the cell enumeration.
+    Each axis is :func:`axis_sql` at ``n = 2^(lv+1)`` (x) or ``2^lv`` (y),
+    exact in double."""
+    if not min_level <= level:
+        raise ValueError("cover_sql needs min_level <= level")
+
+    def axis(field, offset, span, shift):
+        n = "shiftleft(1L, lv + {})".format(shift)
+        return axis_sql("`{}`.`{}`".format(bbox, field), offset, span,
+                        "double({})".format(n), "{} - 1L".format(n))
+
+    x0, x1 = (axis(f, 180.0, 360.0, 1) for f in ("xmin", "xmax"))
+    y0, y1 = (axis(f, 90.0, 180.0, 0) for f in ("ymin", "ymax"))
+    fits = "({x1} - {x0} + 1L) * ({y1} - {y0} + 1L) <= {m}L".format(
+        x0=x0, x1=x1, y0=y0, y1=y1, m=int(max_cells))
+    pick = ("aggregate(sequence({l}, {ml}, -1), -1, (acc, lv) -> "
+            "IF(acc >= 0, acc, IF(lv = {ml} OR {fits}, lv, -1)))").format(
+                l=int(level), ml=int(min_level), fits=fits)
+    # an inverted axis is an empty range, as in Python (``sequence`` would
+    # count down)
+    cells = ("IF({x0} <= {x1} AND {y0} <= {y1}, "
+             "flatten(transform(sequence({x0}, {x1}), cx -> "
+             "transform(sequence({y0}, {y1}), cy -> "
+             "shiftleft(bigint(lv), {ls}) | shiftleft(cx, {xs}) | cy))), "
+             "array())").format(
+                 x0=x0, x1=x1, y0=y0, y1=y1, ls=LEVEL_SHIFT, xs=X_SHIFT)
+    return null_guard_sql(
+        ["`{}`.`{}`".format(bbox, f) for f in ("xmin", "ymin", "xmax", "ymax")],
+        "transform(array({}), lv -> {})[0]".format(pick, cells))

@@ -9,6 +9,11 @@ oracle) reproduces the exact same doubles:
     yt = floor((1 - ln(tan(radians(lat)) + 1/cos(radians(lat))) / pi) / 2 * 2^z)
 
 tile_id packs ``(z, x, y)`` like the cell id: ``(z << 58) | (x << 29) | y``.
+
+This module is the one owner of the tile arithmetic: :func:`tile_xy` is the
+numpy reference and :func:`tile_xy_sql` its Spark SQL twin (text the
+operators parse with ``F.expr``; no pyspark import here). Operators never
+respell the formulas; differential tests pin the twin bit-identical.
 """
 
 from __future__ import annotations
@@ -33,6 +38,22 @@ def tile_xy(lon, lat, z: int):
         n - 1,
     ).astype(np.int64)
     return x, y
+
+
+def tile_xy_sql(lon: str, lat: str, z: int):
+    """SQL text of :func:`tile_xy` over the double SQL expressions ``lon``
+    and ``lat`` (a column name needs its backticks): ``(x, y)`` as bigint,
+    the same IEEE-754 double operations in
+    the same order (latitude clamp, floor, clamp to ``0..n-1``; the ``D``
+    suffix keeps the literals doubles)."""
+    n = 2**z
+    lat_c = "greatest(least({}, {m!r}D), {nm!r}D)".format(
+        lat, m=MAX_MERC_LAT, nm=-MAX_MERC_LAT)
+    x = "floor(({} + 180.0D) / 360.0D * {n!r}D)".format(lon, n=float(n))
+    y = ("floor((1.0D - ln(tan(radians({c})) + 1.0D / cos(radians({c}))) "
+         "/ {pi!r}D) / 2.0D * {n!r}D)").format(c=lat_c, pi=np.pi, n=float(n))
+    return tuple("greatest(least({}, {}L), 0L)".format(v, n - 1)
+                 for v in (x, y))
 
 
 def tile_id(z, x, y):

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..geo.cells import cell_sql
+
 COORD_RE = r"(-?[0-9]{1,3}\.[0-9]+)\s*,\s*(-?[0-9]{1,3}\.[0-9]+)"
 
 
@@ -29,13 +31,12 @@ def extract_coordinates(
 ) -> DataFrame:
     """One row per valid coordinate mention:
     ``(doc_id, idx, lat, lon, cell)`` with ``idx`` the mention's order in
-    the document, bounds-validated (|lat| < 90, |lon| < 180 strictly — the
-    open interval keeps the unclamped cell arithmetic exact), and ``cell``
-    the hierarchical cell id at ``level`` (same arithmetic as
-    ``geo/cells.cell_of``)."""
+    the document, bounds-validated (|lat| < 90, |lon| < 180 strictly), and
+    ``cell`` the hierarchical cell id at ``level``
+    (``geo.cells.cell_sql``, bit-identical to ``geo.cells.cell_of``: a
+    mention one ulp below lon 180 still gets the last grid column)."""
     lats = F.regexp_extract_all(F.col(text_col), F.lit(COORD_RE), 1)
     lons = F.regexp_extract_all(F.col(text_col), F.lit(COORD_RE), 2)
-    nx, ny = 1 << (level + 1), 1 << level
     exploded = (
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -50,13 +51,7 @@ def extract_coordinates(
         )
         .filter((F.abs(F.col("lat")) < 90.0) & (F.abs(F.col("lon")) < 180.0))
     )
-    cell = (
-        F.lit(int(level)).cast("long") * F.lit(1 << 58).cast("long")
-        + F.floor((F.col("lon") + 180.0) / 360.0 * nx).cast("long")
-        * F.lit(1 << 29).cast("long")
-        + F.floor((F.col("lat") + 90.0) / 180.0 * ny).cast("long")
-    )
-    return exploded.withColumn("cell", cell)
+    return exploded.withColumn("cell", F.expr(cell_sql("lon", "lat", level)))
 
 def trajectory_measures(
     docs: DataFrame,

@@ -19,23 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..geo.cells import DEFAULT_LEVEL, X_SHIFT, cell_of, grid_shape
+from ..geo.cells import cell_xy_sql, grid_shape, null_guard_sql
 
 
 def _with_cell_xy(df: DataFrame, id_col: str, level: int) -> DataFrame:
-    """Attach integer cell (x, y) grid coordinates, computed JVM-side."""
-    nx, ny = grid_shape(level)
-    x = F.least(
-        F.floor((F.col("lon") + F.lit(180.0)) / F.lit(360.0) * F.lit(nx)),
-        F.lit(nx - 1),
-    )
-    y = F.least(
-        F.floor((F.col("lat") + F.lit(90.0)) / F.lit(180.0) * F.lit(ny)),
-        F.lit(ny - 1),
-    )
-    return df.withColumn("cx", F.greatest(x, F.lit(0)).cast("long")).withColumn(
-        "cy", F.greatest(y, F.lit(0)).cast("long")
-    )
+    """Attach the clamped cell (x, y) grid coordinates of ``lon``/``lat``
+    (``geo.cells.cell_xy_sql``), computed JVM-side; null for a null
+    coordinate."""
+    x, y = cell_xy_sql("lon", "lat", level)
+    return (df.withColumn("cx", F.expr(null_guard_sql(["`lon`"], x)))
+            .withColumn("cy", F.expr(null_guard_sql(["`lat`"], y))))
 
 
 def _dist2(qlon, qlat, clon, clat):

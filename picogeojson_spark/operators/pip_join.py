@@ -2,9 +2,10 @@
 
 Scale design (SURVEY §2.11):
 
-- polygons are covered with cells at an adaptive level (``cover_bbox`` walks
-  to a coarser level when a bbox would need more than ``max_cells`` cells),
-  then exploded to (cell, poly) rows;
+- polygons are covered with cells at an adaptive level (the JVM cover,
+  :func:`cover_expr`, picks the finest level at which a polygon's bbox
+  needs at most ``max_cells`` cells), then exploded to (cell, poly) rows;
+  Python only parses each polygon for its bbox;
 - points emit their cell **plus its ancestors** down to ``min_level`` — an
   array of ~(level - min_level + 1) ids, exploded — so a point equi-joins a
   polygon regardless of which level the polygon's cover chose. The spatial
@@ -29,9 +30,44 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..geo.cells import DEFAULT_LEVEL, LEVEL_SHIFT, X_SHIFT, _bbox_cell_range
+from ..geo.cells import (
+    DEFAULT_LEVEL,
+    _bbox_cell_range,
+    ancestors_sql,
+    cell_sql,
+    cover_sql,
+)
 
 MIN_LEVEL = 6
+
+
+def polygon_bbox_df(polygons: DataFrame, level: int = DEFAULT_LEVEL,
+                    id_col: str = "poly_id") -> DataFrame:
+    """polygons(id_col, geometry_json) -> (id_col, geometry_json, bbox):
+    one row per polygon, the 2-D bbox from the kernel parse. The only
+    Python stage of a polygon cover; the cells are JVM expressions over
+    ``bbox``. A non-finite polygon fails the task here (the
+    ``_bbox_cell_range`` check at ``level``), not covering to the clipped
+    grid edge."""
+    from .features import BBOX_DDL, _bbox2d
+
+    def bboxes(batches):
+        for pdf in batches:
+            out = []
+            for gj in pdf["geometry_json"]:
+                bb = _bbox2d(json.loads(gj))
+                _bbox_cell_range(bb[0], bb[1], bb[2], bb[3], level)
+                out.append(bb)
+            yield pdf.assign(bbox=out)
+
+    # polygon tables are usually tiny next to the point side: coalesce so the
+    # UDF pays a handful of python-worker round trips, not one per core
+    # — but never below the cluster's task slots, so a LARGE polygon table
+    # (country-scale admin boundaries at production) still runs in parallel
+    slots = polygons.sparkSession.sparkContext.defaultParallelism
+    src = polygons.select(id_col, "geometry_json").coalesce(max(8, slots))
+    return src.mapInPandas(bboxes, schema="{} long, geometry_json string, {}"
+                           .format(id_col, BBOX_DDL))
 
 
 def polygon_cover_df(polygons: DataFrame, level: int = DEFAULT_LEVEL,
@@ -43,121 +79,32 @@ def polygon_cover_df(polygons: DataFrame, level: int = DEFAULT_LEVEL,
     miss pairs); continent-sized polygons therefore pay more cover cells
     rather than losing correctness.
 
-    Python only parses each polygon for its 2-D bbox (one row per polygon
-    out of the UDF); the cells are expanded by the JVM (:func:`cover_expr`,
-    one ``explode``), so ``geometry_json`` is not copied once per cell
-    through Arrow.
+    Python only parses each polygon for its 2-D bbox
+    (:func:`polygon_bbox_df`); the cells are expanded by the JVM
+    (:func:`cover_expr`, one ``explode``), so ``geometry_json`` is not
+    copied once per cell through Arrow.
     """
-    import pandas as pd
-
-    from .features import BBOX_DDL, _bbox2d
-
-    def bboxes(batches):
-        for pdf in batches:
-            out = []
-            for gj in pdf["geometry_json"]:
-                bb = _bbox2d(json.loads(gj))
-                # a non-finite polygon must fail here, as the Python cover
-                # did, not cover to the clipped grid edge
-                _bbox_cell_range(bb[0], bb[1], bb[2], bb[3], level)
-                out.append(bb)
-            yield pdf.assign(bbox=out)
-
-    # polygon tables are usually tiny next to the point side: coalesce so the
-    # cover UDF pays a handful of python-worker round trips, not one per core
-    # — but never below the cluster's task slots, so a LARGE polygon table
-    # (country-scale admin boundaries at production) still covers in parallel
-    slots = polygons.sparkSession.sparkContext.defaultParallelism
-    src = polygons.select("poly_id", "geometry_json").coalesce(max(8, slots))
-    return src.mapInPandas(
-        bboxes, schema="poly_id long, geometry_json string, " + BBOX_DDL
-    ).select(F.explode(cover_expr("bbox", level, max_cells, min_level))
-             .alias("cell"), "poly_id", "geometry_json")
-
-
-def _axis_sql(col: str, offset: float, span: float, n: str, top: str) -> str:
-    """SQL text of one grid axis of ``geo.cells._bbox_cell_range``:
-    ``min(max(floor((v + offset) / span * n), 0), top)`` with ``n`` (a
-    double) and ``top`` (``n - 1``, a bigint) given as SQL text. The double
-    arithmetic runs in the kernel's order (add, divide, multiply, floor —
-    IEEE-754 binary64 on both sides; the ``D`` suffix keeps the literals
-    doubles, not decimals)."""
-    return ("least(greatest(floor(({c} + {o!r}D) / {s!r}D * {n}), 0L), {t})"
-            .format(c=col, o=offset, s=span, n=n, t=top))
-
-
-def _cell_sql(lon: str, lat: str, level: int) -> str:
-    """SQL text of ``geo.cells.cell_of`` over the columns named ``lon`` and
-    ``lat``: the :func:`_axis_sql` arithmetic at a literal level, then the
-    same bit packing."""
-    from ..geo.cells import grid_shape
-
-    nx, ny = grid_shape(level)
-
-    def axis(col, offset, span, n):
-        return _axis_sql("`{}`".format(col), offset, span,
-                         "{!r}D".format(float(n)), "{}L".format(n - 1))
-
-    return "{tag}L | shiftleft({x}, {xs}) | {y}".format(
-        tag=int(level) << LEVEL_SHIFT, xs=X_SHIFT,
-        x=axis(lon, 180.0, 360.0, nx), y=axis(lat, 90.0, 180.0, ny))
+    return polygon_bbox_df(polygons, level).select(
+        F.explode(cover_expr("bbox", level, max_cells, min_level))
+        .alias("cell"), "poly_id", "geometry_json")
 
 
 def cell_expr(lon: str, lat: str, level: int):
     """JVM-side replica of ``geo.cells.cell_of`` over the columns named
-    ``lon`` and ``lat`` (:func:`_cell_sql`), so the produced cell ids are
-    BIT-IDENTICAL to the numpy kernel (pinned by a differential test over
-    random points plus the ±180/±90 edges). Being a plain expression it
-    runs in whole-stage codegen — no Python worker on the point side."""
-    return F.expr(_cell_sql(lon, lat, level))
+    ``lon`` and ``lat`` (``geo.cells.cell_sql``), so the produced cell ids
+    are BIT-IDENTICAL to the numpy kernel (pinned by a differential test
+    over random points plus the ±180/±90 edges); null for a null
+    coordinate. Being a plain expression it runs in whole-stage codegen —
+    no Python worker on the point side."""
+    return F.expr(cell_sql(lon, lat, level))
 
 
 def cover_expr(bbox: str, level: int, max_cells: int, min_level: int = 0):
     """JVM-side replica of ``geo.cells.cover_bbox_ints`` over the bbox
-    struct column named ``bbox`` (``xmin, ymin, xmax, ymax``): the same
-    cell ids in the same order (x outer, y inner), as ``array<bigint>``;
-    null where ``bbox`` or one of its fields is null. Like the kernel it
-    expects finite values (callers reject non-finite boxes in Python first,
-    with ``_bbox_cell_range``), and an inverted axis (``xmin > xmax``, as
-    in the 4-value bbox the kernel gives a 3-D MultiPolygon) covers no
-    cell, as Python's empty ``range`` does.
-
-    The level is the finest in ``level..min_level`` whose cover fits in
-    ``max_cells`` cells, else ``min_level``: one first-fit ``aggregate``
-    over the levels. That is ``_fit_cover_level``'s answer because ``nx``
-    is a power of two — ``floor(2t) >> 1 == floor(t)``, so a coarser level
-    never has more cells. The level is then bound once (``transform`` over
-    a one-element array) for the cell enumeration. Each axis is
-    :func:`_axis_sql` at ``n = 2^(lv+1)`` (x) or ``2^lv`` (y), exact in
-    double. Pinned bit-identical by a differential test."""
-    if not min_level <= level:
-        raise ValueError("cover_expr needs min_level <= level")
-
-    def axis(field, offset, span, shift):
-        n = "shiftleft(1L, lv + {})".format(shift)
-        return _axis_sql("`{}`.`{}`".format(bbox, field), offset, span,
-                         "double({})".format(n), "{} - 1L".format(n))
-
-    x0, x1 = (axis(f, 180.0, 360.0, 1) for f in ("xmin", "xmax"))
-    y0, y1 = (axis(f, 90.0, 180.0, 0) for f in ("ymin", "ymax"))
-    fits = "({x1} - {x0} + 1L) * ({y1} - {y0} + 1L) <= {m}L".format(
-        x0=x0, x1=x1, y0=y0, y1=y1, m=int(max_cells))
-    pick = ("aggregate(sequence({l}, {ml}, -1), -1, (acc, lv) -> "
-            "IF(acc >= 0, acc, IF(lv = {ml} OR {fits}, lv, -1)))").format(
-                l=int(level), ml=int(min_level), fits=fits)
-    # an inverted axis is an empty range, as in Python (``sequence`` would
-    # count down)
-    cells = ("IF({x0} <= {x1} AND {y0} <= {y1}, "
-             "flatten(transform(sequence({x0}, {x1}), cx -> "
-             "transform(sequence({y0}, {y1}), cy -> "
-             "shiftleft(bigint(lv), {ls}) | shiftleft(cx, {xs}) | cy))), "
-             "array())").format(
-                 x0=x0, x1=x1, y0=y0, y1=y1, ls=LEVEL_SHIFT, xs=X_SHIFT)
-    # greatest/least skip nulls, so a null field would clip to cell 0
-    null = " + ".join("`{}`.`{}`".format(bbox, f)
-                      for f in ("xmin", "ymin", "xmax", "ymax"))
-    return F.expr("IF({} IS NULL, NULL, transform(array({}), lv -> {})[0])"
-                  .format(null, pick, cells))
+    struct column named ``bbox``: ``geo.cells.cover_sql`` parsed, an
+    ``array<bigint>`` of the same cells in the same order (null for a null
+    bbox). Pinned bit-identical by a differential test."""
+    return F.expr(cover_sql(bbox, level, max_cells, min_level))
 
 
 def point_ancestors_df(points: DataFrame, level: int = DEFAULT_LEVEL,
@@ -166,14 +113,14 @@ def point_ancestors_df(points: DataFrame, level: int = DEFAULT_LEVEL,
     ancestor level so mixed-level polygon covers still equi-join.
 
     Pure JVM expressions (the :func:`cell_expr` SQL per level, one array
-    explode): the point side — unbounded at production scale — pays NO
+    explode; a point with a null coordinate has a null array and so no
+    row): the point side — unbounded at production scale — pays NO
     Python stage here, which also leaves the exact-refine UDF as the only
     Python stage in the whole pip_join pipeline (chained mapInPandas UDFs
     in one stage oversubscribe python workers; see CLAUDE.md).  The array
     is parsed from one SQL string; built from Column objects it would cost
     ~210 py4j calls on the driver."""
-    cells = F.expr("array({})".format(", ".join(
-        _cell_sql("lon", "lat", lv) for lv in range(min_level, level + 1))))
+    cells = F.expr(ancestors_sql("lon", "lat", min_level, level))
     return points.select(
         F.explode(cells).alias("cell"), "point_id", "lon", "lat"
     )

@@ -5,14 +5,18 @@ The candidate stage rasterizes BOTH sides into fixed-level grid cells
 materialized-cell equi-join Catalyst already optimizes, same as pip_join):
 two polygons can only intersect if their bbox covers share a cell at the
 common level, so the equi-join on ``cell`` is a complete candidate
-generator. The refine step then decides exactly with the geometry kernel
-(``polygons_intersect``: winding-number vertex containment + vectorized
-proper edge-crossing).
+generator. Each side parses its polygons once in Python for their bboxes
+(``pip_join.polygon_bbox_df``, one row per polygon); the covers are the
+JVM cell cover (``pip_join.cover_expr``) exploded, and an auto-chosen
+level comes from a JVM max of the bbox extents. The refine step then
+decides exactly with the geometry kernel (``polygons_intersect``:
+winding-number vertex containment + vectorized proper edge-crossing).
 
 Unlike pip_join's adaptive cover (fine for point ancestors), BOTH sides
 here must cover at the SAME fixed level — mixed per-polygon levels would
 break cell equality and silently drop pairs — so ``max_cells`` is a hard
-error, not a fallback: raise the level if your polygons are too big.
+error (``raise_error`` naming the polygon), not a fallback: use a coarser
+level if your polygons are too big.
 """
 
 from __future__ import annotations
@@ -22,64 +26,42 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..geo.cells import cover_bbox
+from .pip_join import cover_expr, polygon_bbox_df
 
 
-def _fixed_cover_df(polygons: DataFrame, id_col: str, level: int,
-                    max_cells: int) -> DataFrame:
-    import pandas as pd
-
-    from ..geo.bounds import geometry_bbox
-
-    def cover(batches):
-        for pdf in batches:
-            out_cell, out_pid, out_geom = [], [], []
-            for pid, gj in zip(pdf[id_col], pdf["geometry_json"]):
-                g = json.loads(gj)
-                bb = geometry_bbox(g)
-                ndim = len(bb) // 2
-                # min_level=level pins the cover at the fixed level (no
-                # coarsening walk); the size guard below is then a hard error
-                cells = cover_bbox(bb[0], bb[1], bb[ndim], bb[ndim + 1],
-                                   level, max_cells=max_cells, min_level=level)
-                if len(cells) > max_cells:
-                    raise ValueError(
-                        "polygon {} covers {} cells at level {} (> {}); "
-                        "use a coarser level".format(pid, len(cells), level,
-                                                     max_cells))
-                out_cell.extend(int(c) for c in cells)
-                out_pid.extend([pid] * len(cells))
-                out_geom.extend([gj] * len(cells))
-            yield pd.DataFrame(
-                {"cell": out_cell, id_col: out_pid, "geometry_json": out_geom}
-            )
-
-    return polygons.select(id_col, "geometry_json").coalesce(8).mapInPandas(
-        cover, schema="cell long, {} long, geometry_json string".format(id_col)
-    )
+def _fixed_cover(polygons: DataFrame, id_col: str, level: int,
+                 max_cells: int) -> DataFrame:
+    """(id_col, geometry_json) -> (cell, id_col, geometry_json): the
+    level-``level`` cover of each polygon's bbox, exploded in the JVM.
+    ``min_level=level`` pins the cover at the fixed level (no coarsening),
+    so a polygon over ``max_cells`` cells is a hard error naming it."""
+    over = F.raise_error(F.concat(
+        F.lit("polygon "), F.col(id_col).cast("string"), F.lit(" covers "),
+        F.size("_c").cast("string"),
+        F.lit(" cells at level {} (> {}); use a coarser level".format(
+            level, max_cells))))
+    return polygon_bbox_df(polygons, level, id_col).select(
+        id_col, "geometry_json",
+        cover_expr("bbox", level, max_cells, min_level=level).alias("_c"),
+    ).select(
+        F.explode(F.when(F.size("_c") > max_cells, over).otherwise(F.col("_c")))
+        .alias("cell"), id_col, "geometry_json")
 
 
-def _max_extent(polygons: DataFrame) -> tuple:
-    """(max bbox width, max bbox height) over a polygon table — one cheap
-    aggregation used by auto-level selection."""
-    import pandas as pd
+def _auto_level(polys_a: DataFrame, polys_b: DataFrame,
+                max_cells: int) -> int:
+    """:func:`choose_poly_level` over the largest bbox width and height of
+    both sides: one JVM max (an inverted axis counts as 0)."""
+    def extents(polygons, id_col):
+        return polygon_bbox_df(polygons, 0, id_col).select(
+            F.greatest(F.col("bbox.xmax") - F.col("bbox.xmin"), F.lit(0.0))
+            .alias("w"),
+            F.greatest(F.col("bbox.ymax") - F.col("bbox.ymin"), F.lit(0.0))
+            .alias("h"))
 
-    from ..geo.bounds import geometry_bbox
-
-    def extents(batches):
-        for pdf in batches:
-            w = h = 0.0
-            for gj in pdf["geometry_json"]:
-                bb = geometry_bbox(json.loads(gj))
-                nd = len(bb) // 2
-                w = max(w, bb[nd] - bb[0])
-                h = max(h, bb[nd + 1] - bb[1])
-            yield pd.DataFrame({"w": [w], "h": [h]})
-
-    r = (polygons.select("geometry_json").mapInPandas(
-            extents, schema="w double, h double")
+    r = (extents(polys_a, "a_id").unionByName(extents(polys_b, "b_id"))
          .agg(F.max("w").alias("w"), F.max("h").alias("h")).first())
-    return float(r["w"] or 0.0), float(r["h"] or 0.0)
+    return choose_poly_level(r["w"] or 0.0, r["h"] or 0.0, max_cells)
 
 
 def choose_poly_level(max_w: float, max_h: float, max_cells: int = 4096,
@@ -104,22 +86,20 @@ def polygon_intersection_join(
     """(a_id, b_id) pairs of strictly-overlapping polygons.
 
     ``polys_a``: (a_id, geometry_json); ``polys_b``: (b_id, geometry_json).
-    ``level=None`` auto-tunes: two cheap max-extent aggregations pick the
+    ``level=None`` auto-tunes: one max-extent aggregation picks the
     finest level at which every polygon's cover fits ``max_cells`` — a
     wrong manual level is a hard error (never silent truncation), so auto
     is the safe default. Degenerate touching (shared edges / vertex
     contacts) is out of contract — see geo/polyjoin.py.
     """
     if level is None:
-        wa, ha = _max_extent(polys_a)
-        wb, hb = _max_extent(polys_b)
-        level = choose_poly_level(max(wa, wb), max(ha, hb), max_cells)
+        level = _auto_level(polys_a, polys_b, max_cells)
     import pandas as pd
 
     from ..geo.polyjoin import polygons_intersect
 
-    ca = _fixed_cover_df(polys_a, "a_id", level, max_cells)
-    cb = _fixed_cover_df(polys_b, "b_id", level, max_cells)
+    ca = _fixed_cover(polys_a, "a_id", level, max_cells)
+    cb = _fixed_cover(polys_b, "b_id", level, max_cells)
     if broadcast_b:
         cb = F.broadcast(cb)
     cand = (

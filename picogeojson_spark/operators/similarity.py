@@ -39,10 +39,6 @@ def _norm2(a):
     )
 
 
-def with_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return embeddings.withColumn("norm2", _norm2(F.col(vec_col)))
-
-
 def ann_bruteforce_topk(
     queries: DataFrame,
     corpus: DataFrame,

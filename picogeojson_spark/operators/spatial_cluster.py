@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..geo.cells import cell_xy_sql
 from ._util import attach_scalar
 
 from .dedup import duplicate_clusters
@@ -264,14 +265,14 @@ def adaptive_quadbin(
     multiplication by powers of two only shifts the exponent, the
     tile_pyramid identity), the leaf decision is a when-chain over
     max_level+1 joined histogram columns (every table cell-sized), and
-    the output is leaf-sized. Grid convention matches geo/cells:
-    nx = 2^(L+1), ny = 2^L.
+    the output is leaf-sized. The grid is geo/cells' (nx = 2^(L+1),
+    ny = 2^L), with the floors left unclamped (``cell_xy_sql(...,
+    clamp=False)``).
     """
     if not 0 <= max_level <= 20:
         raise ValueError("max_level must be in [0, 20]")
-    nx, ny = 1 << (max_level + 1), 1 << max_level
-    fx = F.floor((F.col(lon_col) + 180.0) / 360.0 * nx).cast("long")
-    fy = F.floor((F.col(lat_col) + 90.0) / 180.0 * ny).cast("long")
+    fx, fy = (F.expr(v) for v in cell_xy_sql(lon_col, lat_col, max_level,
+                                             clamp=False))
     finest = (
         points.select(fx.alias("x"), fy.alias("y"))
         .groupBy("x", "y")

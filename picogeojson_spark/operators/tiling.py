@@ -1,51 +1,31 @@
 """Raster-tile ↔ vector assignment (Web-Mercator XYZ).
 
-Point assignment is pure JVM-side column arithmetic (whole-stage codegen, no
-Python): the tile formulas in ``geo.tiles`` are written as the identical
-``floor``/``ln``/``tan`` expressions here, so Spark, numpy, and the DuckDB
-oracle all produce the same doubles. Geometry covers explode the (cut,
-non-wrapping) bbox into a z-level tile rectangle via one Arrow UDF.
+Point assignment and geometry covers are pure JVM expressions (whole-stage
+codegen, no Python): the tile formulas come from ``geo.tiles.tile_xy_sql``,
+the SQL twin of the numpy kernel, so Spark, numpy, and the DuckDB oracle
+all produce the same doubles. Geometry covers explode the (cut,
+non-wrapping) bbox into a z-level tile rectangle with two ``sequence``
+explodes between its corner tiles.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..geo.tiles import MAX_MERC_LAT, tile_cover_bbox
+from ..geo.tiles import tile_xy_sql
 
 
 def assign_tiles_points(points: DataFrame, z: int,
                         lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """Attach tile_x / tile_y / tile_z columns for point rows (JVM-side)."""
-    n = 2**z
-    lon = F.col(lon_col)
-    lat = F.greatest(F.least(F.col(lat_col), F.lit(MAX_MERC_LAT)),
-                     F.lit(-MAX_MERC_LAT))
-    rad = F.radians(lat)
-    x = F.greatest(
-        F.least(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))),
-                F.lit(n - 1)),
-        F.lit(0),
-    )
-    y = F.greatest(
-        F.least(
-            F.floor(
-                (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad))
-                 / F.lit(3.141592653589793))
-                / F.lit(2.0) * F.lit(float(n))
-            ),
-            F.lit(n - 1),
-        ),
-        F.lit(0),
-    )
-    return (
-        points.withColumn("tile_z", F.lit(z))
-        .withColumn("tile_x", x.cast("long"))
-        .withColumn("tile_y", y.cast("long"))
-    )
+    """Attach tile_x / tile_y / tile_z columns for point rows (JVM-side):
+    ``geo.tiles.tile_xy_sql`` parsed. Three ``withColumn`` calls, not one
+    projection, keep the plan of the Column spelling this replaced:
+    Catalyst collapses ``tile_x`` into the input's projection and keeps
+    ``tile_y`` above it."""
+    x, y = tile_xy_sql("`{}`".format(lon_col), "`{}`".format(lat_col), z)
+    return (points.withColumn("tile_z", F.lit(z))
+            .withColumn("tile_x", F.expr(x)).withColumn("tile_y", F.expr(y)))
 
 
 def tile_pyramid(points: DataFrame, z_min: int = 4, z_max: int = 10,
@@ -92,40 +72,24 @@ def tile_pyramid(points: DataFrame, z_min: int = 4, z_max: int = 10,
 
 def tile_cover_features(features: DataFrame, z: int,
                         id_cols=("doc_id", "feature_idx")) -> DataFrame:
-    """features (with bbox struct) -> one row per covering tile at zoom z."""
-    import pandas as pd
-
+    """features (with bbox struct) -> one row per covering tile at zoom z:
+    ``geo.tiles.tile_cover_bbox`` in the JVM. The corner tiles are
+    ``tile_xy_sql`` of ``(xmin, ymin)`` and ``(xmax, ymax)`` (Mercator
+    ``y`` falls as latitude rises), then two ``sequence`` explodes span
+    the rectangle. An inverted box covers no tile, as ``np.arange`` gives
+    none (``sequence`` would count down)."""
     id_cols = list(id_cols)
-
-    from ..geo.tiles import tile_unpack
-
-    def cover(batches):
-        for pdf in batches:
-            out = {c: [] for c in id_cols}
-            tz, tx, ty = [], [], []
-            # zip over column lists — iterrows materializes a Series per
-            # row, the slowest pandas idiom in a batch-shaped UDF
-            id_vals = [pdf[c].tolist() for c in id_cols]
-            for i, bb in enumerate(pdf["bbox"]):
-                if bb is None:
-                    continue
-                tids = tile_cover_bbox(bb["xmin"], bb["ymin"], bb["xmax"],
-                                       bb["ymax"], z)
-                zz, xx, yy = tile_unpack(tids)
-                for c, vals in zip(id_cols, id_vals):
-                    out[c].extend([vals[i]] * len(tids))
-                tz.extend(int(v) for v in zz)
-                tx.extend(int(v) for v in xx)
-                ty.extend(int(v) for v in yy)
-            out["tile_z"], out["tile_x"], out["tile_y"] = tz, tx, ty
-            yield pd.DataFrame(out, columns=id_cols + ["tile_z", "tile_x", "tile_y"])
-
-    id_schema = ", ".join("{} long".format(c) for c in id_cols)
-    return features.select(*id_cols, "bbox").filter(
-        F.col("bbox").isNotNull()
-    ).mapInPandas(
-        cover, schema="{}, tile_z long, tile_x long, tile_y long".format(id_schema)
-    )
+    x0, y1 = tile_xy_sql("bbox.xmin", "bbox.ymin", z)
+    x1, y0 = tile_xy_sql("bbox.xmax", "bbox.ymax", z)
+    corners = features.filter(F.col("bbox").isNotNull()).select(
+        *(F.col(c).cast("long").alias(c) for c in id_cols),
+        *(F.expr(v).alias(k) for k, v in
+          (("_x0", x0), ("_x1", x1), ("_y0", y0), ("_y1", y1))))
+    return corners.filter("_x0 <= _x1 AND _y0 <= _y1").select(
+        *id_cols, F.lit(z).cast("long").alias("tile_z"),
+        F.explode(F.sequence("_x0", "_x1")).alias("tile_x"), "_y0", "_y1",
+    ).select(*id_cols, "tile_z", "tile_x",
+             F.explode(F.sequence("_y0", "_y1")).alias("tile_y"))
 
 
 def bbox_cell_weights(

@@ -31,15 +31,6 @@ def translate(dx: float, dy: float):
     return fn
 
 
-def scale_about_origin(sx: float, sy: float):
-    def fn(pos):
-        out = [pos[0] * sx, pos[1] * sy]
-        out.extend(pos[2:])
-        return out
-
-    return fn
-
-
 def transform_features(features: DataFrame, position_fn,
                        geometry_col: str = "geometry_json",
                        out_col: str = "geometry_json") -> DataFrame:

@@ -250,6 +250,29 @@ def test_cell_expr_matches_numpy_kernel(spark):
         ])
         want = cell_of(lon, lat, lv)
         assert (got == want).all(), "level {} diverged".format(lv)
+    # a null coordinate has no cell (greatest/least alone would clip it to
+    # a grid edge)
+    nulls = spark.createDataFrame([(None, 10.0), (5.0, None), (None, None)],
+                                  "lon double, lat double")
+    for lv in (MIN_LEVEL, 12):
+        assert [r.c for r in nulls.select(
+            cell_expr("lon", "lat", lv).alias("c")).collect()] == [None] * 3
+
+
+def test_point_ancestors_skip_null_coordinates(spark):
+    """A point with a null coordinate has no ancestor cell, so no row."""
+    from picogeojson_spark.geo.cells import DEFAULT_LEVEL, cell_of
+    from picogeojson_spark.operators.pip_join import (
+        MIN_LEVEL,
+        point_ancestors_df,
+    )
+
+    pts = spark.createDataFrame(
+        [(1, None, 10.0), (2, 5.0, None), (3, None, None), (4, 5.0, 10.0)],
+        "point_id long, lon double, lat double")
+    got = sorted((r.point_id, r.cell) for r in point_ancestors_df(pts).collect())
+    assert got == sorted((4, int(cell_of(5.0, 10.0, lv)))
+                         for lv in range(MIN_LEVEL, DEFAULT_LEVEL + 1))
 
 
 def _boundary_boxes(level, max_cells):
@@ -336,15 +359,10 @@ def _random_polygon(rng, dims):
     return [ring + [ring[0]]]
 
 
-def test_polygon_cover_df_matches_python_cover(spark):
-    """The JVM-expanded polygon cover has exactly the rows the Python
-    cover emitted: the 10-degree world grid, and random 2-D and 3-D
-    Polygons and MultiPolygons."""
-    from picogeojson_spark.geo.bounds import geometry_bbox
-    from picogeojson_spark.geo.cells import cover_bbox_ints
-    from picogeojson_spark.operators.pip_join import MIN_LEVEL, polygon_cover_df
-
-    rng = np.random.default_rng(23)
+def _poly_cover_inputs(seed):
+    """The 10-degree world grid plus random 2-D and 3-D Polygons and
+    MultiPolygons, as (id, geometry_json)."""
+    rng = np.random.default_rng(seed)
     geoms = []
     for gx in range(36):
         for gy in range(18):
@@ -359,8 +377,20 @@ def test_polygon_cover_df_matches_python_cover(spark):
                           "coordinates": _random_polygon(rng, dims)})
         else:
             geoms.append({"type": "MultiPolygon", "coordinates": [
-                _random_polygon(rng, dims) for _ in range(int(rng.integers(1, 4)))]})
-    polys = [(pid, json.dumps(g)) for pid, g in enumerate(geoms)]
+                _random_polygon(rng, dims)
+                for _ in range(int(rng.integers(1, 4)))]})
+    return [(pid, json.dumps(g)) for pid, g in enumerate(geoms)]
+
+
+def test_polygon_cover_df_matches_python_cover(spark):
+    """The JVM-expanded polygon cover has exactly the rows the Python
+    cover emitted: the 10-degree world grid, and random 2-D and 3-D
+    Polygons and MultiPolygons."""
+    from picogeojson_spark.geo.bounds import geometry_bbox
+    from picogeojson_spark.geo.cells import cover_bbox_ints
+    from picogeojson_spark.operators.pip_join import MIN_LEVEL, polygon_cover_df
+
+    polys = _poly_cover_inputs(23)
     want = []
     for pid, gj in polys:
         bb = geometry_bbox(json.loads(gj))
@@ -550,3 +580,196 @@ def test_tile_assignment_points(spark, features):
     for r in got:
         x, y = tile_xy(np.array([r.lon]), np.array([r.lat]), 10)
         assert (r.tile_x, r.tile_y) == (int(x[0]), int(y[0])), (r.lon, r.lat)
+
+
+def _column_tiles(points, z):
+    """``assign_tiles_points`` as Column objects (three ``withColumn``s),
+    the spelling the parsed tile text replaced: the oracle of its plan
+    and values."""
+    from picogeojson_spark.geo.tiles import MAX_MERC_LAT
+
+    n = 2**z
+    lat = F.greatest(F.least(F.col("lat"), F.lit(MAX_MERC_LAT)),
+                     F.lit(-MAX_MERC_LAT))
+    rad = F.radians(lat)
+    x = F.greatest(
+        F.least(F.floor((F.col("lon") + F.lit(180.0)) / F.lit(360.0)
+                        * F.lit(float(n))), F.lit(n - 1)),
+        F.lit(0))
+    y = F.greatest(
+        F.least(F.floor(
+            (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad))
+             / F.lit(3.141592653589793)) / F.lit(2.0) * F.lit(float(n))),
+            F.lit(n - 1)),
+        F.lit(0))
+    return (points.withColumn("tile_z", F.lit(z))
+            .withColumn("tile_x", x.cast("long"))
+            .withColumn("tile_y", y.cast("long")))
+
+
+def test_assign_tiles_points_matches_column_spelling(spark):
+    """The parsed tile text has the Column spelling's optimized plan (ids
+    masked) and its bit-identical x/y, which equal ``geo.tiles.tile_xy``:
+    random points plus the ±180 edges, one ulp below 180, the poles and
+    the Mercator clamp latitude."""
+    import re
+
+    from picogeojson_spark.geo.tiles import MAX_MERC_LAT, tile_xy
+
+    rng = np.random.default_rng(29)
+    below = float(np.nextafter(180.0, 0.0))
+    lon = np.concatenate([rng.uniform(-180, 180, 5000),
+                          [-180.0, 180.0, below, -below, 0.0, 0.0, 0.0, 0.0]])
+    lat = np.concatenate([rng.uniform(-90, 90, 5000),
+                          [0.0, 0.0, 45.0, -45.0, 90.0, -90.0,
+                           MAX_MERC_LAT, -MAX_MERC_LAT]])
+    base = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
+        "point_id long, a double, b double").cache()
+    # computed coordinates, as in the gate's points: how Catalyst collapses
+    # the tile columns into this projection shows in the plan
+    pts = base.select("point_id", (F.col("a") + 0.0).alias("lon"),
+                      (F.col("b") + 0.0).alias("lat"))
+
+    def plan(df):
+        return re.sub(r"#\d+L?", "#", df._jdf.queryExecution()
+                      .optimizedPlan().toString())
+
+    for z in (0, 7, 10, 18):
+        got, want = assign_tiles_points(pts, z), _column_tiles(pts, z)
+        assert got.columns == want.columns
+        for cols in (got.columns, ["point_id", "tile_z", "tile_x", "tile_y"]):
+            assert plan(got.select(cols)) == plan(want.select(cols))
+        rows = got.orderBy("point_id").collect()
+        assert rows == want.orderBy("point_id").collect()
+        x, y = tile_xy(lon, lat, z)
+        assert [(r.tile_z, r.tile_x, r.tile_y) for r in rows] == [
+            (z, int(a), int(b)) for a, b in zip(x, y)]
+    base.unpersist()
+
+
+def test_assign_tiles_points_builds_in_few_py4j_calls(spark):
+    """Building the tile columns is one projection of parsed text, not a
+    Column tree of a few hundred py4j round trips."""
+    pts = spark.createDataFrame([(1, 10.0, 20.0)],
+                                "point_id long, lon double, lat double")
+    assign_tiles_points(pts, 10)  # warm the imports
+    client = spark.sparkContext._gateway._gateway_client
+    real, calls = client.send_command, []
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    client.send_command = spy
+    try:
+        assign_tiles_points(pts, 10)
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= 60, len(calls)
+
+
+def test_tile_cover_features_matches_numpy_cover(spark):
+    """The JVM tile cover emits the ``(id, z, x, y)`` multiset of
+    ``geo.tiles.tile_cover_bbox``: random, point, clamped (beyond the
+    Mercator latitude and the ±180 edges) and inverted boxes; a null bbox
+    covers nothing."""
+    from picogeojson_spark.geo.tiles import tile_cover_bbox, tile_unpack
+    from picogeojson_spark.operators.features import BBOX_DDL
+    from picogeojson_spark.operators.tiling import tile_cover_features
+
+    rng = np.random.default_rng(31)
+    boxes = []
+    for _ in range(300):
+        a, b = sorted(rng.uniform(-180, 180, 2))
+        c, d = sorted(rng.uniform(-90, 90, 2))
+        x, y = rng.uniform(-180, 180), rng.uniform(-85, 85)
+        size = float(rng.choice([1e-6, 0.01, 0.3, 2.0]))
+        boxes += [(x, y, x + size, y + size), (x, y, x, y),
+                  (b, c, a, d), (a, d, b, c)]       # inverted axes
+        if len(boxes) < 40:
+            boxes.append((a, c, b, d))
+    boxes += [(-180.0, -90.0, 180.0, 90.0), (179.0, 86.0, 180.0, 90.0),
+              (-180.0, -90.0, -179.0, -86.0), (170.0, 80.0, 185.0, 95.0)]
+    rows = [(i, 7, (float(a), float(b), float(c), float(d)))
+            for i, (a, b, c, d) in enumerate(boxes)] + [(len(boxes), 7, None)]
+    df = spark.createDataFrame(rows, "doc_id int, feature_idx int, " + BBOX_DDL)
+    for z in (0, 3, 9):
+        got = tile_cover_features(df, z)
+        assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+            ("doc_id", "bigint"), ("feature_idx", "bigint"),
+            ("tile_z", "bigint"), ("tile_x", "bigint"), ("tile_y", "bigint")]
+        want = []
+        for i, b in enumerate(boxes):
+            zz, xx, yy = tile_unpack(tile_cover_bbox(*b, z))
+            want += [(i, 7, int(a), int(c), int(e))
+                     for a, c, e in zip(zz, xx, yy)]
+        assert sorted(tuple(r) for r in got.collect()) == sorted(want), z
+
+
+def test_poly_join_cover_matches_python_cover(spark):
+    """poly_join's fixed-level JVM cover has, per polygon, the cells of
+    ``cover_bbox_ints(..., level, max_cells, min_level=level)`` over the
+    kernel bbox (``cover_bbox``'s cells; unlike ``cover_bbox`` it gives
+    the doubly inverted bbox of a 3-D MultiPolygon an empty cover)."""
+    from picogeojson_spark.geo.bounds import geometry_bbox
+    from picogeojson_spark.geo.cells import cover_bbox_ints
+    from picogeojson_spark.operators.poly_join import _fixed_cover
+
+    polys = _poly_cover_inputs(37)
+    df = spark.createDataFrame(polys, "a_id long, geometry_json string")
+    for level in (3, 6):
+        want = []
+        for pid, gj in polys:
+            bb = geometry_bbox(json.loads(gj))
+            nd = len(bb) // 2
+            want += [(c, pid, gj) for c in cover_bbox_ints(
+                bb[0], bb[1], bb[nd], bb[nd + 1], level, 8192,
+                min_level=level)]
+        cover = _fixed_cover(df, "a_id", level, 8192)  # the whole grid
+        assert cover.columns == ["cell", "a_id", "geometry_json"]
+        assert sorted(tuple(r) for r in cover.collect()) == sorted(want)
+
+
+def test_poly_join_auto_level_matches_python_extents(spark):
+    """``level=None`` picks ``choose_poly_level`` over the largest Python
+    bbox extents of both sides (an inverted axis counts as 0)."""
+    from picogeojson_spark.geo.bounds import geometry_bbox
+    from picogeojson_spark.operators.poly_join import (
+        _auto_level,
+        choose_poly_level,
+    )
+
+    polys = _poly_cover_inputs(41)
+    half = len(polys) // 2
+    dfa = spark.createDataFrame(polys[half:], "a_id long, geometry_json string")
+    dfb = spark.createDataFrame(polys[:half], "b_id long, geometry_json string")
+    w = h = 0.0
+    for _, gj in polys:
+        bb = geometry_bbox(json.loads(gj))
+        nd = len(bb) // 2
+        w, h = max(w, bb[nd] - bb[0]), max(h, bb[nd + 1] - bb[1])
+    for max_cells in (64, 4096):
+        assert _auto_level(dfa, dfb, max_cells) == choose_poly_level(
+            w, h, max_cells)
+
+
+def test_poly_join_over_budget_polygon_fails_loudly(spark):
+    """A polygon whose fixed-level cover exceeds ``max_cells`` fails the
+    query with its id in the message, never a silent truncation."""
+    from picogeojson_spark.operators.poly_join import polygon_intersection_join
+
+    def square(x0, y0, w):
+        return json.dumps({"type": "Polygon", "coordinates": [[
+            [x0, y0], [x0 + w, y0], [x0 + w, y0 + w], [x0, y0 + w],
+            [x0, y0]]]})
+
+    dfa = spark.createDataFrame([(1, square(0.0, 0.0, 0.5)),
+                                 (4242, square(10.0, 10.0, 30.0))],
+                                "a_id long, geometry_json string")
+    dfb = spark.createDataFrame([(7, square(0.25, 0.25, 0.5))],
+                                "b_id long, geometry_json string")
+    with pytest.raises(Exception) as err:
+        polygon_intersection_join(dfa, dfb, level=8, max_cells=16).collect()
+    assert "polygon 4242 covers" in str(err.value)
+    assert "use a coarser level" in str(err.value)

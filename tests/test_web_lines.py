@@ -283,7 +283,7 @@ def test_anchor_text_tie_breaks_lexicographic(spark):
 
 def test_extract_coordinates(spark):
     """Mentions in order, bounds validation (lat 999.5 and lon 200.5
-    dropped), negative coords, cell arithmetic vs python."""
+    dropped), negative coords, cell arithmetic vs python, the grid edge."""
     from picogeojson_spark.operators.geotext import extract_coordinates
 
     docs = spark.createDataFrame(
@@ -292,6 +292,7 @@ def test_extract_coordinates(spark):
             (2, "bogus 999.5, 12.25 then ok -0.25 , 0.75"),
             (3, "lon out of range 10.25, 200.5"),
             (4, "no coords at all 5 , 7"),
+            (5, "edge 89.99999999999999, 179.99999999999997"),
         ],
         "doc_id long, text string")
     got = [(r["doc_id"], r["idx"], r["lat"], r["lon"], r["cell"])
@@ -307,6 +308,10 @@ def test_extract_coordinates(spark):
         (1, 0, 40.25, -74.75, cell(40.25, -74.75)),
         (1, 1, 12.5, 99.25, cell(12.5, 99.25)),
         (2, 1, -0.25, 0.75, cell(-0.25, 0.75)),  # idx 0 was the bogus pair
+        # one ulp inside the bounds the floor reaches nx, ny: the cell is
+        # clamped onto the grid's last column and row, as in cell_of
+        (5, 0, 89.99999999999999, 179.99999999999997,
+         (8 << 58) | (511 << 29) | 255),
     ]
 
 
